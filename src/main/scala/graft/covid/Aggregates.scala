@@ -14,7 +14,11 @@ object Aggregates {
   /** Per-(5-minute window × continent) stats. Faithful per-batch semantics:
     * the reference's watermark is a no-op inside foreachBatch (SURVEY
     * §2.9-T4), so none is applied here; the real streaming watermarked
-    * variant is [[Stream.continentStatsStreaming]]. */
+    * variant is [[Stream.continentStatsStreaming]]. The reference's final
+    * `dropDuplicates(continent_window_start, continent)`
+    * (covid_streaming.py:179) is left out: a tumbling window's start fixes
+    * its end, so the groupBy keys already make that pair unique, and the
+    * extra dedup only cost a shuffle. */
   def continentStats(cleaned: DataFrame): DataFrame =
     cleaned
       .groupBy(window(col("timestamp"), "5 minutes"), col("continent"))
@@ -31,9 +35,6 @@ object Aggregates {
         col("continent_new_deaths"), col("continent_avg_death_rate"),
         col("countries_count"), col("continent_total_cases"),
         current_timestamp().as("processed_at"))
-      // faithful mirror of covid_streaming.py:179 — a no-op here (the
-      // groupBy keys already guarantee uniqueness), kept for 1:1 semantics
-      .dropDuplicates(Seq("continent_window_start", "continent"))
 
   /** Hotspot rows (covid_streaming.py:185-191): OR-predicate, first per
     * (location, detected day), 8-column projection. */

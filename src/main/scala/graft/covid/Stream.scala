@@ -1,6 +1,12 @@
 package graft.covid
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.{CompletableFuture, ExecutionException,
+  ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -8,6 +14,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * over JDBC (covid_streaming.py:51-61); this build environment has neither
   * Kafka nor MySQL, so sinks are pluggable: JDBC in production, parquet in
   * tests — the routing logic is identical (SURVEY §7 hard parts).
+  *
+  * `write` may be called concurrently: [[Stream.processBatch]] runs its four
+  * branches at the same time, so one epoch's tables are written from four
+  * threads at once (never the same table twice at once). The built-ins are
+  * stateless, and [[BatchSink.idempotentJdbc]] opens its own connection per
+  * call.
   */
 trait BatchSink extends Serializable {
 
@@ -211,42 +223,86 @@ object Stream {
   /** The per-batch DAG (process_batch, covid_streaming.py:111-198): clean →
     * {realtime dedup, predictions, continent stats, hotspots} → sink.
     *
-    * Differences from the reference, both deliberate (SURVEY §4):
+    * Differences from the reference, all deliberate (SURVEY §4):
     *  - the cleaned batch is persisted once instead of recomputed for every
-    *    one of the ~10 downstream actions;
+    *    one of the ~10 downstream actions, and built in full by the one job
+    *    that also answers the emptiness guard;
     *  - emptiness guards use `df.isEmpty` (a lazy limit-1 probe), not
-    *    `df.rdd.isEmpty()` which forces an RDD job per call.
+    *    `df.rdd.isEmpty()` which forces an RDD job per call;
+    *  - the four branches run at the same time, one pool thread each, over
+    *    the shared cleaned batch; a batch is mostly small single-task jobs,
+    *    so run one after another they would leave all but one core idle.
+    *    Each branch's jobs carry the micro-batch's local properties and SQL
+    *    conf (query id, the job group `query.stop()` cancels, execution id).
+    *    The batch ends when every branch has ended.
     */
-  def processBatch(batch: DataFrame, epochId: Long, sink: BatchSink): Unit = {
-    if (batch.isEmpty) return
-    // Batch-level swallow mirroring the reference's try/except around all of
-    // process_batch (covid_streaming.py:111-198): one poisoned batch logs
-    // and is skipped; the streaming query never dies. Per-table sink errors
-    // are additionally swallowed inside BatchSink.jdbc. NonFatal only — an
-    // OOM or ControlThrowable still propagates.
+  def processBatch(batch: DataFrame, epochId: Long, sink: BatchSink): Unit =
+    // Swallow-and-log mirroring the reference's try/excepts
+    // (covid_streaming.py:60-61, 107-109, 197-198): a failed branch logs and
+    // the other branches still write; a failed batch logs and is skipped;
+    // the streaming query never dies. NonFatal only — an OOM,
+    // ControlThrowable or the interrupt of a stopping query still
+    // propagates.
     try {
+      val session = batch.sparkSession.asInstanceOf[classic.SparkSession]
+      // builds `out` and writes it to `table`, unless `probe` finds it empty
+      def branch(table: String, probe: Boolean)(out: => DataFrame) =
+        SQLExecution.withThreadLocalCaptured(session, branchPool) {
+          try {
+            val df = out
+            if (!probe || !df.isEmpty) sink.write(df, table, epochId)
+          } catch {
+            case NonFatal(e) => System.err.println(
+              s"[covid-stream] batch $epochId branch $table failed: $e")
+          }
+        }
       val cleaned = Clean.clean(batch).persist()
       try {
-        val realtime = cleaned.dropDuplicates(Seq("location", "date"))
-        sink.write(realtime, "covid_realtime_stats", epochId)
-
-        val preds = Predict.predictFutureTrends(realtime)
-          .dropDuplicates(Seq("location", "prediction_date"))
-        if (!preds.isEmpty)
-          sink.write(preds, "covid_predictions", epochId)
-
-        val continent = Aggregates.continentStats(cleaned)
-        if (!continent.isEmpty)
-          sink.write(continent, "continent_covid_stats", epochId)
-
-        val hot = Aggregates.hotspots(cleaned)
-        if (!hot.isEmpty)
-          sink.write(hot, "covid_hotspots", epochId)
+        if (!materializedEmpty(cleaned)) {
+          val realtime = cleaned.dropDuplicates(Seq("location", "date"))
+          awaitAll(Seq(
+            branch("covid_realtime_stats", probe = false)(realtime),
+            branch("covid_predictions", probe = true)(
+              Predict.predictFutureTrends(realtime)
+                .dropDuplicates(Seq("location", "prediction_date"))),
+            branch("continent_covid_stats", probe = true)(
+              Aggregates.continentStats(cleaned)),
+            branch("covid_hotspots", probe = true)(
+              Aggregates.hotspots(cleaned))))
+        }
       } finally cleaned.unpersist()
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[covid-stream] batch $epochId failed: $e")
     }
+
+  /** Threads of the branch pool: one per [[processBatch]] branch. */
+  private val BranchThreads = 4
+
+  private lazy val branchPool: ExecutorService = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(BranchThreads, (r: Runnable) => {
+      val t = new Thread(r, s"covid-branch-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** Builds every partition of the persisted `df` in one job and says
+    * whether it holds no row, so the branches only ever read the cache. */
+  private def materializedEmpty(df: DataFrame): Boolean =
+    df.queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.hasNext))
+      .collect().forall(!_)
+
+  /** Waits for every branch. A branch's fatal error is rethrown; an
+    * interrupt (the query is stopping) still waits for the branches, whose
+    * jobs the stop cancels, and is then rethrown. */
+  private def awaitAll(branches: Seq[CompletableFuture[Unit]]): Unit = {
+    val all = CompletableFuture.allOf(branches: _*)
+    try all.get()
+    catch { case e: ExecutionException => throw e.getCause }
+    finally all.exceptionally(_ => null).join()
   }
 
   /** Start the full pipeline on a decoded (19-column) streaming DataFrame.

@@ -24,6 +24,10 @@ class AggregatesSpec extends AnyFunSuite with SparkTestSession {
     assert(out(1).getAs[Double]("continent_new_cases") == 40.0)
     assert(out(0).getAs[java.sql.Timestamp]("continent_window_start")
       .toString.startsWith("2021-03-01 12:00:00"))
+    // the groupBy keys alone make (window start, continent) a key
+    val keys = out.map(r => (r.getAs[java.sql.Timestamp](
+      "continent_window_start"), r.getAs[String]("continent")))
+    assert(keys.distinct.length == keys.length)
   }
 
   test("hotspot predicate matches any of the three conditions") {

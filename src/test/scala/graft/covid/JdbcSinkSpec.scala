@@ -92,6 +92,49 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestSession {
     } finally conn.close()
   }
 
+  test("idempotentJdbc: four tables of one epoch written at once, as " +
+    "processBatch's branches do, each converge to exactly their rows") {
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby-home-conc").toString)
+    val url = "jdbc:derby:memory:graft_conc;create=true"
+    val sink = BatchSink.idempotentJdbc(url, Map.empty)
+    val tables = Seq("covid_realtime_stats", "covid_predictions",
+      "continent_covid_stats", "covid_hotspots")
+    def rowsOf(i: Int) = (0 to i).map(j => (i * 10L + j, tables(i)))
+    def writeAllAtOnce(): Unit = {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = tables.indices.map { i =>
+        val t = new Thread(() =>
+          try {
+            start.await()
+            sink.write(rowsOf(i).toDF("id", "s"), tables(i), 5L)
+          } catch { case e: Throwable => failures.add(e) })
+        t.start()
+        t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+      assert(failures.isEmpty, failures)
+    }
+    // first delivery creates the four targets concurrently; the
+    // redelivery replaces each epoch through the exists=true path
+    writeAllAtOnce()
+    writeAllAtOnce()
+    tables.indices.foreach { i =>
+      val got = spark.read.format("jdbc").option("url", url)
+        .option("dbtable", tables(i)).load()
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      assert(got.toSet == rowsOf(i).map { case (id, s) => (id, s, 5L) }.toSet
+        && got.length == i + 1, s"${tables(i)}: ${got.mkString(",")}")
+    }
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, "%STAGE%", null)
+      try assert(!rs.next(), "staging table left behind") finally rs.close()
+    } finally conn.close()
+  }
+
   test("idempotentJdbc PROPAGATES failures (no silent loss) — the " +
     "posture difference from the swallow-and-log reference sink") {
     val sink = BatchSink.idempotentJdbc(

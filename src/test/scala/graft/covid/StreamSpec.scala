@@ -1,7 +1,12 @@
 package graft.covid
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end streaming replication of SURVEY §3-E1 without Kafka:
@@ -68,9 +73,10 @@ class StreamSpec extends AnyFunSuite with SparkTestSession {
   test("a poisoned batch is swallowed and the query survives") {
     val input = MemoryStream[String](spark)
     val ckpt = Files.createTempDirectory("covid-ckpt-bomb").toString
-    @volatile var attempts = 0
+    // the branches call the sink from several threads at once
+    val attempts = new AtomicInteger()
     val bomb: BatchSink = (_, _, _) => {
-      attempts += 1; throw new RuntimeException("sink down")
+      attempts.incrementAndGet(); throw new RuntimeException("sink down")
     }
     val query = Stream.run(Stream.decode(input.toDF()), bomb, ckpt)
     try {
@@ -79,14 +85,89 @@ class StreamSpec extends AnyFunSuite with SparkTestSession {
       input.addData(Fixture.record("uuid" -> "2", "date" -> "2021-03-02"))
       query.processAllAvailable()
       // both batches were attempted; neither error killed the query
-      assert(attempts >= 2)
+      assert(attempts.get >= 2)
       assert(query.isActive)
     } finally query.stop()
   }
 
+  test("a failing branch does not stop the other three branches") {
+    val input = MemoryStream[String](spark)
+    val outDir = Files.createTempDirectory("covid-sink-branch").toString
+    val ckpt = Files.createTempDirectory("covid-ckpt-branch").toString
+    val parquet = BatchSink.parquet(outDir)
+    val flaky: BatchSink = (df, table, epochId) =>
+      if (table == "covid_predictions")
+        throw new RuntimeException("predictions sink down")
+      else parquet.write(df, table, epochId)
+    val query = Stream.run(Stream.decode(input.toDF()), flaky, ckpt,
+      Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      input.addData(
+        Fixture.record("uuid" -> "1", "location" -> "Egypt",
+          "new_cases" -> "20000"), // hotspot
+        Fixture.record("uuid" -> "2", "location" -> "Kenya",
+          "iso_code" -> "KEN"))
+      query.processAllAvailable()
+      assert(query.isActive)
+    } finally query.stop()
+
+    def rows(table: String) = spark.read.parquet(s"$outDir/$table").count()
+    assert(rows("covid_realtime_stats") == 2)
+    assert(rows("continent_covid_stats") >= 1)
+    assert(rows("covid_hotspots") == 1)
+    assert(!new java.io.File(s"$outDir/covid_predictions").exists())
+  }
+
+  test("every job of a micro-batch carries its query's id and job group") {
+    // jobs between two marker jobs of this thread, in listener-bus order
+    val marker = "graft.test.marker"
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.properties)
+    }
+    def mark(name: String): Unit = {
+      spark.sparkContext.setLocalProperty(marker, name)
+      try spark.range(1).collect()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val until = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(p => p.getProperty(marker) == name) &&
+        System.nanoTime() < until) Thread.sleep(10)
+    }
+    val input = MemoryStream[String](spark)
+    val outDir = Files.createTempDirectory("covid-sink-props").toString
+    val ckpt = Files.createTempDirectory("covid-ckpt-props").toString
+    spark.sparkContext.addSparkListener(listener)
+    val query = Stream.run(Stream.decode(input.toDF()),
+      BatchSink.parquet(outDir), ckpt,
+      Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      mark("start")
+      input.addData(
+        Fixture.record("uuid" -> "1", "location" -> "Egypt",
+          "new_cases" -> "20000"),
+        Fixture.record("uuid" -> "2", "location" -> "Kenya",
+          "iso_code" -> "KEN"))
+      query.processAllAvailable()
+      mark("end")
+    } finally {
+      query.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val batchJobs = jobs.asScala.toSeq
+      .dropWhile(_.getProperty(marker) != "start").drop(1)
+      .takeWhile(_.getProperty(marker) != "end")
+    // the job that builds the cleaned cache, and a write per branch
+    assert(batchJobs.size >= 5, batchJobs.size)
+    batchJobs.foreach { p =>
+      assert(p.getProperty("sql.streaming.queryId") == query.id.toString)
+      assert(p.getProperty("spark.jobGroup.id") == query.runId.toString)
+    }
+    assert(spark.read.parquet(s"$outDir/covid_hotspots").count() == 1)
+  }
+
   test("rate limiting (T7): maxFilesPerTrigger=1 yields one file per batch") {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
     val dir = Files.createTempDirectory("csv-rate").toString
     val ckpt = Files.createTempDirectory("csv-rate-ckpt").toString
     val header = Schema.rawFieldNames.mkString(",")
