@@ -6,14 +6,14 @@ import org.apache.spark.sql.SparkSession
 import graft.operators.ArtifactStore
 
 /** Unified store vacuum — ONE entry point sweeping every artifact store
-  * the engine maintains (model / pair / cc / sem / manifest / bpe /
-  * unigram / lm / wp) plus any
+  * the engine maintains ([[graft.operators.Artifacts.stores]]: pair /
+  * simpair / cc / sem / bpe / unigram / lm / wp / manifest, the three
+  * replay stores and the model store) plus any
   * [[graft.streaming.LayoutStream]] tables passed as arguments, all under
-  * the one shared grace rule ([[ArtifactStore.pruneGraceMs]]). Before
-  * this, each store swept only at its own publish time
-  * (`pruneSuperseded`) and layout tables had their own `vacuum` — crashed
-  * publishes, benign-race loser attempts, and stores that simply stopped
-  * being written leaked forever.
+  * the one shared grace rule ([[ArtifactStore.pruneGraceMs]]). Without
+  * it, each store sweeps only at its own publish time (`pruneSuperseded`)
+  * — crashed publishes, benign-race loser attempts, and stores that simply
+  * stopped being written leak forever.
   *
   * Deletes ONLY unreferenced garbage (VacuumSpec proves the committed,
   * resolvable artifacts survive byte-identical): uncommitted fingerprint
@@ -27,16 +27,12 @@ import graft.operators.ArtifactStore
   * report line per store: name, dirs removed, bytes reclaimed. */
 object Vacuum {
 
-  /** The artifact store roots, honoring each cache's own prop/env
-    * overrides (same resolution order as the caches themselves). */
+  /** (store label, root) of every artifact store. A replay store's root
+    * is its `<replaycache>/<kind>` subdirectory: the replay root itself
+    * holds only those kind directories, which a sweep would take for
+    * pointerless fingerprint dirs. */
   def storeRoots: Seq[(String, String)] =
-    Seq("modelcache", "paircache", "simpaircache", "cccache", "semcache",
-      "manifestcache", "bpecache", "unigramcache", "lmcache",
-      "wpcache").map { n =>
-      n -> sys.props.get(s"graft.$n.dir")
-        .orElse(sys.env.get("SPARK_GRAFT_" + n.toUpperCase + "_DIR"))
-        .getOrElse(sys.props("java.io.tmpdir") + s"/graft-$n")
-    }
+    graft.operators.Artifacts.stores.map(s => s.label -> s.root)
 
   /** Sweep everything; returns (store, dirs_removed, bytes_reclaimed)
     * per store plus one row per layout table. */

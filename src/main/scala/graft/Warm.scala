@@ -15,69 +15,40 @@ import org.apache.spark.sql.SparkSession
   * bench JSON, so a cold run is self-labeling and republish cost can never
   * land inside a timed iteration.
   *
-  * The artifact inventory:
+  * The artifact inventory is [[operators.Artifacts.stores]], warmed in
+  * its order:
   *  - [[operators.PairCache]] — the verified near-dup pair table;
+  *  - [[operators.SimPairCache]] — the SimHash verified pair table;
   *  - [[operators.CcCache]] — duplicate-cluster component labels;
   *  - [[operators.SemCache]] — semantic (embedding-space) cluster labels;
-  *  - [[operators.ManifestCache]] — q161's per-doc stage-signal table;
   *  - [[operators.BpeCache]] — the trained BPE tokenizer;
   *  - [[operators.UnigramCache]] — the trained unigram-LM tokenizer;
-  *  - [[operators.WpCache]] — the trained WordPiece tokenizer;
   *  - [[operators.LmCache]] — the q153 reference bigram LM;
+  *  - [[operators.WpCache]] — the trained WordPiece tokenizer;
+  *  - [[operators.ManifestCache]] — q161's per-doc stage-signal table;
+  *  - the three [[streaming.Replay]] stores (q168-q170) — multi-epoch
+  *    stream runs, by far the costliest cold publishes;
   *  - [[operators.ModelCache]] — trained quantizer centroid models,
   *    published as a side effect of running each model-training query's
-  *    plan once (the exact keys are (input × canonical plan × params)
-  *    tuples, so the queries themselves are the only complete enumeration).
+  *    plan once.
   *
+  * Every artifact's fingerprint carries the engine stamp, so the first
+  * run after any change to the engine's code republishes everything:
+  * that run reports the count here instead of inside a timed iteration.
   * Idempotent: against a warm store everything resolves and nothing is
-  * published (`artifacts_published` = 0). Also performs the one-shot
-  * legacy sweep of self-tagged model dirs (the round-12 prune-no-op bug).
+  * published (`artifacts_published` = 0).
   */
 object Warm {
 
-  /** The embedding-model family — every query whose plan trains (and so
-    * publishes) a [[operators.ModelCache]] quantizer, plus the cache
-    * consumers that share those keys. Running each once materializes every
-    * model key the bench suite will touch. */
-  private[graft] val ModelQueries = Seq(
-    "q24_ann_lsh", "q40_ann_ivf", "q48_ann_kmeans_ivf", "q64_ann_int8",
-    "q68_ann_pq", "q73_semantic_dedup", "q81_semantic_contamination",
-    "q93_embedding_outliers", "q101_contam_blocked", "q117_ann_recall")
-
   /** Resolve-or-publish every artifact for `dir`. Returns
     * (artifacts published, wall-clock seconds). Failures in any single
-    * producer are contained — warming must never fail a bench run. */
+    * store are contained — warming must never fail a bench run; a cold
+    * store with a broken producer surfaces in the (gated) queries. */
   def run(spark: SparkSession, dir: String): (Long, Double) = {
     val t0 = System.nanoTime()
     val before = operators.ArtifactStore.published.get()
-    operators.ModelCache.sweepLegacy(spark) // one-shot r12-leak hygiene
-    // Path-tagged caches publish inline on resolve-miss; no action needed
-    // beyond the call. Each guarded: a cold store with a broken producer
-    // should surface in the (gated) queries, not kill the warm phase.
-    def guard(body: => Any): Unit =
-      try { body; () } catch { case _: Throwable => () }
-    guard(operators.PairCache.pairStats(spark, dir))
-    guard(operators.SimPairCache.stats(spark, dir))
-    guard(operators.CcCache.components(spark, dir))
-    guard(operators.SemCache.components(spark, dir))
-    guard(operators.BpeCache.trained(spark, dir))
-    guard(operators.UnigramCache.pieces(spark, dir))
-    guard(operators.LmCache.counts(spark, dir))
-    guard(operators.WpCache.trained(spark, dir))
-    // depends on LmCache + CcCache above: warm those first, then the
-    // composed per-doc signal table
-    guard(operators.ManifestCache.flags(spark, dir).count())
-    // streaming-twin replay artifacts (q168-q170): multi-epoch stream
-    // runs, by far the costliest cold publishes — must never land
-    // inside a timed iteration
-    guard(streaming.Replay.manifestFlags(spark, dir).count())
-    guard(streaming.Replay.scd2Segments(spark, dir).count())
-    guard(streaming.Replay.dedupMatches(spark, dir).count())
-    // Model tier: execute each training query's plan once — ModelCache
-    // publishes on the memo/disk miss inside the plan build; count()
-    // forces plans whose training is lazy in the action.
-    ModelQueries.foreach { q =>
-      SparkEntry.queries.get(q).foreach(fn => guard(fn(spark, dir).count()))
+    operators.Artifacts.stores.foreach { s =>
+      try { s.warm(spark, dir); () } catch { case _: Throwable => () }
     }
     val published = operators.ArtifactStore.published.get() - before
     (published, (System.nanoTime() - t0) / 1e9)

@@ -1,6 +1,12 @@
 package graft.operators
 
+import java.net.URI
+import java.nio.file.{FileSystems, Files, Paths, Path => NioPath}
 import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -8,8 +14,8 @@ import org.apache.spark.sql.SparkSession
 /** Fingerprinted on-disk artifact directories with a rename-free commit
   * protocol, expressed entirely through the Hadoop `FileSystem` API so the
   * same code publishes to local disk, HDFS, or an object store (s3a://)
-  * unchanged. Shared by [[PairCache]] (the materialized near-dup pair
-  * table) and [[ModelCache]] (trained quantizer centroids).
+  * unchanged. Every persisted artifact ([[Artifacts]], the streaming-twin
+  * replays) goes through the one resolve-or-publish [[cached]].
   *
   * Layout per artifact:
   * {{{
@@ -29,20 +35,40 @@ import org.apache.spark.sql.SparkSession
   * identical artifact, and the loser's attempt directory is garbage swept
   * by the grace-period prune.
   *
-  * Staleness safety (round-7 advice):
+  * Staleness safety:
   *  - input identity is CONTENT-hashed (length + first/last 64 KiB of every
   *    data file), not mtime — a same-size regeneration within filesystem
   *    timestamp granularity changes the fingerprint;
-  *  - an unresolvable class resource in the code stamp FAILS CLOSED (the
-  *    caller disables its cache) instead of degrading to a constant stamp;
+  *  - the code identity is the [[engineStamp]], one hash over every engine
+  *    class, so no artifact can miss a class its bytes depend on; when the
+  *    engine's classes can't be enumerated every cache FAILS CLOSED
+  *    (computes inline) instead of degrading to a constant stamp;
   *  - pruning skips directories modified within [[pruneGraceMs]], so a
   *    concurrent JVM (or a lazy DataFrame created just before an input
   *    regeneration) keeps its artifact readable for the grace window.
   */
 private[graft] object ArtifactStore {
 
-  /** Serializes intra-JVM publishes; cross-JVM races are benign (above). */
-  val lock = new Object
+  /** One artifact store. Its name derives every setting: the kill switch
+    * `spark.graft.<name>` and the root `graft.<name>.dir`, else
+    * `SPARK_GRAFT_<NAME>_DIR`, else `<java.io.tmpdir>/graft-<name>`; a
+    * `kind` puts the store in that subdirectory of the root. `warm`
+    * resolves-or-publishes the store's artifacts for an SF dir
+    * ([[graft.Warm]]). */
+  abstract class Store(val name: String, val kind: Option[String] = None) {
+    def warm(spark: SparkSession, dir: String): Any
+
+    def label: String = name + kind.fold("")("/" + _)
+
+    def enabled(spark: SparkSession): Boolean =
+      spark.conf.getOption(s"spark.graft.$name").forall(_.toBoolean)
+
+    def root: String =
+      sys.props.get(s"graft.$name.dir")
+        .orElse(sys.env.get(s"SPARK_GRAFT_${name.toUpperCase}_DIR"))
+        .getOrElse(sys.props("java.io.tmpdir") + s"/graft-$name") +
+        kind.fold("")("/" + _)
+  }
 
   /** Count of artifact publishes in this JVM — observability for
     * [[graft.Warm]]/[[graft.Bench]]: a bench run that had to publish
@@ -62,9 +88,11 @@ private[graft] object ArtifactStore {
   def fileSystem(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  private def hex(digest: Array[Byte]): String =
+    digest.map("%02x".format(_)).mkString
+
   def md5Hex(s: String): String =
-    MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    hex(MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
 
   /** Content identity of an input file or one-level directory: per data
     * file, its name, length, and an MD5 over the first and last 64 KiB.
@@ -97,91 +125,133 @@ private[graft] object ArtifactStore {
           }
         } finally in.close()
       }
-      Some(md.digest().map("%02x".format(_)).mkString)
+      Some(hex(md.digest()))
     } catch { case _: Throwable => None }
 
-  /** Build stamp over every compiled class a cached pipeline's semantics
-    * flow through — an MD5 over the class BYTES, not their timestamps.
-    * Byte-hashing matters operationally: launchers that package the
-    * classpath per invocation (sbt's bg-job jar, a spark-submit überjar
-    * rebuilt by CI) give every run a fresh entry mtime for IDENTICAL
-    * bytes, and a timestamp stamp then rotates every fingerprint per JVM —
-    * measured in round 13 as all four path-tagged caches plus both model
-    * keys republishing on every `sbt runMain graft.Warm` against a warm
-    * store. Content stamps are stable across repackaging and still
-    * invalidate on any real code change. None (→ caller disables its
-    * cache) when ANY resource is unresolvable — an unusual classloader
-    * must never stamp 0 and serve a stale artifact across a code change. */
-  def codeStamp(resources: Seq[String]): Option[String] =
-    try {
-      val md = MessageDigest.getInstance("MD5")
-      resources.foreach { r =>
-        val expanded = expandClassResource(r).getOrElse(return None)
-        expanded.foreach { res =>
-          val in = getClass.getResourceAsStream(res)
-          if (in == null) return None
-          try {
-            md.update(res.getBytes("UTF-8"))
-            val buf = new Array[Byte](BlockBytes)
-            var n = in.read(buf)
-            while (n >= 0) {
-              if (n > 0) md.update(buf, 0, n)
-              n = in.read(buf)
-            }
-          } finally in.close()
-        }
-      }
-      Some(md.digest().map("%02x".format(_)).mkString)
-    } catch { case _: Throwable => None }
+  /** The classpath entry (directory or jar) the engine was loaded from. */
+  private[operators] def codeSource: Option[URI] =
+    try Option(getClass.getProtectionDomain.getCodeSource)
+      .map(_.getLocation.toURI)
+    catch { case NonFatal(_) => None }
 
-  /** Expand '/p/X.class' to the set of class files that actually carry X's
-    * semantics. For a Scala `object X` the listed file is only the static-
-    * forwarder mirror (MODULE$ call stubs that change ONLY when public
-    * signatures change); the implementation lives in '/p/X$.class' — so a
-    * body-only edit (a threshold, SQL text, a training-loop tweak) would
-    * never rotate a stamp built from the forwarder alone (round-13 advice).
-    * The companion-module class is therefore REQUIRED: None (→ caller
-    * disables its cache) when it is unresolvable. Inner/synthetic classes
-    * ('/p/X$*.class' — nested case classes, typecreators, specialized
-    * lambdas) are discovered by listing the enclosing classpath entry,
-    * best-effort across file: and jar: entries, sorted for determinism. */
-  private[operators] def expandClassResource(r: String): Option[Seq[String]] = {
-    if (!r.endsWith(".class")) return Some(Seq(r))
-    val companion = r.stripSuffix(".class") + "$.class"
-    if (getClass.getResource(companion) == null) return None
-    Some((Seq(r, companion) ++ listInnerClasses(r)).distinct)
+  /** Runs `f` on the root of the classpath entry at `source`: the
+    * directory itself, or the jar opened as a zip file system. */
+  private def onEntry[A](source: URI)(f: NioPath => A): A = {
+    val p = Paths.get(source)
+    if (Files.isDirectory(p)) f(p)
+    else {
+      val jar = FileSystems.newFileSystem(p)
+      try f(jar.getPath("/")) finally jar.close()
+    }
   }
 
-  /** Sibling '/p/X$*.class' resources of '/p/X.class', via directory or jar
-    * listing; Nil when the classpath entry kind can't be enumerated. */
-  private def listInnerClasses(r: String): Seq[String] =
-    try {
-      val url = getClass.getResource(r)
-      if (url == null) return Nil
-      val slash = r.lastIndexOf('/')
-      val pkgDir = r.substring(0, slash + 1) // '/p/'
-      val prefix = r.substring(slash + 1).stripSuffix(".class") + "$" // 'X$'
-      val names: Seq[String] = url.getProtocol match {
-        case "file" =>
-          val parent = new java.io.File(url.toURI).getParentFile
-          Option(parent.list()).map(_.toSeq).getOrElse(Nil)
-        case "jar" =>
-          val conn = url.openConnection()
-            .asInstanceOf[java.net.JarURLConnection]
-          val jar = conn.getJarFile
-          val entryPrefix = pkgDir.stripPrefix("/")
-          import scala.jdk.CollectionConverters._
-          jar.entries().asScala.toSeq.map(_.getName)
-            .filter(n => n.startsWith(entryPrefix) &&
-              n.indexOf('/', entryPrefix.length) < 0)
-            .map(_.substring(entryPrefix.length))
-        case _ => Nil
+  /** Every `.class` file under `root`'s `graft/` directory, by entry
+    * name, in name order. */
+  private def engineFiles(root: NioPath): Seq[(String, NioPath)] = {
+    val base = root.resolve("graft")
+    if (!Files.isDirectory(base)) return Nil
+    val walk = Files.walk(base)
+    try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".class"))
+      .map(p => root.relativize(p).toString -> p)
+      .toVector.sortBy(_._1)
+    finally walk.close()
+  }
+
+  /** The engine class entries of the classpath entry at `source` (e.g.
+    * `graft/operators/Dedup$.class`); empty when it can't be
+    * enumerated. */
+  private[operators] def engineClasses(source: URI): Seq[String] =
+    try onEntry(source)(engineFiles(_).map(_._1))
+    catch { case NonFatal(_) => Nil }
+
+  /** One MD5 over the names and BYTES of every engine class at `source` —
+    * bytes, not timestamps, so launchers that repackage the classpath per
+    * run (sbt's bg-job jar, an überjar rebuilt by CI) keep the stamp while
+    * any real code change rotates it. None when the entry can't be
+    * enumerated or holds no engine class: the caches then fail closed. */
+  private[operators] def engineStampOf(source: URI): Option[String] =
+    try onEntry(source) { root =>
+      val files = engineFiles(root)
+      if (files.isEmpty) None
+      else {
+        val md = MessageDigest.getInstance("MD5")
+        files.foreach { case (name, p) =>
+          md.update(name.getBytes("UTF-8"))
+          md.update(Files.readAllBytes(p))
+        }
+        Some(hex(md.digest()))
       }
-      names
-        .filter(n => n.startsWith(prefix) && n.endsWith(".class"))
-        .sorted
-        .map(pkgDir + _)
-    } catch { case _: Throwable => Nil }
+    } catch { case NonFatal(_) => None }
+
+  /** The code identity of every artifact: [[engineStampOf]] the engine's
+    * own classpath entry, hashed once per JVM. Any edit to the engine
+    * republishes every artifact once ([[graft.Warm]] labels that cost);
+    * in exchange no artifact can be served across a change to a class its
+    * bytes depend on. */
+  lazy val engineStamp: Option[String] = codeSource.flatMap(engineStampOf)
+
+  /** The directory name of `store`'s artifact for `key` under the engine
+    * stamp `engine`. */
+  private[operators] def fingerprint(store: Store, key: String,
+      engine: String): String =
+    md5Hex(Seq(store.label, key, engine).mkString("|"))
+
+  /** One lock per fingerprint directory: unrelated artifacts never queue
+    * behind each other. */
+  private val locks = new ConcurrentHashMap[String, Object]()
+
+  /** Resolve-or-publish `store`'s artifact for `key`: read the committed
+    * payload back with `read`, or on a miss `compute` the value, `write` it
+    * into a fresh attempt, commit, and serve the read-back. `tag` is the
+    * artifact's stable input identity; a publish prunes aged artifacts of
+    * the same tag under another fingerprint.
+    *
+    *  - Store switched off, or `key` / [[engineStamp]] unavailable →
+    *    `compute` inline (fail closed).
+    *  - Store faults (NonFatal, in fingerprint, resolve, write or
+    *    read-back) never fail the call: an unreadable hit recomputes and
+    *    republishes; a failed write serves the computed value.
+    *  - `compute` runs at most once per call and its failures propagate.
+    *    For a lazy value (a DataFrame plan, a replay thunk) the work runs
+    *    in `write`; if that fails, the served value runs it again when
+    *    used, so a deterministic failure still surfaces to the caller.
+    *  - Compute and publish run inside the fingerprint's lock, so
+    *    concurrent first use in one JVM publishes exactly once. Computing
+    *    one artifact may resolve another (cc reads pair); the artifact
+    *    graph is acyclic, so the nested locks cannot deadlock. */
+  def cached[T](spark: SparkSession, store: Store, key: => Option[String],
+      tag: => String)(compute: => T)(write: (T, Path) => Unit,
+      read: Path => T): T = {
+    if (!store.enabled(spark)) return compute
+    val site =
+      try {
+        val root = new Path(store.root)
+        for (k <- key; engine <- engineStamp)
+          yield (fileSystem(spark, root), root, fingerprint(store, k, engine),
+            tag)
+      } catch { case NonFatal(_) => None }
+    site match {
+      case None => compute
+      case Some((fs, root, fp, inputTag)) =>
+        val fpDir = new Path(root, fp)
+        locks.computeIfAbsent(fpDir.toString, _ => new Object).synchronized {
+          val hit =
+            try resolve(fs, fpDir).map(read)
+            catch { case NonFatal(_) => None }
+          hit.getOrElse {
+            val value = compute
+            val served =
+              try {
+                val p = publish(fs, fpDir, inputTag)(write(value, _))
+                pruneSuperseded(fs, root, inputTag, keep = fp)
+                p.map(read)
+              } catch { case NonFatal(_) => None }
+            served.getOrElse(value)
+          }
+        }
+    }
+  }
 
   private def readSmall(fs: FileSystem, p: Path): Option[String] =
     try {
@@ -222,14 +292,14 @@ private[graft] object ArtifactStore {
     write(attempt)
     writeSmall(fs, new Path(fpDir, "_graft_input"), inputTag)
     writeSmall(fs, new Path(fpDir, "_COMMITTED"), attempt.getName)
-    if (sys.env.contains("GRAFT_ARTIFACT_DEBUG") || sys.props.contains("graft.artifact.debug"))
-      System.err.println(s"[artifact-publish] $fpDir tag=$inputTag")
     published.incrementAndGet()
     resolve(fs, fpDir)
   }
 
   /** Delete artifacts under `root` tagged with the same input but a
-    * different (superseded) fingerprint — older build, regenerated data.
+    * different (superseded) fingerprint — older build, regenerated data —
+    * and legacy self-tagged dirs (`_graft_input` naming the dir itself,
+    * which an early model store wrote and no same-tag prune can match).
     * Grace-period guarded: entries modified within [[pruneGraceMs]] are
     * skipped, so concurrent readers (other JVMs, lazily-planned
     * DataFrames) don't lose their files mid-scan; the next publish sweeps
@@ -240,10 +310,10 @@ private[graft] object ArtifactStore {
     val entries =
       try fs.listStatus(root) catch { case _: Throwable => return }
     entries.foreach { e =>
-      if (e.isDirectory && e.getPath.getName != keep &&
-        e.getModificationTime < cutoff &&
+      val name = e.getPath.getName
+      if (e.isDirectory && name != keep && e.getModificationTime < cutoff &&
         readSmall(fs, new Path(e.getPath, "_graft_input"))
-          .contains(inputTag)) {
+          .exists(t => t == inputTag || t == name)) {
         try { fs.delete(e.getPath, true); () }
         catch { case _: Throwable => () }
       }
@@ -259,7 +329,7 @@ private[graft] object ArtifactStore {
     *  2. LOSER ATTEMPTS inside committed dirs (`attempt-*` not named by
     *     the pointer — the benign-race leftovers the commit protocol
     *     deliberately abandons);
-    *  3. legacy SELF-TAGGED dirs ([[pruneLegacySelfTagged]] semantics);
+    *  3. legacy SELF-TAGGED dirs (see [[pruneSuperseded]]);
     *  4. SUPERSEDED same-input dirs: several committed fingerprints
     *     carrying one `_graft_input` tag can only be code-stamp rotations
     *     of the same artifact — keep the newest-modified, sweep the rest
@@ -318,27 +388,5 @@ private[graft] object ArtifactStore {
       }
     }
     (dirs, bytes)
-  }
-
-  /** One-shot migration sweep: delete artifact dirs whose `_graft_input`
-    * equals their OWN directory name — the pre-round-13 [[ModelCache]]
-    * self-tagging bug, under which [[pruneSuperseded]] was provably a
-    * no-op (the only dir tagged `f` was `f` itself) and every fingerprint
-    * rotation leaked its model dir forever. Current publishers tag with a
-    * STABLE input identity distinct from the fingerprint, so a self-tagged
-    * dir can only be a legacy leak. Grace-period guarded like
-    * [[pruneSuperseded]]. */
-  def pruneLegacySelfTagged(fs: FileSystem, root: Path): Unit = {
-    val cutoff = System.currentTimeMillis() - pruneGraceMs
-    val entries =
-      try fs.listStatus(root) catch { case _: Throwable => return }
-    entries.foreach { e =>
-      if (e.isDirectory && e.getModificationTime < cutoff &&
-        readSmall(fs, new Path(e.getPath, "_graft_input"))
-          .contains(e.getPath.getName)) {
-        try { fs.delete(e.getPath, true); () }
-        catch { case _: Throwable => () }
-      }
-    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.operators.ArtifactStore
+import graft.operators.{ArtifactStore, Artifacts}
+import graft.operators.ArtifactStore.Store
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,22 +32,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * replay is a multi-epoch streaming job — expensive to repeat per bench
   * iteration, and a 100 TB pipeline's stream state is a STANDING table,
   * not something rebuilt per audit. Each twin's replayed state is
-  * therefore a fingerprinted [[ArtifactStore]] artifact (input content
-  * stamp + build stamps of every class the replay flows through; fails
-  * closed to an inline one-shot replay when a stamp is unresolvable),
-  * and the registered queries read the artifact — still hash-gated
-  * end-to-end, so a stale or corrupted replay fails the round.
-  * `spark.graft.replaycache=false` forces a fresh un-pointered replay
-  * per call (ReplaySpec's path). */
+  * therefore an [[ArtifactStore]] artifact, one store per twin under
+  * `<replaycache>/<kind>`, built straight into its attempt directory (a
+  * fresh inline replay when the store fails closed), and the registered
+  * queries read the artifact — still hash-gated end-to-end, so a stale or
+  * corrupted replay fails the round. `spark.graft.replaycache=false`
+  * forces a fresh un-pointered replay per call (ReplaySpec's path). */
 object Replay {
-
-  private[graft] def enabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.replaycache").forall(_.toBoolean)
-
-  private def cacheRoot: String =
-    sys.props.get("graft.replaycache.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_REPLAYCACHE_DIR"))
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-replaycache")
 
   /** How many micro-batches each replay splits its input into. Small
     * fixed constants: enough epochs to exercise cross-batch state, few
@@ -153,72 +145,38 @@ object Replay {
 
   // ---------------------------------------------------------------- //
 
-  private def replayInto(spark: SparkSession, kind: String)(
-      build: Path => Unit): Path = {
-    val tmp = new Path(sys.props("java.io.tmpdir"),
-      s"graft-replay-$kind-" + java.util.UUID.randomUUID().toString)
-    build(tmp)
-    tmp
+  private class ReplayStore(kind: String,
+      replayed: (SparkSession, String) => DataFrame)
+      extends Store("replaycache", Some(kind)) {
+    def warm(spark: SparkSession, dir: String): Any =
+      replayed(spark, dir).count()
   }
 
-  /** Resolve-or-replay `kind`'s artifact for `dir`. Cache off or stamp
-    * unresolvable → fails closed to a fresh inline replay. */
-  private def artifact(spark: SparkSession, dir: String, kind: String,
-      classes: Seq[String])(build: Path => Unit): Path = {
-    val root = new Path(cacheRoot, kind)
-    val fs = ArtifactStore.fileSystem(spark, root)
-    val input = fs.makeQualified(new Path(dir, "documents.parquet"))
-    if (!enabled(spark)) return replayInto(spark, kind)(build)
-    val fp = for {
-      content <- ArtifactStore.contentStamp(fs, input)
-      code <- ArtifactStore.codeStamp(classes)
-    } yield ArtifactStore.md5Hex(
-      Seq(s"replay-$kind", input.toString, content, code).mkString("|"))
-    fp match {
-      case None => replayInto(spark, kind)(build)
-      case Some(f) =>
-        val fpDir = new Path(root, f)
-        ArtifactStore.lock.synchronized {
-          ArtifactStore.resolve(fs, fpDir).orElse {
-            val p = ArtifactStore.publish(fs, fpDir, input.toString)(build)
-            ArtifactStore.pruneSuperseded(fs, root, input.toString, keep = f)
-            p
-          }
-        }.getOrElse(replayInto(spark, kind)(build))
-    }
-  }
+  private val ManifestStore = new ReplayStore("manifest", manifestFlags)
+  private val Scd2Store = new ReplayStore("scd2", scd2Segments)
+  private val DedupStore = new ReplayStore("dedup", dedupMatches)
 
-  /** Shared stamp tail: the replay driver itself plus the streaming
-    * epoch/compaction machinery every twin writes through. */
-  private val DriverClasses = Seq(
-    "/graft/streaming/Replay.class", "/graft/streaming/EpochState.class",
-    "/graft/streaming/Compaction.class")
+  /** One store per replayed twin; warming one runs its replay. */
+  private[graft] val stores: Seq[Store] =
+    Seq(ManifestStore, Scd2Store, DedupStore)
 
-  private val ManifestClasses = DriverClasses ++ Seq(
-    "/graft/streaming/ManifestStream.class",
-    "/graft/operators/CorpusBuild.class", "/graft/operators/Quality.class",
-    "/graft/operators/Classify.class", "/graft/operators/Corpus.class",
-    "/graft/operators/Dedup.class", "/graft/operators/Buckets.class",
-    "/graft/operators/Mirror.class",
-    "/graft/functions/MultiMatch.class",
-    "/graft/functions/ShingleGen.class", "/graft/functions/Md5Hash60.class",
-    "/graft/functions/NGramGen.class", "/graft/functions/BigramGen.class")
-
-  private val Scd2Classes = DriverClasses ++ Seq(
-    "/graft/streaming/Scd2Stream.class",
-    "/graft/operators/Lifecycle.class", "/graft/operators/Mirror.class",
-    "/graft/functions/Md5Hash60.class")
-
-  private val DedupClasses = DriverClasses ++ Seq(
-    "/graft/streaming/StreamingDedup.class",
-    "/graft/operators/Dedup.class", "/graft/operators/Buckets.class",
-    "/graft/operators/Mirror.class",
-    "/graft/functions/ShingleGen.class", "/graft/functions/Md5Hash60.class")
+  /** Resolve-or-replay `store`'s artifact for `dir`: the replay builds
+    * straight into the attempt directory; a store that is off or fails
+    * closed replays into a fresh temporary directory instead. */
+  private def artifact(spark: SparkSession, dir: String, store: Store)(
+      build: Path => Unit): Path =
+    Artifacts.overTable[() => Path](spark, store, dir, "documents.parquet")(
+      () => {
+        val tmp = new Path(sys.props("java.io.tmpdir"),
+          "graft-replay-" + java.util.UUID.randomUUID().toString)
+        build(tmp)
+        tmp
+      })((_, att) => build(att), att => () => att)()
 
   /** The replayed manifest maintainer's frozen read-side flags table
     * (doc_id, n_tokens, t_ex, f1..f8) — q168's input. */
   def manifestFlags(spark: SparkSession, dir: String): DataFrame = {
-    val att = artifact(spark, dir, "manifest", ManifestClasses)(
+    val att = artifact(spark, dir, ManifestStore)(
       buildManifest(spark, dir, _))
     spark.read.parquet(new Path(att, "flags").toString)
   }
@@ -226,16 +184,14 @@ object Replay {
   /** The replayed SCD2 maintainer's resolved segment table — q169's
     * input. */
   def scd2Segments(spark: SparkSession, dir: String): DataFrame = {
-    val att = artifact(spark, dir, "scd2", Scd2Classes)(
-      buildScd2(spark, dir, _))
+    val att = artifact(spark, dir, Scd2Store)(buildScd2(spark, dir, _))
     Scd2Stream.resolve(spark, new Path(att, "state").toString)
   }
 
   /** The replayed incremental-dedup probe's per-epoch match tables,
     * unioned — q170's input. */
   def dedupMatches(spark: SparkSession, dir: String): DataFrame = {
-    val att = artifact(spark, dir, "dedup", DedupClasses)(
-      buildDedup(spark, dir, _))
+    val att = artifact(spark, dir, DedupStore)(buildDedup(spark, dir, _))
     spark.read.parquet(new Path(att, "matches").toString).drop("epoch")
   }
 }

@@ -407,22 +407,15 @@ object ScaleProbe {
     val baseRows = if (args.length > 0) args(0).toLong else 5000L
     val mult = if (args.length > 1) args(1).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    // FRESH pipelines only: every artifact tier off, so both scales
+    // pay identical work and the ratio measures the algorithm
+    val spark = graft.operators.Artifacts.stores.map(_.name).distinct
+      .foldLeft(SparkSession.builder())((b, n) =>
+        b.config(s"spark.graft.$n", "false"))
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // FRESH pipelines only: every artifact tier off, so both scales
-      // pay identical work and the ratio measures the algorithm
-      .config("spark.graft.paircache", "false")
-      .config("spark.graft.cccache", "false")
-      .config("spark.graft.semcache", "false")
-      .config("spark.graft.manifestcache", "false")
-      .config("spark.graft.modelcache", "false")
-      .config("spark.graft.lmcache", "false")
-      .config("spark.graft.bpecache", "false")
-      .config("spark.graft.unigramcache", "false")
-      .config("spark.graft.wpcache", "false")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

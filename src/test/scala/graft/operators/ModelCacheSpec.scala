@@ -161,4 +161,17 @@ class ModelCacheSpec extends AnyFunSuite with SparkTestSession
     deleteRec(localRoot)
     Similarity.clearModelMemoForTest()
   }
+
+  test("a failing training runs once and its exception propagates") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val err = intercept[IllegalStateException] {
+      ModelCache.loadOrTrain(spark, "failing-" + java.util.UUID.randomUUID(),
+        "failing")(() => {
+        calls.incrementAndGet()
+        throw new IllegalStateException("training failed")
+      })
+    }
+    assert(err.getMessage == "training failed")
+    assert(calls.get == 1, s"training ran ${calls.get} times")
+  }
 }

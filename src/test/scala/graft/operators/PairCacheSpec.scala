@@ -156,33 +156,9 @@ class PairCacheSpec extends AnyFunSuite with SparkTestSession
       "content stamp must see through same-size same-mtime regeneration")
     assert(ArtifactStore
       .contentStamp(fs, new Path(localRoot.getPath, "absent")).isEmpty)
-    assert(ArtifactStore.codeStamp(Seq("/graft/no/Such.class")).isEmpty,
-      "unresolvable class resource must fail closed, not stamp 0")
+    assert(ArtifactStore.engineStampOf(
+      new File(localRoot, "absent-classes").toURI).isEmpty,
+      "an unresolvable code source must fail closed, not stamp 0")
     f.delete()
-  }
-
-  test("code stamp hashes the companion-module implementation class, not " +
-    "just the static-forwarder mirror") {
-    // For `object X` the listed X.class is forwarder stubs only — body
-    // edits land in X$.class, which the stamp MUST cover (round-13
-    // advice). The expansion includes both, plus discoverable inners.
-    val expanded =
-      ArtifactStore.expandClassResource("/graft/operators/Quality.class")
-    assert(expanded.isDefined)
-    assert(expanded.get.contains("/graft/operators/Quality.class"))
-    assert(expanded.get.contains("/graft/operators/Quality$.class"),
-      s"companion implementation class missing from $expanded")
-    // inner-class discovery: TextAnalysis compiles synthetic inners
-    val ta = ArtifactStore
-      .expandClassResource("/graft/operators/TextAnalysis.class")
-    assert(ta.get.count(_.startsWith("/graft/operators/TextAnalysis$")) >= 1)
-    // a class WITHOUT a companion module (plain Java class) fails closed:
-    // we cannot tell "not an object" from "implementation class missing"
-    assert(ArtifactStore.codeStamp(
-      Seq("/org/apache/hadoop/fs/Path.class")).isEmpty,
-      "resource without a $ companion must fail closed")
-    // non-.class resources pass through untouched
-    assert(ArtifactStore.expandClassResource("/some/data.txt")
-      .contains(Seq("/some/data.txt")))
   }
 }

@@ -91,25 +91,38 @@ class VacuumSpec extends AnyFunSuite with SparkTestSession {
 
   test("Vacuum.run sweeps every store root under prop overrides") {
     val tmp = java.nio.file.Files.createTempDirectory("vacall")
-    val names = graft.Vacuum.storeRoots.map(_._1)
-    names.foreach { n =>
-      val dir = tmp.resolve(n)
-      java.nio.file.Files.createDirectories(dir)
-      sys.props(s"graft.$n.dir") = dir.toString
-      // one uncommitted garbage dir per store
-      val fs = ArtifactStore.fileSystem(spark, new Path(dir.toString))
-      fs.mkdirs(new Path(dir.toString, "fpx/attempt-dead"))
+    val stores = Artifacts.stores
+    stores.map(_.name).distinct.foreach { n =>
+      sys.props(s"graft.$n.dir") = tmp.resolve(n).toString
+    }
+    // one uncommitted garbage dir per store
+    stores.foreach { s =>
+      val fs = ArtifactStore.fileSystem(spark, new Path(s.root))
+      fs.mkdirs(new Path(s.root, "fpx/attempt-dead"))
+    }
+    // a committed replay artifact: its kind dir and the artifact survive
+    val replay = stores.find(_.name == "replaycache").get
+    val fs = ArtifactStore.fileSystem(spark, new Path(replay.root))
+    val live = new Path(replay.root, "fplive")
+    ArtifactStore.publish(fs, live, "T") { att =>
+      write(fs, new Path(att, "state.bin"), "replayed")
     }
     sys.props("graft.artifact.prune.grace.ms") = "-60000"
     try {
       val rows = graft.Vacuum.run(spark)
-      assert(rows.map(_._1) == names :+ "retained:manifest-shingles")
+      assert(rows.map(_._1) ==
+        stores.map(_.label) :+ "retained:manifest-shingles")
+      assert(stores.count(_.name == "replaycache") == 3)
       assert(rows.filter(_._1 != "retained:manifest-shingles")
         .forall(_._2 == 1L),
         s"each store had exactly one garbage dir: $rows")
+      assert(stores.forall(s => !fs.exists(new Path(s.root, "fpx"))))
+      assert(ArtifactStore.resolve(fs, live).isDefined,
+        "a committed replay artifact must survive the sweep")
     } finally {
       sys.props.remove("graft.artifact.prune.grace.ms")
-      names.foreach(n => sys.props.remove(s"graft.$n.dir"))
+      stores.map(_.name).distinct
+        .foreach(n => sys.props.remove(s"graft.$n.dir"))
     }
   }
 

@@ -17,12 +17,11 @@ class WarmSpec extends AnyFunSuite with SparkTestSession
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private val roots = Seq(
-    "graft.modelcache.dir", "graft.bpecache.dir",
-    "graft.cccache.dir", "graft.paircache.dir",
-    "graft.unigramcache.dir").map { prop =>
-    prop -> new File(sys.props("java.io.tmpdir"),
-      "graft-warmspec-" + prop.split('.')(1))
+  /** Every registered store redirected to a spec-local root, so the cold
+    * run neither reads nor writes the shared default stores. */
+  private val roots = Artifacts.stores.map(_.name).distinct.map { n =>
+    s"graft.$n.dir" -> new File(sys.props("java.io.tmpdir"),
+      "graft-warmspec-" + n)
   }
 
   override def beforeAll(): Unit = {
@@ -51,9 +50,14 @@ class WarmSpec extends AnyFunSuite with SparkTestSession
     "re-run resolves from disk and publishes zero") {
     Similarity.clearModelMemoForTest()
     val (published1, secs1) = graft.Warm.run(spark, sfDir)
-    assert(published1 >= 4,
-      s"cold Warm must publish at least the four path-tagged caches: " +
-        s"$published1 in ${secs1}s")
+    assert(published1 >= Artifacts.stores.size,
+      s"cold Warm must publish every store: $published1 in ${secs1}s")
+    Artifacts.stores.foreach { s =>
+      val root = new File(s.root.stripPrefix("file:"))
+      val committed = Option(root.listFiles()).getOrElse(Array.empty[File])
+        .filter(fp => new File(fp, "_COMMITTED").exists())
+      assert(committed.nonEmpty, s"${s.label} holds no committed artifact")
+    }
     // fresh session simulated: memo dropped, disk store intact
     Similarity.clearModelMemoForTest()
     val (published2, _) = graft.Warm.run(spark, sfDir)
