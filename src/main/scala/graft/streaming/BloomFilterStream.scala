@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -62,8 +61,10 @@ object BloomFilterStream {
     * Equal to the batch filter over the union of all delivered eval
     * docs, duplicates and replays included (OR-idempotence). */
   def filter(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/words")
-      .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
+    orFold(Compaction.readTable(spark, s"$stateDir/words"))
+
+  private def orFold(df: DataFrame): DataFrame =
+    df.groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
 
   /** Pre-filter a corpus relation (doc_id, source, text) against the
     * CURRENT streamed filter — q142's candidate stage, continuously
@@ -74,23 +75,9 @@ object BloomFilterStream {
 
   /** Offline small-files maintenance (run while the stream is
     * stopped): OR-fold every epoch slice into one generation numbered
-    * below every existing epoch — the fold IS the resolve operation,
-    * so probe-after-compact ≡ probe-before-compact. */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    val root = s"$stateDir/words"
-    val fs = EpochState.fs(spark, root)
-    val rootPath = new Path(root)
-    if (fs.exists(rootPath)) {
-      val epochs = fs.listStatus(rootPath).toSeq
-        .filter(_.getPath.getName.startsWith("epoch="))
-      if (epochs.length > 1) {
-        val next = epochs
-          .map(_.getPath.getName.stripPrefix("epoch=").toLong).min - 1
-        val folded = spark.read.parquet(root).drop("epoch")
-          .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
-        folded.write.mode("overwrite").parquet(s"$root/epoch=$next")
-        epochs.foreach(e => fs.delete(e.getPath, true))
-      }
-    }
-  }
+    * below every existing epoch on the shared [[Compaction]] protocol
+    * — the fold IS the resolve operation, so probe-after-compact ≡
+    * probe-before-compact. */
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    Compaction.compactTable(spark, s"$stateDir/words", orFold)
 }

@@ -24,8 +24,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * from-scratch document frequency row for row (the [[TokenStatsStream]]
   * additivity argument; spec proves df totals ≡ q124's batch df
   * relation 3 epochs deep). Rows carry their origin epoch as a stored
-  * column, keeping the shared distinct-based
-  * [[StreamingDedup.compactEpochs]] lossless for counts. */
+  * column, keeping the distinct fold of its [[Compaction]] lossless for
+  * counts, and the report reads through the same protocol, so a crashed
+  * fold never counts twice. */
 object BoilerplateStream {
 
   /** Starts the indexer. Batches must carry (doc_id, text, source); the
@@ -63,9 +64,9 @@ object BoilerplateStream {
     * the index alone. */
   def report(spark: SparkSession, indexDir: String, tenths: Long = 3L)
       : DataFrame = {
-    val df = spark.read.parquet(s"$indexDir/dfs")
+    val df = Compaction.readTable(spark, s"$indexDir/dfs")
       .groupBy(col("source"), col("sh")).agg(sum(col("df")).as("df"))
-    val nd = spark.read.parquet(s"$indexDir/docs")
+    val nd = Compaction.readTable(spark, s"$indexDir/docs")
       .groupBy(col("source")).agg(sum(col("docs")).as("n_docs"))
     df.join(nd, Seq("source"))
       .filter(col("df") * 10 >= col("n_docs") * tenths)
@@ -73,9 +74,9 @@ object BoilerplateStream {
       .orderBy(col("source"), col("df").desc, col("sh"))
   }
 
-  /** Offline small-files maintenance ([[StreamingDedup.compactEpochs]];
+  /** Offline small-files maintenance ([[Compaction]], distinct fold;
     * run while the stream is stopped). */
   def compact(spark: SparkSession, indexDir: String): Unit =
     Seq("dfs", "docs").foreach(t =>
-      StreamingDedup.compactEpochs(spark, s"$indexDir/$t"))
+      Compaction.compactTable(spark, s"$indexDir/$t", _.distinct()))
 }

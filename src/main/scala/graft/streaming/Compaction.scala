@@ -5,7 +5,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared crash-safe compaction protocol for epoch-partitioned streaming
-  * state tables ([[SketchStream]], [[SpanStream]]).
+  * state tables, and the marker-aware reads that go with it. Every
+  * epoch-folded table folds and reads through here: the gated streams of
+  * [[EpochState.startGated]] ([[BlocklistStream]], [[ClassifierStream]],
+  * [[WebCorpusStream]], [[SpanStream]], [[PerplexityStream]],
+  * [[SketchStream]], [[ManifestStream]]) and [[Scd2Stream]],
+  * [[WinnowStream]], [[BoilerplateStream]], [[RecrawlStream]],
+  * [[VectorDedupStream]], [[TokenStatsStream]], [[StreamingDedup]],
+  * [[BloomFilterStream]] and [[PurgeStream]], each with its own fold.
+  * [[NoveltyStream]] only probes through [[priorEpochs]].
+  * [[ManifestReconcileStream]] (snap-partitioned generations) and
+  * [[LayoutStream]] (pointer generations) keep their own compaction.
   *
   * MAX/distinct-merged tables are idempotent under a crashed compaction,
   * but SUM- and occurrence-counted tables are not: a crash between
@@ -67,6 +77,24 @@ private[streaming] object Compaction {
     if (excluded.isEmpty) df
     else df.filter(!col("epoch").isin(excluded.toSeq: _*)) // partition-pruned
   }
+
+  /** [[readTable]] of `root`, or None while `root` holds no partition. */
+  def readIfAny(spark: SparkSession, root: String): Option[DataFrame] = {
+    val fs = EpochState.fs(spark, root)
+    val p = new Path(root)
+    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
+      Some(readTable(spark, root))
+    else None
+  }
+
+  /** `root`'s epochs other than `epoch` (with their `epoch` column), or
+    * None while `root` holds no partition: the state a micro-batch may
+    * probe. A replayed epoch overwrites its own partition, so it must
+    * never see its earlier attempt's rows. */
+  def priorEpochs(spark: SparkSession, root: String,
+      epoch: Long): Option[DataFrame] =
+    readIfAny(spark, root)
+      .map(_.filter(col("epoch") =!= lit(epoch))) // replay-safe self-mask
 
   /** Finish an interrupted compaction: committed fold → delete the covered
     * dirs; uncommitted fold → delete the partial folded dir. Then clear

@@ -1,11 +1,18 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Shared plumbing for epoch-partitioned streaming state directories
-  * ([[Scd2Stream]], [[ManifestReconcileStream]]): tiny control files and
-  * the per-checkpoint-lineage epoch base.
+/** Shared plumbing for epoch-partitioned streaming state directories:
+  * tiny control files, the per-checkpoint-lineage epoch base (used by
+  * every lineage-numbered stream — [[Scd2Stream]],
+  * [[ManifestReconcileStream]], [[LayoutStream]], [[PurgeStream]],
+  * [[BloomFilterStream]] and the gated streams below), and the one
+  * id-gated epoch step [[startGated]] that [[BlocklistStream]],
+  * [[ClassifierStream]], [[WebCorpusStream]], [[SpanStream]],
+  * [[PerplexityStream]], [[SketchStream]] and [[ManifestStream]] run on.
   *
   * Lineage base: foreachBatch's epochId restarts at 0 under a fresh
   * checkpoint, so partition names derived from it alone collide across
@@ -81,5 +88,54 @@ private[streaming] object EpochState {
       writeSmall(fs, marker, base.toString)
       base
     }
+  }
+
+  /** Starts the id-gated epoch step over a stream of rows keyed by
+    * `doc_id`: each micro-batch drops the ids already recorded in
+    * `$stateDir/seen` by any OTHER epoch ([[Compaction.priorEpochs]], so
+    * a replay never gates itself out), persists the new rows, writes
+    * `tables(fresh)` to `$stateDir/<name>/epoch=<epoch>` in order, then
+    * the batch's ids to `seen`, then runs `commit(epoch)` and finally
+    * `publish(epoch, n_new_docs)`. `seenView` narrows the gate's view of
+    * `seen` (it receives the prior epochs with their `epoch` column).
+    *
+    * Two orderings carry the exactly-once argument. The lineage base is
+    * derived from the `seen` root, so a fresh-lineage restart after a
+    * crash between the state write and the `seen` write reuses the
+    * crashed epoch's number and overwrites its partial state. And `seen`
+    * is written after every state table, so an epoch whose ids are gated
+    * out has all of its state on disk. */
+  def startGated(docs: DataFrame, stateDir: String, checkpoint: String,
+      publish: (Long, Long) => Unit,
+      seenView: DataFrame => DataFrame = identity,
+      commit: Long => Unit = _ => ())(
+      tables: DataFrame => Seq[(String, DataFrame)]): StreamingQuery = {
+    val spark = docs.sparkSession
+    val seenRoot = s"$stateDir/seen"
+    val base = lineageBase(fs(spark, stateDir), stateDir, seenRoot,
+      checkpoint)
+    docs.writeStream
+      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+        val epoch = base + epochId
+        val seen = Compaction.priorEpochs(spark, seenRoot, epoch)
+          .map(seenView(_).select(col("doc_id")))
+          .getOrElse(batch.limit(0).select(col("doc_id")))
+        val fresh = batch.toDF()
+          .dropDuplicates("doc_id")
+          .join(seen, Seq("doc_id"), "left_anti")
+        fresh.persist()
+        try {
+          val n = fresh.count()
+          (tables(fresh) :+ ("seen" -> fresh.select(col("doc_id"))))
+            .foreach { case (name, df) =>
+              df.write.mode("overwrite")
+                .parquet(s"$stateDir/$name/epoch=$epoch")
+            }
+          commit(epoch)
+          publish(epoch, n)
+        } finally { fresh.unpersist(); () }
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StringType
@@ -71,7 +71,7 @@ import org.apache.spark.sql.types.StringType
   * the LLM-pipeline extension tier's capstone, streamed.) */
 object ManifestStream {
   import graft.operators.{Classify, Corpus, CorpusBuild, Dedup, Quality}
-  import graft.operators.Mirror.{hash60, words}
+  import graft.operators.Mirror.hash60
 
   /** Epoch commit markers: `commits/epoch=N` is one empty object PUT
     * after the epoch's LAST state file; an epoch without it is invisible
@@ -107,64 +107,37 @@ object ManifestStream {
     * epoch's state is committed. */
   def start(docs: DataFrame, stateDir: String, checkpoint: String)(
       publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val spark = docs.sparkSession
-    val seenRoot = s"$stateDir/seen"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, seenRoot, checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val fs = EpochState.fs(spark, stateDir)
-        val seen: DataFrame = {
-          val p = new Path(seenRoot)
-          if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-            committedOnly(Compaction.readTable(spark, seenRoot),
-              committedEpochs(fs, stateDir))
-              .filter(col("epoch") =!= lit(epoch)) // replay-safe self-mask
-              .select(col("doc_id"))
-          else batch.limit(0).select(col("doc_id"))
-        }
-        val fresh = batch.toDF()
-          .dropDuplicates("doc_id")
-          .join(seen, Seq("doc_id"), "left_anti")
-        fresh.persist()
-        try {
-          val n = fresh.count()
-          def out(table: String, df: DataFrame): Unit =
-            df.write.mode("overwrite")
-              .parquet(s"$stateDir/$table/epoch=$epoch")
-          // per-doc pure verdicts + labels, frozen at ingest
-          // narrow trio (n_tokens/f1/f3) in one scan — the batch
-          // docFlags discipline; only the aggregation-shaped gopher
-          // verdict and the label view remain joins
-          val sig = Quality.narrowVerdicts(fresh)
-            .join(Quality.gopherProfile(fresh)
-              .select(col("doc_id"), col("gopher_keep").as("f2")),
-              Seq("doc_id"), "left")
-            .join(Classify.labeledDocs(fresh)
-              .select(col("doc_id"), col("split"), col("label_good")),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), col("source"), col("n_tokens"),
-              col("f1"), col("f2"), col("f3"),
-              col("split"), col("label_good"))
-          out("docsig", sig)
-          // token-level state the corpus-global verdicts derive from
-          out("occ", Corpus.positionedShingles(fresh))
-          out("bg", Quality.bigramHashes(fresh, Seq("doc_id", "source")))
-          out("tok", Classify.tokenBuckets(fresh))
-          out("bands", Dedup.minhashBandsOf(fresh))
-          out("shingles", Dedup.shingleSetsOf(fresh))
-          fresh.select(col("doc_id")).write.mode("overwrite")
-            .parquet(s"$seenRoot/epoch=$epoch")
-          // the epoch becomes visible ONLY here — one atomic PUT after
-          // the last state file, so every earlier crash point leaves an
-          // invisible partial epoch (re-ingested whole on any lineage)
-          markCommitted(fs, stateDir, epoch)
-          publish(epoch, n)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    val fs = EpochState.fs(docs.sparkSession, stateDir)
+    EpochState.startGated(docs, stateDir, checkpoint, publish,
+      // the gate sees committed epochs only: a crashed epoch's docs
+      // re-enter whole on any lineage
+      seenView = committedOnly(_, committedEpochs(fs, stateDir)),
+      // the epoch becomes visible ONLY here — one atomic PUT after the
+      // last state file, so every earlier crash point leaves an
+      // invisible partial epoch
+      commit = markCommitted(fs, stateDir, _)) { fresh =>
+      // per-doc pure verdicts + labels, frozen at ingest: the narrow
+      // trio (n_tokens/f1/f3) in one scan — the batch docFlags
+      // discipline; only the aggregation-shaped gopher verdict and the
+      // label view remain joins
+      val sig = Quality.narrowVerdicts(fresh)
+        .join(Quality.gopherProfile(fresh)
+          .select(col("doc_id"), col("gopher_keep").as("f2")),
+          Seq("doc_id"), "left")
+        .join(Classify.labeledDocs(fresh)
+          .select(col("doc_id"), col("split"), col("label_good")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("n_tokens"),
+          col("f1"), col("f2"), col("f3"),
+          col("split"), col("label_good"))
+      Seq("docsig" -> sig,
+        // token-level state the corpus-global verdicts derive from
+        "occ" -> Corpus.positionedShingles(fresh),
+        "bg" -> Quality.bigramHashes(fresh, Seq("doc_id", "source")),
+        "tok" -> Classify.tokenBuckets(fresh),
+        "bands" -> Dedup.minhashBandsOf(fresh),
+        "shingles" -> Dedup.shingleSetsOf(fresh))
+    }
   }
 
   private def table(spark: SparkSession, stateDir: String, name: String,

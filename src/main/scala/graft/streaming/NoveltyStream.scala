@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Mirror
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,9 +29,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * (the index grows sublinearly as the stream saturates — the novelty
   * signal and the index growth rate are the same curve). At 100 TB the
   * index column would be the 60-bit shingle hash ([[Mirror.hash60]],
-  * accepting collision-rate undercount) and compaction folds epochs like
-  * [[StreamingDedup.compactIndex]]; here it stays the exact string so the
-  * stream is bit-equal to the batch oracle. */
+  * accepting collision-rate undercount) and compaction would fold epochs
+  * through [[Compaction]] like [[StreamingDedup.compactIndex]]; here it
+  * stays the exact string so the stream is bit-equal to the batch
+  * oracle. */
 object NoveltyStream {
 
   /** Starts the scoring query. `publish` receives per micro-batch a
@@ -53,17 +53,10 @@ object NoveltyStream {
           val owners = ws
             .select(col("doc_id"), explode(col("sg")).as("s"))
             .groupBy(col("s")).agg(min(col("doc_id")).as("owner"))
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(indexDir), spark.sessionState.newHadoopConf())
-          val hasIndex = fs.exists(new Path(root)) &&
-            fs.listStatus(new Path(root)).nonEmpty
-          val novelOwners = (if (hasIndex)
-            owners.join(
-              spark.read.parquet(root)
-                .filter(col("epoch") =!= epochId) // replay: skip own attempt
-                .select(col("s")),
-              Seq("s"), "left_anti")
-          else owners).persist()
+          val novelOwners = Compaction.priorEpochs(spark, root, epochId)
+            .map(idx => owners.join(idx.select(col("s")), Seq("s"),
+              "left_anti"))
+            .getOrElse(owners).persist()
           try {
             novelOwners.count() // pin before the index mutates underneath
             val nov = novelOwners.groupBy(col("owner").as("doc_id"))

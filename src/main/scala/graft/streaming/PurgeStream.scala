@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -71,19 +70,9 @@ object PurgeStream {
     requests.writeStream
       .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
         val epoch = base + epochId
-        val fs = EpochState.fs(spark, stateDir)
-        def state(root: String, cols: Seq[String]): DataFrame = {
-          val p = new Path(root)
-          if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-            spark.read.parquet(root)
-              .filter(col("epoch") =!= lit(epoch)) // replay-safe self-mask
-              .select(cols.map(col): _*)
-          else corpus.limit(0)
-            .select(lit(0L).as("doc_a"), lit(0L).as("doc_b"),
-              lit("").as("source"), lit(0L).as("doc_id"),
-              lit(0L).as("toks"))
-            .select(cols.map(col): _*)
-        }
+        def state(root: String, cols: Seq[String]): DataFrame =
+          Compaction.priorEpochs(spark, root, epoch)
+            .getOrElse(empty(spark)).select(cols.map(col): _*)
         // resolve + dedupe: set semantics over the accumulated requests
         val resolved = corpus
           .join(broadcast(batch.select(col("doc_id")).distinct()),
@@ -153,43 +142,27 @@ object PurgeStream {
       .orderBy(col("source"))
   }
 
+  // distinct: a fresh-lineage redelivery lands duplicates in a fresh
+  // partition (EpochState contract) — the fold absorbs them
   private def read(spark: SparkSession, root: String,
-      cols: Seq[String]): DataFrame = {
-    val fs = EpochState.fs(spark, root)
-    val p = new Path(root)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-      // distinct: a fresh-lineage redelivery lands duplicates in a fresh
-      // partition (EpochState contract) — the fold absorbs them
-      spark.read.parquet(root).select(cols.map(col): _*).distinct()
-    else
-      spark.range(0).select(
-        lit(0L).as("doc_a"), lit(0L).as("doc_b"), lit("").as("source"),
-        lit(0L).as("doc_id"), lit(0L).as("toks"))
-        .select(cols.map(col): _*).limit(0)
-  }
+      cols: Seq[String]): DataFrame =
+    Compaction.readIfAny(spark, root).getOrElse(empty(spark))
+      .select(cols.map(col): _*).distinct()
+
+  /** Zero rows with every state column of both tables. */
+  private def empty(spark: SparkSession): DataFrame =
+    spark.range(0).select(
+      lit(0L).as("doc_a"), lit(0L).as("doc_b"), lit("").as("source"),
+      lit(0L).as("doc_id"), lit(0L).as("toks"))
 
   /** Offline small-files maintenance (run while the stream is stopped):
-    * fold all epoch partitions of each table into one generation
-    * numbered below every existing epoch, dropping the duplicates a
+    * fold all epoch partitions of each table into one generation on the
+    * shared [[Compaction]] protocol, dropping the duplicates a
     * fresh-lineage redelivery may have landed. */
   def compactState(spark: SparkSession, stateDir: String): Unit =
     Seq("purged" -> Seq("doc_id", "source", "toks"),
       "affected" -> Seq("doc_a", "doc_b", "source")).foreach {
-      case (t, cols) =>
-        val root = s"$stateDir/$t"
-        val fs = EpochState.fs(spark, root)
-        val rootPath = new Path(root)
-        if (fs.exists(rootPath)) {
-          val epochs = fs.listStatus(rootPath).toSeq
-            .filter(_.getPath.getName.startsWith("epoch="))
-          if (epochs.length > 1) {
-            val next = epochs
-              .map(_.getPath.getName.stripPrefix("epoch=").toLong).min - 1
-            val folded = spark.read.parquet(root)
-              .select(cols.map(col): _*).distinct()
-            folded.write.mode("overwrite").parquet(s"$root/epoch=$next")
-            epochs.foreach(e => fs.delete(e.getPath, true))
-          }
-        }
+      case (t, cols) => Compaction.compactTable(spark, s"$stateDir/$t",
+        _.select(cols.map(col): _*).distinct())
     }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,10 +27,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * replayed epoch OVERWRITES its own partition and probes only earlier
   * epochs, so at-least-once foreachBatch keeps both reports and index
   * exactly-once. `seen_epoch` rides every row as a DATA column, which
-  * makes the shared distinct-based [[StreamingDedup.compactEpochs]]
-  * lossless for the latest-per-id resolution. The probe join is keyed on
-  * the primary key (no skew); only (doc_id, source, 32-byte fp) rows move
-  * — never document text (the q126 shuffle discipline).
+  * makes the distinct fold of its [[Compaction]] lossless for the
+  * latest-per-id resolution. The probe join is keyed on the primary key
+  * (no skew); only (doc_id, source, 32-byte fp) rows move — never
+  * document text (the q126 shuffle discipline).
   */
 object RecrawlStream {
 
@@ -51,19 +50,12 @@ object RecrawlStream {
           lit(epochId).as("seen_epoch"))
         entries.persist() // probe + index append both scan the batch
         try {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(indexDir), spark.sessionState.newHadoopConf())
-          val hasIndex = fs.exists(new Path(root)) &&
-            fs.listStatus(new Path(root)).nonEmpty
-          val latest =
-            if (!hasIndex)
-              entries.limit(0).select(col("doc_id"), col("fp").as("old_fp"))
-            else spark.read.parquet(root)
-              // a replayed epoch must not probe its own rows
-              .filter(col("epoch") =!= epochId)
-              .groupBy(col("doc_id"))
+          val latest = Compaction.priorEpochs(spark, root, epochId)
+            .map(_.groupBy(col("doc_id"))
               .agg(max(struct(col("seen_epoch"), col("fp"))).as("s"))
-              .select(col("doc_id"), col("s.fp").as("old_fp"))
+              .select(col("doc_id"), col("s.fp").as("old_fp")))
+            .getOrElse(
+              entries.limit(0).select(col("doc_id"), col("fp").as("old_fp")))
           val report = entries.join(latest, Seq("doc_id"), "left_outer")
             .select(col("source"),
               when(col("old_fp").isNull, "added")
@@ -85,10 +77,10 @@ object RecrawlStream {
       .start()
   }
 
-  /** Offline small-files maintenance ([[StreamingDedup.compactEpochs]] —
+  /** Offline small-files maintenance ([[Compaction]], distinct fold —
     * run while the stream is stopped; `seen_epoch` survives as a data
     * column, so latest-per-id resolution is unaffected). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit =
-    StreamingDedup.compactEpochs(spark, s"$indexDir/fps")
+    Compaction.compactTable(spark, s"$indexDir/fps", _.distinct())
 }

@@ -161,14 +161,11 @@ object Scd2Stream {
                   s"${snaps.head} but $clockPath already records $mx — " +
                   "only the last processed batch may be redelivered")
             }
-            val hasState = fs.exists(new Path(root)) &&
-              fs.listStatus(new Path(root)).nonEmpty
-            val stored =
-              if (hasState) spark.read.parquet(root)
-                .select(col("doc_id"), col("fp"),
-                  col("valid_from"), col("valid_to"))
-              else entries.limit(0).select(col("doc_id"), col("fp"),
-                lit(0L).as("valid_from"), lit(0L).as("valid_to"))
+            val stored = Compaction.readIfAny(spark, root)
+              .getOrElse(entries.limit(0).select(col("doc_id"), col("fp"),
+                lit(0L).as("valid_from"), lit(0L).as("valid_to")))
+              .select(col("doc_id"), col("fp"), col("valid_from"),
+                col("valid_to"))
             // Fold snapshots in order; earlier snapshots' output rows are
             // visible to later ones (acc), so a split/merged delivery
             // derives the same segments as one-batch-per-snapshot.
@@ -237,7 +234,7 @@ object Scd2Stream {
     * build (q130's [[graft.operators.Lifecycle.scd2Segments]]) derives from
     * the same observations. */
   def resolve(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/segments")
+    Compaction.readTable(spark, s"$stateDir/segments")
       .groupBy(col("doc_id"), col("valid_from"))
       .agg(max(struct(col("valid_to"), col("source"), col("fp"))).as("s"))
       .select(col("doc_id"), col("s.source").as("source"),
@@ -249,16 +246,11 @@ object Scd2Stream {
     * segment ended at snap-1. Empty (with schema) when no tombstone has
     * ever been delivered. Duplicate rows from a fresh-lineage redelivery
     * fold away (byte-identical under the redelivery contract). */
-  def closures(spark: SparkSession, stateDir: String): DataFrame = {
-    val root = s"$stateDir/closures"
-    val fs = EpochState.fs(spark, root)
-    if (fs.exists(new org.apache.hadoop.fs.Path(root)))
-      spark.read.parquet(root)
-        .select(col("doc_id"), col("source"), col("snap")).distinct()
-    else
-      spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), col("id").as("snap")).limit(0)
-  }
+  def closures(spark: SparkSession, stateDir: String): DataFrame =
+    Compaction.readIfAny(spark, s"$stateDir/closures")
+      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
+        lit("").as("source"), col("id").as("snap")))
+      .select(col("doc_id"), col("source"), col("snap")).distinct()
 
   /** Each doc's LATEST segment, restricted to docs still alive — i.e. not
     * closed by a tombstone after that segment ended. A closure at snap c
@@ -284,7 +276,7 @@ object Scd2Stream {
       .drop("closed_at")
   }
 
-  /** Offline small-files maintenance ([[StreamingDedup.compactEpochs]]).
+  /** Offline small-files maintenance ([[Compaction]], distinct fold).
     * Superseded segment rows are distinct rows and survive compaction;
     * [[resolve]]'s fold is unaffected — the probe and the resolved table
     * read identically across a compaction boundary, and the open-segment
@@ -292,7 +284,7 @@ object Scd2Stream {
     * even when compaction already folded its rows into the compacted
     * generation. Closure rows are plain distinct rows too. */
   def compactState(spark: SparkSession, stateDir: String): Unit = {
-    StreamingDedup.compactEpochs(spark, s"$stateDir/segments")
-    StreamingDedup.compactEpochs(spark, s"$stateDir/closures")
+    Compaction.compactTable(spark, s"$stateDir/segments", _.distinct())
+    Compaction.compactTable(spark, s"$stateDir/closures", _.distinct())
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,52 +38,19 @@ object SketchStream {
   /** Starts the profiler over a stream of document rows (doc_id, source,
     * text). `publish` receives (epoch, n_new_docs) after commit. */
   def start(docs: DataFrame, stateDir: String, checkpoint: String)(
-      publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val spark = docs.sparkSession
-    val seenRoot = s"$stateDir/seen"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, seenRoot, checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val fs = EpochState.fs(spark, stateDir)
-        val seen: DataFrame = {
-          val p = new Path(seenRoot)
-          if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-            readTable(spark, seenRoot) // marker-aware (compaction-crash safe)
-              .filter(col("epoch") =!= lit(epoch)) // replay-safe self-mask
-              .select(col("doc_id"))
-          else batch.limit(0).select(col("doc_id"))
-        }
-        val fresh = batch.toDF()
-          .dropDuplicates("doc_id")
-          .join(seen, Seq("doc_id"), "left_anti")
-        fresh.persist()
-        try {
-          val n = fresh.count()
-          hllRegistersOf(hllShingles(fresh)).write.mode("overwrite")
-            .parquet(s"$stateDir/regs/epoch=$epoch")
-          cmsCounters(fresh
-            .select(explode(graft.operators.Mirror.shingleGen(col("text")))
-              .as("sh")))
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/counters/epoch=$epoch")
-          kmvSketchOf(kmvValues(fresh)).write.mode("overwrite")
-            .parquet(s"$stateDir/kmv/epoch=$epoch")
-          fresh.select(col("doc_id")).write.mode("overwrite")
-            .parquet(s"$seenRoot/epoch=$epoch")
-          publish(epoch, n)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery =
+    EpochState.startGated(docs, stateDir, checkpoint, publish)(fresh => Seq(
+      "regs" -> hllRegistersOf(hllShingles(fresh)),
+      "counters" -> cmsCounters(fresh
+        .select(explode(graft.operators.Mirror.shingleGen(col("text")))
+          .as("sh"))),
+      "kmv" -> kmvSketchOf(kmvValues(fresh))))
 
   /** The accumulated HLL register table — per-(source, bucket) MAX over
     * every epoch's slice registers. Equal to the batch registers over
     * the same documents (SketchStreamSpec). */
   def registers(spark: SparkSession, stateDir: String): DataFrame =
-    readTable(spark, s"$stateDir/regs")
+    Compaction.readTable(spark, s"$stateDir/regs")
       .groupBy(col("source"), col("bucket"))
       .agg(max(col("rho")).as("rho"))
 
@@ -92,7 +58,7 @@ object SketchStream {
     * over every epoch's slice counters. Equal to the batch counters
     * over the same documents (SketchStreamSpec). */
   def counters(spark: SparkSession, stateDir: String): DataFrame =
-    readTable(spark, s"$stateDir/counters")
+    Compaction.readTable(spark, s"$stateDir/counters")
       .groupBy(col("i"), col("bucket"))
       .agg(sum(col("c")).as("c"))
 
@@ -104,10 +70,7 @@ object SketchStream {
     * values, which the distinct inside the fold collapses). Equal to
     * the batch sketch over the same documents (SketchStreamSpec). */
   def kmv(spark: SparkSession, stateDir: String): DataFrame =
-    kmvSketchOf(readTable(spark, s"$stateDir/kmv"))
-
-  private def readTable(spark: SparkSession, root: String): DataFrame =
-    Compaction.readTable(spark, root)
+    kmvSketchOf(Compaction.readTable(spark, s"$stateDir/kmv"))
 
   /** Offline small-files maintenance (run while the stream is stopped):
     * fold each table's epochs into one generation numbered below every

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -44,39 +43,9 @@ object SpanStream {
   /** Starts the index maintainer over a stream of document rows
     * (doc_id, text, …). `publish` receives (epoch, n_new_docs). */
   def start(docs: DataFrame, stateDir: String, checkpoint: String)(
-      publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val spark = docs.sparkSession
-    val seenRoot = s"$stateDir/seen"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, seenRoot, checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val fs = EpochState.fs(spark, stateDir)
-        val seen: DataFrame = {
-          val p = new Path(seenRoot)
-          if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-            Compaction.readTable(spark, seenRoot)
-              .filter(col("epoch") =!= lit(epoch)) // replay-safe self-mask
-              .select(col("doc_id"))
-          else batch.limit(0).select(col("doc_id"))
-        }
-        val fresh = batch.toDF()
-          .dropDuplicates("doc_id")
-          .join(seen, Seq("doc_id"), "left_anti")
-        fresh.persist()
-        try {
-          val n = fresh.count()
-          Corpus.positionedShingles(fresh).write.mode("overwrite")
-            .parquet(s"$stateDir/occ/epoch=$epoch")
-          fresh.select(col("doc_id")).write.mode("overwrite")
-            .parquet(s"$seenRoot/epoch=$epoch")
-          publish(epoch, n)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery =
+    EpochState.startGated(docs, stateDir, checkpoint, publish)(
+      fresh => Seq("occ" -> Corpus.positionedShingles(fresh)))
 
   /** The accumulated positioned-shingle index (doc_id, pos, sh). */
   def index(spark: SparkSession, stateDir: String): DataFrame =

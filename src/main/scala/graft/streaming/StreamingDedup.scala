@@ -86,9 +86,12 @@ object StreamingDedup {
         val b = batch.toDF()
         b.persist() // probe + two index appends all scan the batch
         try {
-          val idxBands = spark.read.parquet(bandsRoot).drop("epoch")
-          val idxSh = spark.read.parquet(shRoot).drop("epoch")
-          publish(Dedup.incrementalMatchesPre(b, idxBands, idxSh), epochId)
+          // every epoch but this one (the base `epoch=-1` seeded above
+          // included): a replayed batch must not match its own rows
+          def prior(root: String) =
+            Compaction.priorEpochs(spark, root, epochId).get.drop("epoch")
+          publish(Dedup.incrementalMatchesPre(b, prior(bandsRoot),
+            prior(shRoot)), epochId)
           Dedup.minhashBandsOf(b)
             .write.mode("overwrite").parquet(epochDir(bandsRoot, epochId))
           Dedup.shingleSetsOf(b)
@@ -102,36 +105,12 @@ object StreamingDedup {
   /** Offline index maintenance: fold every per-epoch partition of the
     * incremental index into ONE compacted generation — the compaction a
     * production table needs once thousands of micro-batch partitions
-    * accumulate (small-files problem). The compacted generation is
-    * written as a NEW epoch directory numbered below every existing one
-    * (readers scan all epochs, so numbering is free), and only then are
-    * the source partitions deleted — a crash in between leaves duplicate
-    * rows, which `.distinct()` here removes on the next compaction and
-    * which the probe tolerates meanwhile (candidates are
-    * de-duplicated, best-match picks one row). Run this while the stream
-    * is stopped (same contract as any table compaction). */
+    * accumulate (small-files problem). The fold is `distinct` on the
+    * crash-safe [[Compaction]] protocol, whose generation is numbered
+    * below every existing epoch, so replayed epochs never collide with
+    * it. Run this while the stream is stopped (same contract as any
+    * table compaction). */
   def compactIndex(spark: SparkSession, indexDir: String): Unit =
-    Seq("bands", "shingles").foreach(t => compactEpochs(spark, s"$indexDir/$t"))
-
-  /** Folds every `epoch=N` partition under `root` into one compacted
-    * generation numbered below all existing epochs (readers scan all
-    * epochs, so the number is free; staying below every live epoch also
-    * keeps replayed epochs from colliding with it). Shared by every
-    * epoch-partitioned streaming index in this package. */
-  def compactEpochs(spark: SparkSession, root: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sessionState.newHadoopConf())
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (fs.exists(rootPath)) {
-      val epochs = fs.listStatus(rootPath).toSeq
-        .filter(_.getPath.getName.startsWith("epoch="))
-      if (epochs.length > 1) {
-        val next = epochs
-          .map(_.getPath.getName.stripPrefix("epoch=").toLong).min - 1
-        spark.read.parquet(root).drop("epoch").distinct()
-          .write.mode("overwrite").parquet(s"$root/epoch=$next")
-        epochs.foreach(e => fs.delete(e.getPath, true))
-      }
-    }
-  }
+    Seq("bands", "shingles").foreach(t =>
+      Compaction.compactTable(spark, s"$indexDir/$t", _.distinct()))
 }

@@ -23,13 +23,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * so cross-epoch SUMS equal the from-scratch batch aggregation row for
   * row (TokenStatsStreamSpec proves it 3 epochs deep).
   *
-  * Compaction reuses [[StreamingDedup.compactEpochs]] unchanged: rows
-  * carry their origin epoch as a STORED column (`epoch_orig`), which makes
-  * every row unique by (epoch_orig, word) — so the shared
-  * distinct-and-fold is lossless for counts too, and a crashed compaction
-  * heals by rerunning (duplicates collapse under distinct; totals must not
-  * be read between a compaction crash and its rerun, the standard offline-
-  * maintenance contract).
+  * Compaction is the shared [[Compaction]] protocol with a distinct
+  * fold: rows carry their origin epoch as a STORED column (`epoch_orig`),
+  * which makes every row unique by (epoch_orig, source, word) — so the
+  * fold is lossless for counts too. [[totals]] reads through the same
+  * protocol's marker, so a compaction crashed at any point still counts
+  * every row once, and the next [[compact]] completes it.
   */
 object TokenStatsStream {
 
@@ -63,7 +62,7 @@ object TokenStatsStream {
     * [[batchStats]] over everything ingested so far (each doc lives in
     * exactly one epoch, so docs-counts add exactly like occurrences). */
   def totals(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
+    Compaction.readTable(spark, indexDir)
       .groupBy(col("source"), col("word"))
       .agg(sum(col("occurrences")).as("occurrences"),
         sum(col("docs")).as("docs"))
@@ -82,5 +81,5 @@ object TokenStatsStream {
   /** Folds the per-epoch partitions into one generation (offline
     * maintenance; see class doc for the crash contract). */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StreamingDedup.compactEpochs(spark, indexDir)
+    Compaction.compactTable(spark, indexDir, _.distinct())
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -48,18 +47,9 @@ object VectorDedupStream {
         val entries = Similarity.bandedEntries(batch.toDF())
         entries.persist() // probe + index append both scan the batch
         try {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(indexDir), spark.sessionState.newHadoopConf())
-          val hasIndex = fs.exists(new Path(root)) &&
-            fs.listStatus(new Path(root)).nonEmpty
-          if (hasIndex) {
-            // epoch filter: a replayed epoch must not probe its own rows
-            val idx = spark.read.parquet(root)
-              .filter(org.apache.spark.sql.functions.col("epoch") =!= epochId)
-              .drop("epoch")
-            publish(Similarity.bandedMatches(entries, idx, tau), epochId)
-          } else publish(
-            Similarity.bandedMatches(entries, entries.limit(0), tau), epochId)
+          val idx = Compaction.priorEpochs(spark, root, epochId)
+            .map(_.drop("epoch")).getOrElse(entries.limit(0))
+          publish(Similarity.bandedMatches(entries, idx, tau), epochId)
           entries.write.mode("overwrite").parquet(s"$root/epoch=$epochId")
         } finally { entries.unpersist(); () }
       }
@@ -68,10 +58,9 @@ object VectorDedupStream {
   }
 
   /** Offline small-files maintenance: fold the per-epoch signature
-    * partitions into one compacted generation
-    * ([[StreamingDedup.compactEpochs]] — same contract: run while the
-    * stream is stopped). */
+    * partitions into one compacted generation ([[Compaction]], distinct
+    * fold — run while the stream is stopped). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit =
-    StreamingDedup.compactEpochs(spark, s"$indexDir/sigs")
+    Compaction.compactTable(spark, s"$indexDir/sigs", _.distinct())
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Recipe
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -45,18 +44,8 @@ object WinnowStream {
         val entries = Recipe.winnowEntries(batch.toDF())
         entries.persist() // probe + index append both scan the batch
         try {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(indexDir), spark.sessionState.newHadoopConf())
-          val hasIndex = fs.exists(new Path(root)) &&
-            fs.listStatus(new Path(root)).nonEmpty
-          val idx =
-            if (hasIndex)
-              // epoch filter: a replayed epoch must not probe its own rows
-              spark.read.parquet(root)
-                .filter(org.apache.spark.sql.functions.col("epoch")
-                  =!= epochId)
-                .drop("epoch")
-            else entries.limit(0)
+          val idx = Compaction.priorEpochs(spark, root, epochId)
+            .map(_.drop("epoch")).getOrElse(entries.limit(0))
           publish(Recipe.winnowMatches(entries, idx), epochId)
           entries.write.mode("overwrite").parquet(s"$root/epoch=$epochId")
         } finally { entries.unpersist(); () }
@@ -65,9 +54,9 @@ object WinnowStream {
       .start()
   }
 
-  /** Offline small-files maintenance ([[StreamingDedup.compactEpochs]] —
+  /** Offline small-files maintenance ([[Compaction]], distinct fold —
     * run while the stream is stopped). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit =
-    StreamingDedup.compactEpochs(spark, s"$indexDir/fps")
+    Compaction.compactTable(spark, s"$indexDir/fps", _.distinct())
 }

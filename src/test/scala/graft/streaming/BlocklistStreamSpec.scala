@@ -105,4 +105,30 @@ class BlocklistStreamSpec extends AnyFunSuite with SparkTestSession {
     assert(hitsOf(e0.select(col("doc_id"), col("source"), col("n_chars"),
       col("counts"))) == want)
   }
+
+  test("a crash between the hit write and the seen write: redelivery " +
+    "under a fresh checkpoint equals a clean run") {
+    val rows = docRows
+    val (b1, b2) = rows.splitAt(rows.length / 2)
+    val clean = java.nio.file.Files.createTempDirectory("blockclean")
+    run(clean, "ckpt", Seq(b1, b2))
+    val cleanState = clean.resolve("state").toString
+
+    val dir = java.nio.file.Files.createTempDirectory("blockcrash")
+    val state = dir.resolve("state").toString
+    run(dir, "ckpt1", Seq(b1))
+    run(dir, "ckpt2", Seq(b2))
+    // on disk this is a crash after b2's hits landed and before its seen
+    // partition did
+    val seen = new java.io.File(s"$state/seen")
+    val last = seen.listFiles().map(_.getName)
+      .filter(_.startsWith("epoch=")).maxBy(_.stripPrefix("epoch=").toLong)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(seen, last))
+    run(dir, "ckpt3", Seq(b2))
+    assert(BlocklistStream.hits(spark, state).count() ==
+      BlocklistStream.hits(spark, cleanState).count(),
+      "redelivery after the crash must not duplicate hit rows")
+    assert(rowsOf(BlocklistStream.report(spark, state)) ==
+      rowsOf(BlocklistStream.report(spark, cleanState)))
+  }
 }

@@ -132,4 +132,37 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
       assert(probe == Set((301L, 103L)))
     } finally query.stop()
   }
+
+  test("a replayed epoch does not match against its own index rows") {
+    val base = Seq((1L, baseText1), (2L, baseText2)).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("sdedup-replay")
+    val indexDir = dir.resolve("index").toString
+    val novel = Doc(103L, (1 to 20).map(i => s"nova$i").mkString(" "))
+    def run(ckpt: String): Seq[(Long, Long)] = {
+      val stream = MemoryStream[Doc](spark)
+      val got = ArrayBuffer.empty[(Long, Long)]
+      val q = StreamingDedup.startIncremental(stream.toDF(), base,
+        indexDir, dir.resolve(ckpt).toString) { (out, _) =>
+        got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
+      }
+      stream.addData(novel)
+      try q.processAllAvailable() finally q.stop()
+      got.toSeq
+    }
+    assert(run("ckpt1").isEmpty, "first sight: nothing to match")
+    // a fresh checkpoint replays the SAME doc as epoch 0 against an index
+    // that already holds epoch 0 — the probe must skip its own epoch and
+    // still see the base corpus at epoch=-1
+    assert(run("ckpt2").isEmpty, "replay must not self-match")
+    val near = Doc(104L, baseText1.replace("alpha20", "omega"))
+    val stream = MemoryStream[Doc](spark)
+    val got = ArrayBuffer.empty[Long]
+    val q = StreamingDedup.startIncremental(stream.toDF(), base, indexDir,
+      dir.resolve("ckpt3").toString) { (out, _) =>
+      got ++= out.collect().map(_.getLong(1))
+    }
+    stream.addData(near)
+    try q.processAllAvailable() finally q.stop()
+    assert(got == Seq(1L), s"base corpus must stay probe-visible: $got")
+  }
 }

@@ -74,4 +74,47 @@ class TokenStatsStreamSpec extends AnyFunSuite with SparkTestSession {
     assert(first(("s", "alpha")) == ((2L, 1L)))
     assert(first(("s", "beta")) == ((2L, 2L)))
   }
+
+  test("a compaction crashed after its fold committed does not " +
+    "double-count totals, and compact repairs it") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, lit}
+    val docs = graft.Tables(spark, sfDir, "documents")
+      .select("doc_id", "text", "source").as[QDoc].collect().sortBy(_.doc_id)
+    val dir = java.nio.file.Files.createTempDirectory("token-crash")
+    val indexDir = dir.resolve("index").toString
+    val stream = MemoryStream[QDoc](spark)
+    val q = TokenStatsStream.start(stream.toDF(), indexDir,
+      dir.resolve("ckpt").toString)
+    try docs.grouped(docs.length / 2 + 1).foreach { bt =>
+      stream.addData(bt.toIndexedSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val t0 = asMap(TokenStatsStream.totals(spark, indexDir).collect())
+    val fs = EpochState.fs(spark, indexDir)
+    val epochs = fs.listStatus(new Path(indexDir)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("epoch="))
+      .map(_.stripPrefix("epoch=").toLong)
+    assert(epochs.length >= 2, s"need multiple epochs, got $epochs")
+    val next = epochs.min - 1
+    // crash point: marker PUT, folded generation fully committed (its
+    // _SUCCESS on disk), the covered epoch dirs NOT deleted
+    val out = fs.create(new Path(indexDir, "_compacting"), true)
+    try out.write(s"$next;${epochs.mkString(";")}".getBytes("UTF-8"))
+    finally out.close()
+    spark.read.parquet(indexDir).filter(col("epoch") =!= lit(next))
+      .drop("epoch").distinct()
+      .write.mode("overwrite").parquet(s"$indexDir/epoch=$next")
+    assert(fs.exists(new Path(s"$indexDir/epoch=$next/_SUCCESS")))
+    assert(asMap(TokenStatsStream.totals(spark, indexDir).collect()) == t0,
+      "fold-committed crash: both generations on disk must read ONCE")
+    TokenStatsStream.compact(spark, indexDir)
+    assert(!fs.exists(new Path(indexDir, "_compacting")),
+      "repair must clear the marker")
+    val after = fs.listStatus(new Path(indexDir)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("epoch="))
+    assert(after == Seq(s"epoch=$next"),
+      s"repair must leave only the folded generation, got $after")
+    assert(asMap(TokenStatsStream.totals(spark, indexDir).collect()) == t0)
+  }
 }
