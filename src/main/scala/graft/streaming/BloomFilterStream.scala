@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,11 +15,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * unlike [[SketchStream]]'s sum-merged counters, which need a doc_id
   * gate — duplicate deliveries, overlapping batches, same-lineage
   * replays AND fresh-lineage redeliveries all fold away in the merge
-  * itself. State is per-epoch slice filters under `stateDir/words`
-  * (epoch-partitioned for bounded small files, with lineage-safe
-  * numbering via [[EpochState.lineageBase]] — collisions would not
-  * corrupt OR-state, but keeping every epoch's slice intact preserves
-  * the at-least-once audit trail); resolve() is one ≤ 32 K-row
+  * itself. State is per-epoch slice filters under `stateDir/words`,
+  * written by [[EpochState.start]] (lineage-safe numbering — collisions
+  * would not corrupt OR-state, but keeping every epoch's slice intact
+  * preserves the at-least-once audit trail); resolve() is one ≤ 32 K-row
   * bit_or rollup. BloomStreamSpec proves streamed filter ≡ batch
   * filter with NO gate under aggressive duplication, and that probing
   * with the streamed filter reproduces q142's candidate set.
@@ -35,26 +34,16 @@ object BloomFilterStream {
     * after the epoch's slice is committed. */
   def start(evalDocs: DataFrame, stateDir: String, checkpoint: String)(
       publish: (Long, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    val spark = evalDocs.sparkSession
     val wordsRoot = s"$stateDir/words"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, wordsRoot, checkpoint)
-    evalDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val slice = graft.operators.Bloom.filterWords(
-          batch.toDF().select(
-            explode(graft.operators.Mirror.shingle5Gen(col("text")))
-              .as("sh")).distinct())
-        slice.persist()
-        try {
-          val n = slice.count()
-          slice.write.mode("overwrite").parquet(s"$wordsRoot/epoch=$epoch")
-          publish(epoch, n)
-        } finally { slice.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(evalDocs, stateDir, wordsRoot, checkpoint) { (batch, e) =>
+      val slice = e.pin(graft.operators.Bloom.filterWords(
+        batch.select(
+          explode(graft.operators.Mirror.shingle5Gen(col("text")))
+            .as("sh")).distinct()))
+      val n = slice.count()
+      e.afterWrite(publish(e.id, n))
+      Seq(wordsRoot -> slice)
+    }
   }
 
   /** The current filter — per-word bitwise OR over every epoch slice.

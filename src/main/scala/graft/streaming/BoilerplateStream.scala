@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Mirror
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,16 +17,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the reference re-aggregates its whole table per 30 s trigger,
   * /root/reference/spark/covid_streaming.py:139-156.)
   *
-  * Exactly-once story (the [[StreamingDedup.startIncremental]] layout):
-  * NO streaming state; each epoch OVERWRITES its own `epoch=N`
-  * partition. Shingles are counted DISTINCT-per-doc and every document
-  * is ingested in exactly one epoch, so cross-epoch SUMS equal the
-  * from-scratch document frequency row for row (the [[TokenStatsStream]]
-  * additivity argument; spec proves df totals ≡ q124's batch df
-  * relation 3 epochs deep). Rows carry their origin epoch as a stored
-  * column, keeping the distinct fold of its [[Compaction]] lossless for
-  * counts, and the report reads through the same protocol, so a crashed
-  * fold never counts twice. */
+  * Exactly-once story: NO streaming state; the index is written by
+  * [[EpochState.start]], so a replay under the same checkpoint stays
+  * exactly-once, while a fresh checkpoint that re-delivers documents
+  * already ingested adds them again. Shingles are counted
+  * DISTINCT-per-doc and every document is ingested in exactly one
+  * epoch, so cross-epoch SUMS equal the from-scratch document frequency
+  * row for row (the [[TokenStatsStream]] additivity argument; spec
+  * proves df totals ≡ q124's batch df relation 3 epochs deep). Rows
+  * carry their origin epoch as a stored column, keeping the distinct
+  * fold of its [[Compaction]] lossless for counts, and the report reads
+  * through the same protocol, so a crashed fold never counts twice. */
 object BoilerplateStream {
 
   /** Starts the indexer. Batches must carry (doc_id, text, source); the
@@ -34,21 +35,16 @@ object BoilerplateStream {
     * (epoch_orig, source, docs) under `docs/`. */
   def start(newDocs: DataFrame, indexDir: String, checkpoint: String)
       : StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.toDF()
-        b.persist() // both index tables scan the batch
-        try {
-          batchDf(b).withColumn("epoch_orig", lit(epochId))
-            .write.mode("overwrite").parquet(s"$indexDir/dfs/epoch=$epochId")
-          b.groupBy(col("source"))
-            .agg(countDistinct(col("doc_id")).as("docs"))
-            .withColumn("epoch_orig", lit(epochId))
-            .write.mode("overwrite").parquet(s"$indexDir/docs/epoch=$epochId")
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, indexDir, s"$indexDir/docs", checkpoint) {
+      (batch, e) =>
+        val b = e.pin(batch) // both index tables scan the batch
+        Seq(
+          s"$indexDir/dfs" -> batchDf(b),
+          s"$indexDir/docs" -> b.groupBy(col("source"))
+            .agg(countDistinct(col("doc_id")).as("docs")))
+          .map { case (root, df) =>
+            root -> df.withColumn("epoch_orig", lit(e.id)) }
+    }
 
   /** One batch's contribution: per-(source, shingle) document frequency
     * over per-doc DISTINCT shingles (the q124 relation). */

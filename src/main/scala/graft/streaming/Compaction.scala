@@ -6,16 +6,18 @@ import org.apache.spark.sql.functions._
 
 /** Shared crash-safe compaction protocol for epoch-partitioned streaming
   * state tables, and the marker-aware reads that go with it. Every
-  * epoch-folded table folds and reads through here: the gated streams of
-  * [[EpochState.startGated]] ([[BlocklistStream]], [[ClassifierStream]],
-  * [[WebCorpusStream]], [[SpanStream]], [[PerplexityStream]],
-  * [[SketchStream]], [[ManifestStream]]) and [[Scd2Stream]],
-  * [[WinnowStream]], [[BoilerplateStream]], [[RecrawlStream]],
-  * [[VectorDedupStream]], [[TokenStatsStream]], [[StreamingDedup]],
-  * [[BloomFilterStream]] and [[PurgeStream]], each with its own fold.
-  * [[NoveltyStream]] only probes through [[priorEpochs]].
-  * [[ManifestReconcileStream]] (snap-partitioned generations) and
-  * [[LayoutStream]] (pointer generations) keep their own compaction.
+  * epoch-folded table folds and reads through here, each with its own
+  * fold: the streams on [[EpochState.start]] ([[WinnowStream]],
+  * [[BoilerplateStream]], [[RecrawlStream]], [[VectorDedupStream]],
+  * [[TokenStatsStream]], [[StreamingDedup]], [[BloomFilterStream]],
+  * [[PurgeStream]]), those on its gated case [[EpochState.startGated]]
+  * ([[BlocklistStream]], [[ClassifierStream]], [[WebCorpusStream]],
+  * [[SpanStream]], [[PerplexityStream]], [[SketchStream]],
+  * [[ManifestStream]]) and [[Scd2Stream]]. [[NoveltyStream]] only
+  * probes through [[priorEpochs]]; [[DsirStream]] and [[QualityStream]]
+  * keep every epoch's report. [[ManifestReconcileStream]]
+  * (snap-partitioned generations) and [[LayoutStream]] (pointer
+  * generations) keep their own compaction.
   *
   * MAX/distinct-merged tables are idempotent under a crashed compaction,
   * but SUM- and occurrence-counted tables are not: a crash between
@@ -61,6 +63,13 @@ private[streaming] object Compaction {
       next: Long): Boolean =
     try fs.exists(new Path(s"$root/epoch=$next/_SUCCESS"))
     catch { case _: Throwable => false }
+
+  /** The highest epoch a compaction of `root` has folded away, or -1: a
+    * control file that outlives the folded directories, so a new lineage
+    * still numbers after them ([[EpochState.lineageBase]]). */
+  def foldedUpTo(fs: FileSystem, root: String): Long =
+    EpochState.readSmall(fs, new Path(root, "_folded_upto"))
+      .map(_.toLong).getOrElse(-1L)
 
   /** Epoch partitions a reader must EXCLUDE right now (marker-resolved). */
   def excludedEpochs(fs: FileSystem, root: String): Set[Long] =
@@ -131,9 +140,12 @@ private[streaming] object Compaction {
         val nums = epochs
           .map(_.getPath.getName.stripPrefix("epoch=").toLong)
         val next = nums.min - 1
-        // marker FIRST: until the folded gen's _SUCCESS lands, readers
-        // resolve the marker to "ignore epoch=next" — a crash mid-fold
-        // leaves the originals authoritative, never both generations
+        EpochState.writeSmall(fs, new Path(root, "_folded_upto"),
+          (nums :+ foldedUpTo(fs, root)).max.toString)
+        // marker before the fold: until the folded gen's _SUCCESS lands,
+        // readers resolve the marker to "ignore epoch=next" — a crash
+        // mid-fold leaves the originals authoritative, never both
+        // generations
         val out = fs.create(marker(root), true)
         try out.write(s"$next;${nums.mkString(";")}".getBytes("UTF-8"))
         finally out.close()

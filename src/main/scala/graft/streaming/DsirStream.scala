@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Recipe
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -21,9 +21,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * integer sum/min/max of per-token importance, target-like count. All
   * columns are counts or exact integer sums, so per-epoch reports SUM to
   * the whole-corpus report (the [[QualityStream]] property; the spec
-  * proves both stream ≡ batch and replay idempotence). Each epoch
-  * OVERWRITES its own `reportDir/epoch=N` partition — at-least-once
-  * foreachBatch stays exactly-once with zero state.
+  * proves both stream ≡ batch and replay idempotence). The report is
+  * written by [[EpochState.start]], so a replay under the same
+  * checkpoint stays exactly-once with zero state; a fresh checkpoint
+  * that re-delivers documents already scored adds them again.
   *
   * Model-freshness posture at scale: the frozen model is the DSIR
   * deployment shape (score with a trained importance model; retrain
@@ -37,13 +38,9 @@ object DsirStream {
   def start(newDocs: DataFrame, model: Array[Long], reportDir: String,
       checkpoint: String): StreamingQuery = {
     val impPt = Recipe.dsirImpPt(model)
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        Recipe.dsirReport(batch.toDF().withColumn("imp_pt", impPt))
-          .write.mode("overwrite").parquet(s"$reportDir/epoch=$epochId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, reportDir, reportDir, checkpoint) { (batch, _) =>
+      Seq(reportDir -> Recipe.dsirReport(batch.withColumn("imp_pt", impPt)))
+    }
   }
 
   /** Cross-epoch cumulative report — identical in shape and (by the

@@ -4,28 +4,40 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.collection.mutable.ArrayBuffer
 
-/** Shared plumbing for epoch-partitioned streaming state directories:
-  * tiny control files, the per-checkpoint-lineage epoch base (used by
-  * every lineage-numbered stream — [[Scd2Stream]],
-  * [[ManifestReconcileStream]], [[LayoutStream]], [[PurgeStream]],
-  * [[BloomFilterStream]] and the gated streams below), and the one
-  * id-gated epoch step [[startGated]] that [[BlocklistStream]],
+/** The one epoch step every epoch-partitioned stream in this package
+  * runs on, plus its plumbing: tiny control files and the
+  * per-checkpoint-lineage epoch base. [[start]] is the ungated step
+  * ([[StreamingDedup.startIncremental]], [[WinnowStream]],
+  * [[VectorDedupStream]], [[RecrawlStream]], [[NoveltyStream]],
+  * [[TokenStatsStream]], [[BoilerplateStream]], [[DsirStream]],
+  * [[QualityStream]], [[BloomFilterStream]], [[PurgeStream]]);
+  * [[startGated]] is its id-gated case ([[BlocklistStream]],
   * [[ClassifierStream]], [[WebCorpusStream]], [[SpanStream]],
-  * [[PerplexityStream]], [[SketchStream]] and [[ManifestStream]] run on.
+  * [[PerplexityStream]], [[SketchStream]], [[ManifestStream]]).
+  * [[Scd2Stream]], [[ManifestReconcileStream]] and [[LayoutStream]] keep
+  * their own loops over [[lineageBase]].
+  *
+  * Exactly-once: a micro-batch writes each of its tables to
+  * `<root>/epoch=<base + epochId>` with overwrite, so a replay of the
+  * same epoch id (same checkpoint) overwrites its own partitions instead
+  * of duplicating rows, and a probe that reads every epoch but its own
+  * ([[Compaction.priorEpochs]]) never sees its earlier attempt.
   *
   * Lineage base: foreachBatch's epochId restarts at 0 under a fresh
   * checkpoint, so partition names derived from it alone collide across
   * lineages — the recovery pattern "restart with a new checkpoint" would
   * clobber a live `epoch=0` partition. Each lineage therefore writes at
   * `epoch = base + epochId`, where base is assigned ONCE per lineage
-  * (max existing epoch + 1, persisted in a `_lineage_<md5(checkpoint)>`
-  * marker so same-lineage restarts reuse it and replayed epochs still
-  * overwrite their own partition). A redelivery under a fresh lineage
-  * lands in a FRESH partition as duplicate rows — the consumer's fold
-  * and replay guards must absorb duplicates (they do: supersession folds
-  * and row-level clock predicates), and compaction's `.distinct()`
-  * physically removes them.
+  * (one more than every existing or folded epoch, persisted in a
+  * `_lineage_<md5(checkpoint)>` marker so same-lineage restarts reuse
+  * it and replayed epochs still overwrite their own partition). A
+  * redelivery under a fresh lineage lands in a FRESH partition as
+  * duplicate rows — the consumer's fold and replay guards must absorb
+  * duplicates (they do: the seen gate, supersession folds, row-level
+  * clock predicates, OR/distinct folds), except for the additive report
+  * tables, which count a re-delivered document again.
   *
   * Everything goes through the Hadoop `FileSystem` API so the same code
   * runs on local disk, HDFS, or an object store; control-file writes are
@@ -55,11 +67,13 @@ private[streaming] object EpochState {
   }
 
   /** The epoch-number base for this checkpoint lineage over the
-    * epoch-partitioned table at `root` (marker files live in its parent
-    * `stateDir`, out of compaction's way): reused from the lineage's
-    * marker when present, else max(max existing epoch, `floor`) + 1 —
-    * collision-free with every prior lineage AND with compacted
-    * generations.
+    * epoch-partitioned table at `root` (marker files live in `stateDir`,
+    * out of compaction's way): reused from the lineage's marker when
+    * present, else one more than the highest of every existing epoch,
+    * every epoch a compaction folded away ([[Compaction.foldedUpTo]])
+    * and `floor` — collision-free with every prior lineage, also where
+    * an epoch number is stored as data (a row's origin or sighting
+    * epoch) and survives in a compacted generation.
     *
     * `floor` exists because on-disk epoch directories are NOT a durable
     * high-water mark: a consumer whose maintenance sweep deletes covered
@@ -76,21 +90,78 @@ private[streaming] object EpochState {
       "_lineage_" + graft.operators.ArtifactStore.md5Hex(checkpoint).take(16))
     readSmall(fs, marker).map(_.toLong).getOrElse {
       val rootPath = new Path(root)
-      val maxEpoch =
-        if (!fs.exists(rootPath)) -1L
+      val epochs =
+        if (!fs.exists(rootPath)) Nil
         else fs.listStatus(rootPath).toSeq
           .map(_.getPath.getName)
           .filter(_.startsWith("epoch="))
           .map(_.stripPrefix("epoch=").toLong)
-          .foldLeft(-1L)(math.max)
-      val base = math.max(maxEpoch, floor) + 1
+      val base = (epochs :+ Compaction.foldedUpTo(fs, root) :+ floor).max + 1
       fs.mkdirs(new Path(stateDir))
       writeSmall(fs, marker, base.toString)
       base
     }
   }
 
-  /** Starts the id-gated epoch step over a stream of rows keyed by
+  /** One micro-batch of [[start]]: its epoch number in this lineage, the
+    * DataFrames its step pins for the epoch's writes, and the actions it
+    * defers until every table of the epoch is on disk. */
+  final class Epoch private[EpochState] (val id: Long) {
+    private[EpochState] val pinned = ArrayBuffer.empty[DataFrame]
+    private[EpochState] val deferred = ArrayBuffer.empty[() => Unit]
+
+    /** Persists `df` until the epoch's tables are written. */
+    def pin(df: DataFrame): DataFrame = { pinned += df.persist(); df }
+
+    /** Runs `f` after the epoch's last table is written (in call order). */
+    def afterWrite(f: => Unit): Unit = deferred += (() => f)
+  }
+
+  /** Starts the epoch step over `rows`: the lineage base comes from
+    * `last`, the root of the table every micro-batch writes last; then
+    * each micro-batch runs `step`, writes each returned (root, table) to
+    * `<root>/epoch=<epoch>` in order, runs the step's deferred actions
+    * and unpersists what it pinned. Probes publish inside `step` and must
+    * materialize before returning, so a batch never sees its own rows.
+    *
+    * Taking the base from the root written last makes a fresh-lineage
+    * restart after a crash between two writes reuse the crashed epoch's
+    * number and overwrite its partial state. */
+  def start(rows: DataFrame, stateDir: String, last: String,
+      checkpoint: String)(
+      step: (DataFrame, Epoch) => Seq[(String, DataFrame)]): StreamingQuery = {
+    val base = lineageBase(fs(rows.sparkSession, stateDir), stateDir, last,
+      checkpoint)
+    rows.writeStream
+      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+        val e = new Epoch(base + epochId)
+        try {
+          step(batch.toDF(), e).foreach(write(e.id))
+          e.deferred.foreach(_())
+        } finally e.pinned.foreach(_.unpersist())
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
+  }
+
+  private def write(epoch: Long)(table: (String, DataFrame)): Unit =
+    table._2.write.mode("overwrite").parquet(s"${table._1}/epoch=$epoch")
+
+  /** Writes `tables` as the base generation `<root>/epoch=-1`, then the
+    * `_seeded` control file in `stateDir` — unless that file exists.
+    * Compaction folds `epoch=-1` away but never touches the control file,
+    * so a restart after a compaction does not seed twice. */
+  def seedOnce(spark: SparkSession, stateDir: String)(
+      tables: => Seq[(String, DataFrame)]): Unit = {
+    val done = new Path(stateDir, "_seeded")
+    val fs = this.fs(spark, stateDir)
+    if (readSmall(fs, done).isEmpty) {
+      tables.foreach(write(-1L))
+      writeSmall(fs, done, "-1")
+    }
+  }
+
+  /** The id-gated case of [[start]] over a stream of rows keyed by
     * `doc_id`: each micro-batch drops the ids already recorded in
     * `$stateDir/seen` by any OTHER epoch ([[Compaction.priorEpochs]], so
     * a replay never gates itself out), persists the new rows, writes
@@ -99,12 +170,8 @@ private[streaming] object EpochState {
     * `publish(epoch, n_new_docs)`. `seenView` narrows the gate's view of
     * `seen` (it receives the prior epochs with their `epoch` column).
     *
-    * Two orderings carry the exactly-once argument. The lineage base is
-    * derived from the `seen` root, so a fresh-lineage restart after a
-    * crash between the state write and the `seen` write reuses the
-    * crashed epoch's number and overwrites its partial state. And `seen`
-    * is written after every state table, so an epoch whose ids are gated
-    * out has all of its state on disk. */
+    * `seen` is the table written last, so it carries the lineage base,
+    * and an epoch whose ids are gated out has all of its state on disk. */
   def startGated(docs: DataFrame, stateDir: String, checkpoint: String,
       publish: (Long, Long) => Unit,
       seenView: DataFrame => DataFrame = identity,
@@ -112,30 +179,16 @@ private[streaming] object EpochState {
       tables: DataFrame => Seq[(String, DataFrame)]): StreamingQuery = {
     val spark = docs.sparkSession
     val seenRoot = s"$stateDir/seen"
-    val base = lineageBase(fs(spark, stateDir), stateDir, seenRoot,
-      checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val seen = Compaction.priorEpochs(spark, seenRoot, epoch)
-          .map(seenView(_).select(col("doc_id")))
-          .getOrElse(batch.limit(0).select(col("doc_id")))
-        val fresh = batch.toDF()
-          .dropDuplicates("doc_id")
-          .join(seen, Seq("doc_id"), "left_anti")
-        fresh.persist()
-        try {
-          val n = fresh.count()
-          (tables(fresh) :+ ("seen" -> fresh.select(col("doc_id"))))
-            .foreach { case (name, df) =>
-              df.write.mode("overwrite")
-                .parquet(s"$stateDir/$name/epoch=$epoch")
-            }
-          commit(epoch)
-          publish(epoch, n)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    start(docs, stateDir, seenRoot, checkpoint) { (batch, e) =>
+      val seen = Compaction.priorEpochs(spark, seenRoot, e.id)
+        .map(seenView(_).select(col("doc_id")))
+        .getOrElse(batch.limit(0).select(col("doc_id")))
+      val fresh = e.pin(batch.dropDuplicates("doc_id")
+        .join(seen, Seq("doc_id"), "left_anti"))
+      val n = fresh.count()
+      e.afterWrite { commit(e.id); publish(e.id, n) }
+      (tables(fresh) :+ ("seen" -> fresh.select(col("doc_id"))))
+        .map { case (name, df) => s"$stateDir/$name" -> df }
+    }
   }
 }

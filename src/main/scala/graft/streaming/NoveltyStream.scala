@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Mirror
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -20,12 +20,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * a corpus through in doc_id order, batch by batch, reproduces q105's
   * output row for row (NoveltyStreamSpec proves it, 3 batches deep).
   *
-  * Index + state story at scale (the [[StreamingDedup.startIncremental]]
-  * layout): NO streaming state — the seen-shingle set is a parquet table
-  * partitioned by epoch under `indexDir/seen/epoch=N`. A replayed epoch
-  * OVERWRITES its own partition and the probe reads every epoch EXCEPT
-  * its own, so foreachBatch's at-least-once replay keeps both the index
-  * and the scores exactly-once. Only distinct-new shingles are appended
+  * Index + state story at scale: NO streaming state — the seen-shingle
+  * set is a parquet table partitioned by epoch under `indexDir/seen`,
+  * written by [[EpochState.start]] (which carries the replay and lineage
+  * argument). Only distinct-new shingles are appended
   * (the index grows sublinearly as the stream saturates — the novelty
   * signal and the index growth rate are the same curve). At 100 TB the
   * index column would be the 60-bit shingle hash ([[Mirror.hash60]],
@@ -43,38 +41,28 @@ object NoveltyStream {
       publish: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = newDocs.sparkSession
     val root = s"$indexDir/seen"
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.toDF()
-        b.persist() // scoring + the index append both scan the batch
-        try {
-          val ws = b.select(col("doc_id"),
-            Mirror.shingles3(col("text")).as("sg"))
-          val owners = ws
-            .select(col("doc_id"), explode(col("sg")).as("s"))
-            .groupBy(col("s")).agg(min(col("doc_id")).as("owner"))
-          val novelOwners = Compaction.priorEpochs(spark, root, epochId)
-            .map(idx => owners.join(idx.select(col("s")), Seq("s"),
-              "left_anti"))
-            .getOrElse(owners).persist()
-          try {
-            novelOwners.count() // pin before the index mutates underneath
-            val nov = novelOwners.groupBy(col("owner").as("doc_id"))
-              .agg(count(lit(1)).as("n_novel"))
-            val out = ws.join(nov, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                size(col("sg")).cast(LongType).as("n_shingles"),
-                coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-                when(size(col("sg")) > 0,
-                  coalesce(col("n_novel"), lit(0L)).cast(DoubleType) /
-                    size(col("sg")).cast(DoubleType)).as("novelty_frac"))
-            publish(out, epochId)
-            novelOwners.select(col("s"))
-              .write.mode("overwrite").parquet(s"$root/epoch=$epochId")
-          } finally { novelOwners.unpersist(); () }
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, indexDir, root, checkpoint) { (batch, e) =>
+      // scoring + the index append both scan the batch
+      val ws = e.pin(batch).select(col("doc_id"),
+        Mirror.shingles3(col("text")).as("sg"))
+      val owners = ws
+        .select(col("doc_id"), explode(col("sg")).as("s"))
+        .groupBy(col("s")).agg(min(col("doc_id")).as("owner"))
+      val novelOwners = e.pin(Compaction.priorEpochs(spark, root, e.id)
+        .map(idx => owners.join(idx.select(col("s")), Seq("s"),
+          "left_anti"))
+        .getOrElse(owners))
+      val nov = novelOwners.groupBy(col("owner").as("doc_id"))
+        .agg(count(lit(1)).as("n_novel"))
+      val out = ws.join(nov, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          size(col("sg")).cast(LongType).as("n_shingles"),
+          coalesce(col("n_novel"), lit(0L)).as("n_novel"),
+          when(size(col("sg")) > 0,
+            coalesce(col("n_novel"), lit(0L)).cast(DoubleType) /
+              size(col("sg")).cast(DoubleType)).as("novelty_frac"))
+      publish(out, e.id)
+      Seq(root -> novelOwners.select(col("s")))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,10 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * requests (within a batch, across batches, or via at-least-once
   * redelivery) purge once, exactly like the batch set-semantics.
   *
-  * State layout at scale (the [[StreamingDedup]] epoch discipline): NO
-  * streaming state store — two epoch-partitioned parquet tables under
-  * `stateDir`: `purged/epoch=E/` (doc_id, source, toks — the resolved,
-  * deduplicated request set) and `affected/epoch=E/` (doc_a, doc_b,
+  * State layout at scale: NO streaming state store — two
+  * epoch-partitioned parquet tables under `stateDir`, written by
+  * [[EpochState.start]]: `purged/` (doc_id, source, toks — the
+  * resolved, deduplicated request set) and `affected/` (doc_a, doc_b,
   * source — cascade pairs already counted, keyed exactly like the batch
   * audit's per-source attribution). Per-batch cost is O(batch + state +
   * the pair artifact), never O(corpus): the batch resolves against the
@@ -36,9 +36,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Exactly-once accounting under at-least-once foreachBatch: state reads
   * exclude the CURRENT epoch partition, so a replayed batch recomputes
-  * the identical delta and overwrites its own partition (idempotent);
-  * epoch numbers are collision-free across checkpoint lineages
-  * ([[EpochState.lineageBase]]). `publish` fires after the state commit
+  * the identical delta and overwrites its own partition
+  * ([[EpochState]]). `publish` fires after the state commit
   * (at-least-once; consumers key by epoch). */
 object PurgeStream {
 
@@ -65,52 +64,42 @@ object PurgeStream {
     val spark = requests.sparkSession
     val purgedRoot = s"$stateDir/purged"
     val affectedRoot = s"$stateDir/affected"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, purgedRoot, checkpoint)
-    requests.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
+    EpochState.start(requests, stateDir, affectedRoot, checkpoint) {
+      (batch, e) =>
         def state(root: String, cols: Seq[String]): DataFrame =
-          Compaction.priorEpochs(spark, root, epoch)
+          Compaction.priorEpochs(spark, root, e.id)
             .getOrElse(empty(spark)).select(cols.map(col): _*)
         // resolve + dedupe: set semantics over the accumulated requests
         val resolved = corpus
           .join(broadcast(batch.select(col("doc_id")).distinct()),
             Seq("doc_id"))
-        val newPurged = resolved
+        val newPurged = e.pin(resolved
           .join(state(purgedRoot, Seq("doc_id")), Seq("doc_id"),
             "left_anti")
-          .select(col("doc_id"), col("source"), col("toks"))
-        newPurged.persist()
-        try {
-          // cascade into the pair artifact, attributed per purged
-          // endpoint's source (a pair purged from two sources counts in
-          // both audits — the batch UNION ALL + DISTINCT, incrementally)
-          val ids = newPurged.select(col("doc_id"), col("source"))
-          val touched = pairs
-            .join(broadcast(ids.withColumnRenamed("doc_id", "doc_a")),
-              Seq("doc_a"))
-            .select(col("doc_a"), col("doc_b"), col("source"))
-            .unionByName(pairs
-              .join(broadcast(ids.withColumnRenamed("doc_id", "doc_b")),
-                Seq("doc_b"))
-              .select(col("doc_a"), col("doc_b"), col("source")))
-            .distinct()
-          val newAffected = touched
-            .join(state(affectedRoot, Seq("doc_a", "doc_b", "source")),
-              Seq("doc_a", "doc_b", "source"), "left_anti")
-          val delta = newPurged.agg(
-            count(lit(1)), coalesce(sum(col("toks")), lit(0L))).collect()(0)
-          val nAffected = newAffected.count()
-          newPurged.write.mode("overwrite")
-            .parquet(s"$purgedRoot/epoch=$epoch")
-          newAffected.write.mode("overwrite")
-            .parquet(s"$affectedRoot/epoch=$epoch")
-          publish(epoch, delta.getLong(0), delta.getLong(1), nAffected)
-        } finally { newPurged.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+          .select(col("doc_id"), col("source"), col("toks")))
+        // cascade into the pair artifact, attributed per purged
+        // endpoint's source (a pair purged from two sources counts in
+        // both audits — the batch UNION ALL + DISTINCT, incrementally)
+        val ids = newPurged.select(col("doc_id"), col("source"))
+        val touched = pairs
+          .join(broadcast(ids.withColumnRenamed("doc_id", "doc_a")),
+            Seq("doc_a"))
+          .select(col("doc_a"), col("doc_b"), col("source"))
+          .unionByName(pairs
+            .join(broadcast(ids.withColumnRenamed("doc_id", "doc_b")),
+              Seq("doc_b"))
+            .select(col("doc_a"), col("doc_b"), col("source")))
+          .distinct()
+        val newAffected = touched
+          .join(state(affectedRoot, Seq("doc_a", "doc_b", "source")),
+            Seq("doc_a", "doc_b", "source"), "left_anti")
+        val delta = newPurged.agg(
+          count(lit(1)), coalesce(sum(col("toks")), lit(0L))).collect()(0)
+        val nAffected = newAffected.count()
+        e.afterWrite(publish(e.id, delta.getLong(0), delta.getLong(1),
+          nAffected))
+        Seq(purgedRoot -> newPurged, affectedRoot -> newAffected)
+    }
   }
 
   /** The accumulated audit in the batch report's exact shape (q136):

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Quality
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,12 +23,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * another grouping key (QualityStreamSpec proves both properties, 3
   * batches deep).
   *
-  * Report-table story at scale (the [[StreamingDedup.startIncremental]]
-  * layout): NO streaming state — each epoch OVERWRITES its own
-  * `reportDir/epoch=N` partition, so foreachBatch's at-least-once replay
-  * keeps the table exactly-once; readers aggregate across epoch
-  * partitions (tiny: sources × epochs rows). Reading the whole report
-  * table back therefore needs no dedup pass. */
+  * Report-table story at scale: NO streaming state — the table is
+  * written by [[EpochState.start]], so a replay under the same
+  * checkpoint stays exactly-once, while a fresh checkpoint that
+  * re-delivers documents already ingested adds them again; readers
+  * aggregate across epoch partitions (tiny: sources × epochs rows).
+  * Reading the whole report table back therefore needs no dedup pass. */
 object QualityStream {
 
   /** Starts the monitor. The report under `reportDir/epoch=N` has q112's
@@ -36,13 +36,9 @@ object QualityStream {
     * drop_stopword, kept, kept_tokens). */
   def start(newDocs: DataFrame, reportDir: String, checkpoint: String)
       : StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        Quality.funnelReport(Quality.funnelMetrics(batch.toDF()))
-          .write.mode("overwrite").parquet(s"$reportDir/epoch=$epochId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, reportDir, reportDir, checkpoint) { (batch, _) =>
+      Seq(reportDir -> Quality.funnelReport(Quality.funnelMetrics(batch)))
+    }
 
   /** The cumulative cross-epoch view of the report table — identical in
     * shape and (by the sum property) in values to running the batch

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -22,11 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * epoch 1 and arrives identical to that change in epoch 2 is `unchanged`
   * (vs its latest state), not `changed` (vs its first sighting).
   *
-  * Index + replay story at scale (the [[StreamingDedup]] layout): NO
-  * streaming state — parquet partitioned by epoch under `indexDir/fps`; a
-  * replayed epoch OVERWRITES its own partition and probes only earlier
-  * epochs, so at-least-once foreachBatch keeps both reports and index
-  * exactly-once. `seen_epoch` rides every row as a DATA column, which
+  * Index + replay story at scale: NO streaming state — parquet
+  * partitioned by epoch under `indexDir/fps`, written by
+  * [[EpochState.start]] (which carries the replay and lineage
+  * argument). `seen_epoch` rides every row as a DATA column, which
   * makes the distinct fold of its [[Compaction]] lossless for the
   * latest-per-id resolution. The probe join is keyed on the primary key
   * (no skew); only (doc_id, source, 32-byte fp) rows move — never
@@ -43,38 +42,33 @@ object RecrawlStream {
       publish: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = newDocs.sparkSession
     val root = s"$indexDir/fps"
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val entries = batch.select(col("doc_id"), col("source"),
-          md5(col("text").cast("binary")).as("fp"),
-          lit(epochId).as("seen_epoch"))
-        entries.persist() // probe + index append both scan the batch
-        try {
-          val latest = Compaction.priorEpochs(spark, root, epochId)
-            .map(_.groupBy(col("doc_id"))
-              .agg(max(struct(col("seen_epoch"), col("fp"))).as("s"))
-              .select(col("doc_id"), col("s.fp").as("old_fp")))
-            .getOrElse(
-              entries.limit(0).select(col("doc_id"), col("fp").as("old_fp")))
-          val report = entries.join(latest, Seq("doc_id"), "left_outer")
-            .select(col("source"),
-              when(col("old_fp").isNull, "added")
-                .when(col("old_fp") =!= col("fp"), "changed")
-                .otherwise("unchanged").as("change"))
-            .groupBy(col("source"))
-            .agg(
-              sum(when(col("change") === "added", 1L).otherwise(0L))
-                .as("n_added"),
-              sum(when(col("change") === "changed", 1L).otherwise(0L))
-                .as("n_changed"),
-              sum(when(col("change") === "unchanged", 1L).otherwise(0L))
-                .as("n_unchanged"))
-          publish(report, epochId)
-          entries.write.mode("overwrite").parquet(s"$root/epoch=$epochId")
-        } finally { entries.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, indexDir, root, checkpoint) { (batch, e) =>
+      // probe + index append both scan the batch's entries
+      val entries = e.pin(batch.select(col("doc_id"), col("source"),
+        md5(col("text").cast("binary")).as("fp"),
+        lit(e.id).as("seen_epoch")))
+      val latest = Compaction.priorEpochs(spark, root, e.id)
+        .map(_.groupBy(col("doc_id"))
+          .agg(max(struct(col("seen_epoch"), col("fp"))).as("s"))
+          .select(col("doc_id"), col("s.fp").as("old_fp")))
+        .getOrElse(
+          entries.limit(0).select(col("doc_id"), col("fp").as("old_fp")))
+      val report = entries.join(latest, Seq("doc_id"), "left_outer")
+        .select(col("source"),
+          when(col("old_fp").isNull, "added")
+            .when(col("old_fp") =!= col("fp"), "changed")
+            .otherwise("unchanged").as("change"))
+        .groupBy(col("source"))
+        .agg(
+          sum(when(col("change") === "added", 1L).otherwise(0L))
+            .as("n_added"),
+          sum(when(col("change") === "changed", 1L).otherwise(0L))
+            .as("n_changed"),
+          sum(when(col("change") === "unchanged", 1L).otherwise(0L))
+            .as("n_unchanged"))
+      publish(report, e.id)
+      Seq(root -> entries)
+    }
   }
 
   /** Offline small-files maintenance ([[Compaction]], distinct fold —

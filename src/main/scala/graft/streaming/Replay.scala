@@ -138,8 +138,8 @@ object Replay {
     drain(StreamingDedup.startIncremental(
       fileStream(spark, new Path(att, "stage").toString, schema),
       base, new Path(att, "index").toString,
-      new Path(att, "ckpt").toString) { (m, epochId) =>
-      m.write.mode("overwrite").parquet(s"$matchesRoot/epoch=$epochId")
+      new Path(att, "ckpt").toString) { (m, epoch) =>
+      m.write.mode("overwrite").parquet(s"$matchesRoot/epoch=$epoch")
     })
   }
 

@@ -49,16 +49,14 @@ object StreamingDedup {
     * after the offline index build, not only the daily base.
     *
     * Index layout under `indexDir`: `bands/epoch=N/` and
-    * `shingles/epoch=N/` parquet (the base corpus loads as `epoch=-1`).
-    * Per-epoch subdirectories make the append IDEMPOTENT: a replayed
-    * micro-batch overwrites its own epoch directory rather than
-    * duplicating rows, so the at-least-once replay contract of
-    * `foreachBatch` keeps the index exactly-once. At 100 TB this is the
-    * production shape — the index is a partitioned table appended per
-    * ingest window, compacted offline; the capped-bucket window is
-    * applied at probe time ([[Dedup.incrementalMatchesPre]]), which makes
-    * the appended index equal a from-scratch rebuild row for row
-    * (StreamingDedupSpec proves it after N batches).
+    * `shingles/epoch=N/` parquet, written by [[EpochState.start]] (the
+    * base corpus is seeded once as `epoch=-1`, [[EpochState.seedOnce]]).
+    * At 100 TB this is the production shape — the index is a partitioned
+    * table appended per ingest window, compacted offline; the
+    * capped-bucket window is applied at probe time
+    * ([[Dedup.incrementalMatchesPre]]), which makes the appended index
+    * equal a from-scratch rebuild row for row (StreamingDedupSpec proves
+    * it after N batches).
     *
     * `publish` must MATERIALIZE its matches (write/collect) before
     * returning — it runs before the batch's own bands are appended, which
@@ -70,36 +68,20 @@ object StreamingDedup {
     val spark = baseDocs.sparkSession
     val bandsRoot = s"$indexDir/bands"
     val shRoot = s"$indexDir/shingles"
-    def epochDir(root: String, epoch: Long) = s"$root/epoch=$epoch"
-    // seed the persisted index from the offline base corpus exactly once
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(
-        epochDir(bandsRoot, -1L), "_SUCCESS"))) {
-      Dedup.minhashBandsOf(baseDocs)
-        .write.mode("overwrite").parquet(epochDir(bandsRoot, -1L))
-      Dedup.shingleSetsOf(baseDocs)
-        .write.mode("overwrite").parquet(epochDir(shRoot, -1L))
+    def tables(docs: DataFrame) = Seq(
+      bandsRoot -> Dedup.minhashBandsOf(docs),
+      shRoot -> Dedup.shingleSetsOf(docs))
+    EpochState.seedOnce(spark, indexDir)(tables(baseDocs))
+    EpochState.start(newDocs, indexDir, shRoot, checkpoint) { (batch, e) =>
+      val b = e.pin(batch) // probe + two index appends all scan the batch
+      // every epoch but this one (the base `epoch=-1` included): a
+      // replayed batch must not match its own rows
+      def prior(root: String) =
+        Compaction.priorEpochs(spark, root, e.id).get.drop("epoch")
+      publish(Dedup.incrementalMatchesPre(b, prior(bandsRoot),
+        prior(shRoot)), e.id)
+      tables(b)
     }
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.toDF()
-        b.persist() // probe + two index appends all scan the batch
-        try {
-          // every epoch but this one (the base `epoch=-1` seeded above
-          // included): a replayed batch must not match its own rows
-          def prior(root: String) =
-            Compaction.priorEpochs(spark, root, epochId).get.drop("epoch")
-          publish(Dedup.incrementalMatchesPre(b, prior(bandsRoot),
-            prior(shRoot)), epochId)
-          Dedup.minhashBandsOf(b)
-            .write.mode("overwrite").parquet(epochDir(bandsRoot, epochId))
-          Dedup.shingleSetsOf(b)
-            .write.mode("overwrite").parquet(epochDir(shRoot, epochId))
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
   }
 
   /** Offline index maintenance: fold every per-epoch partition of the

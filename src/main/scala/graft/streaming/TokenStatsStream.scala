@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Mirror
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -16,12 +16,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * /root/reference/spark/covid_streaming.py:139-156 — the shape this index
   * exists to avoid at 100 TB.)
   *
-  * Exactly-once story (the [[StreamingDedup.startIncremental]] layout): NO
-  * streaming state; each epoch OVERWRITES its own `epoch=N` partition, so
-  * foreachBatch's at-least-once replay keeps the index exactly-once.
-  * Counts are additive and each document is ingested in exactly one epoch,
-  * so cross-epoch SUMS equal the from-scratch batch aggregation row for
-  * row (TokenStatsStreamSpec proves it 3 epochs deep).
+  * Exactly-once story: NO streaming state; the index is written by
+  * [[EpochState.start]], so a replay under the same checkpoint stays
+  * exactly-once; a fresh checkpoint that re-delivers documents already
+  * ingested adds them again. Counts are additive and each document is
+  * ingested in exactly one epoch, so cross-epoch SUMS equal the
+  * from-scratch batch aggregation row for row (TokenStatsStreamSpec
+  * proves it 3 epochs deep).
   *
   * Compaction is the shared [[Compaction]] protocol with a distinct
   * fold: rows carry their origin epoch as a STORED column (`epoch_orig`),
@@ -37,14 +38,9 @@ object TokenStatsStream {
     * docs). */
   def start(newDocs: DataFrame, indexDir: String, checkpoint: String)
       : StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        batchStats(batch.toDF())
-          .withColumn("epoch_orig", lit(epochId))
-          .write.mode("overwrite").parquet(s"$indexDir/epoch=$epochId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, indexDir, indexDir, checkpoint) { (batch, e) =>
+      Seq(indexDir -> batchStats(batch).withColumn("epoch_orig", lit(e.id)))
+    }
 
   /** One batch's contribution: per-(source, word) occurrence and
     * containing-doc counts. Map-side partial aggregation collapses each

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming semantic near-dup detection for EMBEDDINGS — the vector
@@ -22,11 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch twin (all cross-epoch banded pairs) reproduces the streamed
   * matches exactly.
   *
-  * Index + replay story at scale (the [[StreamingDedup]] layout): NO
-  * streaming state — the index is parquet partitioned by epoch under
-  * `indexDir/sigs/epoch=N`; a replayed epoch OVERWRITES its own partition
-  * and probes only the index that exists before it, so at-least-once
-  * foreachBatch keeps both matches and index exactly-once. Entries carry
+  * Index + replay story at scale: NO streaming state — the index is
+  * parquet partitioned by epoch under `indexDir/sigs`, written by
+  * [[EpochState.start]] (which carries the replay and lineage
+  * argument). Entries carry
   * (vec_id, embedding, nrm, band_hi, band_lo): only (band, id) rows fan
   * out in the candidate join, and the stored embedding serves the exact
   * verification — at 100 TB the embedding column would be a PQ code
@@ -42,19 +41,14 @@ object VectorDedupStream {
       tau: Double)(publish: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = newVecs.sparkSession
     val root = s"$indexDir/sigs"
-    newVecs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val entries = Similarity.bandedEntries(batch.toDF())
-        entries.persist() // probe + index append both scan the batch
-        try {
-          val idx = Compaction.priorEpochs(spark, root, epochId)
-            .map(_.drop("epoch")).getOrElse(entries.limit(0))
-          publish(Similarity.bandedMatches(entries, idx, tau), epochId)
-          entries.write.mode("overwrite").parquet(s"$root/epoch=$epochId")
-        } finally { entries.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newVecs, indexDir, root, checkpoint) { (batch, e) =>
+      // probe + index append both scan the batch's entries
+      val entries = e.pin(Similarity.bandedEntries(batch))
+      val idx = Compaction.priorEpochs(spark, root, e.id)
+        .map(_.drop("epoch")).getOrElse(entries.limit(0))
+      publish(Similarity.bandedMatches(entries, idx, tau), e.id)
+      Seq(root -> entries)
+    }
   }
 
   /** Offline small-files maintenance: fold the per-epoch signature

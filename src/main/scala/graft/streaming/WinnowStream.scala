@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Recipe
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming overlap/clone detection — the ingest-path twin of the batch
@@ -22,13 +22,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ([[Recipe.winnowMatches]]) — so the appended index equals a
   * from-scratch rebuild, row for row.
   *
-  * Index + replay story at scale (the [[StreamingDedup]] layout): NO
-  * streaming state — the sketch is parquet partitioned by epoch under
-  * `indexDir/fps/epoch=N`; a replayed epoch OVERWRITES its own partition
-  * and probes only earlier rows (epoch filter), so at-least-once
-  * foreachBatch keeps both matches and index exactly-once. Sketch
-  * density is ~1/W of shingles — the index is a fraction of corpus
-  * size, ids + 60-bit hashes only, never text. */
+  * Index + replay story at scale: NO streaming state — the sketch is
+  * parquet partitioned by epoch under `indexDir/fps`, written by
+  * [[EpochState.start]] (which carries the replay and lineage
+  * argument). Sketch density is ~1/W of shingles — the index is a
+  * fraction of corpus size, ids + 60-bit hashes only, never text. */
 object WinnowStream {
 
   /** Starts the probe. `publish` receives per micro-batch the matches —
@@ -39,19 +37,14 @@ object WinnowStream {
       publish: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = newDocs.sparkSession
     val root = s"$indexDir/fps"
-    newDocs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val entries = Recipe.winnowEntries(batch.toDF())
-        entries.persist() // probe + index append both scan the batch
-        try {
-          val idx = Compaction.priorEpochs(spark, root, epochId)
-            .map(_.drop("epoch")).getOrElse(entries.limit(0))
-          publish(Recipe.winnowMatches(entries, idx), epochId)
-          entries.write.mode("overwrite").parquet(s"$root/epoch=$epochId")
-        } finally { entries.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    EpochState.start(newDocs, indexDir, root, checkpoint) { (batch, e) =>
+      // probe + index append both scan the batch's entries
+      val entries = e.pin(Recipe.winnowEntries(batch))
+      val idx = Compaction.priorEpochs(spark, root, e.id)
+        .map(_.drop("epoch")).getOrElse(entries.limit(0))
+      publish(Recipe.winnowMatches(entries, idx), e.id)
+      Seq(root -> entries)
+    }
   }
 
   /** Offline small-files maintenance ([[Compaction]], distinct fold —

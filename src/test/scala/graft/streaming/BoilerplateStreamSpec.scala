@@ -49,15 +49,13 @@ class BoilerplateStreamSpec extends AnyFunSuite with SparkTestSession {
       QDoc(4L, "w4a w4b w4c w4d w4e", "s"))
     val dir = java.nio.file.Files.createTempDirectory("bp-epochs")
     val indexDir = dir.resolve("index").toString
-    def run(ckpt: String, data: Seq[Seq[QDoc]]): Unit = {
-      val stream = MemoryStream[QDoc](spark)
-      val q = BoilerplateStream.start(stream.toDF(), indexDir,
-        dir.resolve(ckpt).toString)
-      try data.foreach { e =>
-        stream.addData(e: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    run("ckpt1", Seq(e0, e1))
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[QDoc](spark)
+    def start() = BoilerplateStream.start(stream.toDF(), indexDir, ckpt)
+    val q = start()
+    try Seq(e0, e1).foreach { e =>
+      stream.addData(e: _*); q.processAllAvailable()
+    } finally q.stop()
     val rep = BoilerplateStream.report(spark, indexDir).collect()
     val headerShingles = rep.filter(_.getAs[String]("sh")
       .forall(c => !c.isDigit))
@@ -67,9 +65,9 @@ class BoilerplateStreamSpec extends AnyFunSuite with SparkTestSession {
       assert(r.getAs[Long]("df") == 2L)
       assert(r.getAs[Long]("n_docs") == 4L)
     }
-    // replay the SAME two epochs under a fresh checkpoint: partitions
+    // a forced replay runs the last epoch again: its partitions
     // overwrite, report unchanged
-    run("ckpt2", Seq(e0, e1))
+    ForcedReplay(q, ckpt)(start())
     val rep2 = BoilerplateStream.report(spark, indexDir).collect()
     assert(rep.map(_.toString).toSeq == rep2.map(_.toString).toSeq,
       "replay changed the report")

@@ -55,16 +55,15 @@ class DsirStreamSpec extends AnyFunSuite with SparkTestSession {
       LDoc(2L, "der und die das", "s", "de"))
     val dir = java.nio.file.Files.createTempDirectory("dsir-replay")
     val reportDir = dir.resolve("report").toString
-    def run(ckpt: String): Map[(String, String), Seq[Long]] = {
-      val stream = MemoryStream[LDoc](spark)
-      val q = DsirStream.start(stream.toDF(), model, reportDir,
-        dir.resolve(ckpt).toString)
-      stream.addData(docs: _*)
-      try q.processAllAvailable() finally q.stop()
-      asMap(DsirStream.totals(spark, reportDir).collect())
-    }
-    val first = run("ckpt1")
-    val second = run("ckpt2") // same data replayed as epoch 0
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[LDoc](spark)
+    def start() = DsirStream.start(stream.toDF(), model, reportDir, ckpt)
+    val q = start()
+    stream.addData(docs: _*)
+    try q.processAllAvailable() finally q.stop()
+    val first = asMap(DsirStream.totals(spark, reportDir).collect())
+    ForcedReplay(q, ckpt)(start()) // epoch 0 runs again, same rows
+    val second = asMap(DsirStream.totals(spark, reportDir).collect())
     assert(first == second, "at-least-once replay must stay exactly-once")
     assert(first(("s", "en")).head == 1L)
     assert(first(("s", "de")).head == 1L)

@@ -45,29 +45,22 @@ class NoveltyStreamSpec extends AnyFunSuite with SparkTestSession {
     val dir = java.nio.file.Files.createTempDirectory("novelty-replay")
     val indexDir = dir.resolve("index").toString
     val text = "one two three four five"
-    def run(ckpt: String) = NoveltyStream.start(stream.toDF(), indexDir,
-      ckpt) { (out, epoch) =>
-      got ++= out.collect().map(r => (epoch, r.getLong(2), r.getDouble(3)))
+    val ckpt = dir.resolve("ckpt").toString
+    def run() = NoveltyStream.start(stream.toDF(), indexDir, ckpt) {
+      (out, epoch) =>
+        got ++= out.collect().map(r => (epoch, r.getLong(2), r.getDouble(3)))
     }
-    val q1 = run(dir.resolve("ckpt1").toString)
+    val q1 = run()
     try {
       stream.addData(Doc(1L, text))
       q1.processAllAvailable()
     } finally q1.stop()
     assert(got.toSeq == Seq((0L, 3L, 1.0)), "first sight: fully novel")
-    // fresh checkpoint -> the SAME data replays as epoch 0 against an
-    // index that already holds epoch 0's shingles; the epoch filter must
-    // keep the replay's verdict identical, not report zero novelty
+    // a forced replay runs epoch 0 again against an index that already
+    // holds epoch 0's shingles; the epoch filter must keep the replay's
+    // verdict identical, not report zero novelty
     got.clear()
-    val stream2 = MemoryStream[Doc](spark)
-    val q2 = NoveltyStream.start(stream2.toDF(), indexDir,
-      dir.resolve("ckpt2").toString) { (out, epoch) =>
-      got ++= out.collect().map(r => (epoch, r.getLong(2), r.getDouble(3)))
-    }
-    try {
-      stream2.addData(Doc(1L, text))
-      q2.processAllAvailable()
-    } finally q2.stop()
+    ForcedReplay(q1, ckpt)(run())
     assert(got.toSeq == Seq((0L, 3L, 1.0)),
       "replayed epoch must not count its own prior attempt as seen")
   }

@@ -48,18 +48,16 @@ class QualityStreamSpec extends AnyFunSuite with SparkTestSession {
       QDoc(2L, "tiny", "s"))
     val dir = java.nio.file.Files.createTempDirectory("quality-replay")
     val reportDir = dir.resolve("report").toString
-    def run(ckpt: String) = {
-      val stream = MemoryStream[QDoc](spark)
-      val q = QualityStream.start(stream.toDF(), reportDir,
-        dir.resolve(ckpt).toString)
-      stream.addData(docs: _*)
-      try q.processAllAvailable() finally q.stop()
-    }
-    run("ckpt1")
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[QDoc](spark)
+    def start() = QualityStream.start(stream.toDF(), reportDir, ckpt)
+    val q = start()
+    stream.addData(docs: _*)
+    try q.processAllAvailable() finally q.stop()
     val first = asMap(QualityStream.totals(spark, reportDir).collect())
-    // a fresh checkpoint replays the SAME data as epoch 0 — the epoch
+    // a forced replay runs epoch 0 again with the SAME data — the epoch
     // partition must be overwritten, leaving totals identical
-    run("ckpt2")
+    ForcedReplay(q, ckpt)(start())
     val second = asMap(QualityStream.totals(spark, reportDir).collect())
     assert(first == second, "at-least-once replay must stay exactly-once")
     assert(first("s").head == 2L, "both docs counted exactly once")

@@ -16,16 +16,20 @@ class RecrawlStreamSpec extends AnyFunSuite with SparkTestSession {
 
   private type Report = (Long, String, Long, Long, Long)
 
-  private def run(dir: java.nio.file.Path, ckpt: String,
-      batches: Seq[Seq[CrawlDoc]]): Seq[Report] = {
-    val stream = MemoryStream[CrawlDoc](spark)
-    val got = ArrayBuffer.empty[Report]
-    val q = RecrawlStream.start(stream.toDF(),
+  private def start(dir: java.nio.file.Path, ckpt: String,
+      stream: MemoryStream[CrawlDoc], got: ArrayBuffer[Report]) =
+    RecrawlStream.start(stream.toDF(),
       dir.resolve("index").toString, dir.resolve(ckpt).toString) {
       (out, epoch) =>
         got ++= out.collect().map(r => (epoch, r.getString(0),
           r.getLong(1), r.getLong(2), r.getLong(3)))
     }
+
+  private def run(dir: java.nio.file.Path, ckpt: String,
+      batches: Seq[Seq[CrawlDoc]]): Seq[Report] = {
+    val stream = MemoryStream[CrawlDoc](spark)
+    val got = ArrayBuffer.empty[Report]
+    val q = start(dir, ckpt, stream, got)
     try batches.foreach { b =>
       stream.addData(b.toIndexedSeq: _*)
       q.processAllAvailable()
@@ -56,13 +60,20 @@ class RecrawlStreamSpec extends AnyFunSuite with SparkTestSession {
   test("a replayed epoch probes only earlier state and overwrites its " +
     "own partition (exactly-once under at-least-once replay)") {
     val dir = java.nio.file.Files.createTempDirectory("recrawl-replay")
-    val docs = Seq(Seq(CrawlDoc(7, "s", "content")))
-    val first = run(dir, "ckpt1", docs)
+    val stream = MemoryStream[CrawlDoc](spark)
+    val got = ArrayBuffer.empty[Report]
+    val q = start(dir, "ckpt", stream, got)
+    stream.addData(CrawlDoc(7, "s", "content"))
+    try q.processAllAvailable() finally q.stop()
+    val first = got.toSeq
     assert(first == Seq((0L, "s", 1L, 0L, 0L)))
-    // fresh checkpoint replays the same batch as epoch 0: the epoch
-    // filter must keep it from classifying against its own rows, so the
-    // report is identical, and the index still holds exactly one row
-    val replay = run(dir, "ckpt2", docs)
+    // a forced replay runs epoch 0 again: the epoch filter must keep it
+    // from classifying against its own rows, so the report is identical,
+    // and the index still holds exactly one row
+    got.clear()
+    ForcedReplay(q, dir.resolve("ckpt").toString)(
+      start(dir, "ckpt", stream, got))
+    val replay = got.toSeq
     assert(replay == Seq((0L, "s", 1L, 0L, 0L)),
       s"replay must reproduce the first report, got $replay")
     val idx = spark.read.parquet(
@@ -80,9 +91,10 @@ class RecrawlStreamSpec extends AnyFunSuite with SparkTestSession {
     // arriving as v1 must be changed (stale content re-crawled)
     val r = run(dir, "ckpt2", Seq(
       Seq(CrawlDoc(1, "s", "v2")), Seq(CrawlDoc(1, "s", "v1"))))
-    // NOTE: ckpt2's epochs restart at 0/1 but overwrite partitions only
-    // for their own epoch ids; the compacted generation sits below all
-    // of them and keeps serving v2 as the latest pre-existing state
+    // NOTE: ckpt2 is a new lineage numbered after every epoch ckpt1
+    // wrote, folded ones included, so it overwrites no partition, its
+    // seen_epoch values sort after the compacted generation's, and that
+    // generation keeps serving v2 as the latest pre-existing state
     assert(r.head._5 == 1L, s"v2 should be unchanged vs latest, got $r")
   }
 }

@@ -138,22 +138,22 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
     val dir = java.nio.file.Files.createTempDirectory("sdedup-replay")
     val indexDir = dir.resolve("index").toString
     val novel = Doc(103L, (1 to 20).map(i => s"nova$i").mkString(" "))
-    def run(ckpt: String): Seq[(Long, Long)] = {
-      val stream = MemoryStream[Doc](spark)
-      val got = ArrayBuffer.empty[(Long, Long)]
-      val q = StreamingDedup.startIncremental(stream.toDF(), base,
-        indexDir, dir.resolve(ckpt).toString) { (out, _) =>
-        got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-      stream.addData(novel)
-      try q.processAllAvailable() finally q.stop()
-      got.toSeq
+    val ckpt = dir.resolve("ckpt1").toString
+    val stream1 = MemoryStream[Doc](spark)
+    val got1 = ArrayBuffer.empty[(Long, Long)]
+    def start() = StreamingDedup.startIncremental(stream1.toDF(), base,
+      indexDir, ckpt) { (out, _) =>
+      got1 ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
     }
-    assert(run("ckpt1").isEmpty, "first sight: nothing to match")
-    // a fresh checkpoint replays the SAME doc as epoch 0 against an index
+    val q1 = start()
+    stream1.addData(novel)
+    try q1.processAllAvailable() finally q1.stop()
+    assert(got1.isEmpty, "first sight: nothing to match")
+    // a forced replay runs the SAME doc again as epoch 0 against an index
     // that already holds epoch 0 — the probe must skip its own epoch and
     // still see the base corpus at epoch=-1
-    assert(run("ckpt2").isEmpty, "replay must not self-match")
+    ForcedReplay(q1, ckpt)(start())
+    assert(got1.isEmpty, "replay must not self-match")
     val near = Doc(104L, baseText1.replace("alpha20", "omega"))
     val stream = MemoryStream[Doc](spark)
     val got = ArrayBuffer.empty[Long]
@@ -164,5 +164,42 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
     stream.addData(near)
     try q.processAllAvailable() finally q.stop()
     assert(got == Seq(1L), s"base corpus must stay probe-visible: $got")
+  }
+
+  /** Runs `docs` through `startIncremental` as one batch under a new
+    * query on checkpoint `dir/ckpt`, discarding its matches. */
+  private def ingest(base: org.apache.spark.sql.DataFrame,
+      dir: java.nio.file.Path, ckpt: String, docs: Doc*): Unit = {
+    val stream = MemoryStream[Doc](spark)
+    val q = StreamingDedup.startIncremental(stream.toDF(), base,
+      dir.resolve("index").toString, dir.resolve(ckpt).toString) {
+      (out, _) => out.collect(); ()
+    }
+    stream.addData(docs: _*)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  test("a restart under a fresh checkpoint keeps the previous lineage's " +
+    "index rows") {
+    val base = Seq((1L, baseText1), (2L, baseText2)).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("sdedup-lineage")
+    ingest(base, dir, "c1", Doc(103L, "gamma delta epsilon zeta eta theta"))
+    ingest(base, dir, "c2", Doc(104L, "iota kappa lambda mu nu xi omicron"))
+    val ids = spark.read.parquet(dir.resolve("index/bands").toString)
+      .select("doc_id").distinct().as[Long].collect().toSet
+    assert(ids == Set(1L, 2L, 103L, 104L), s"index lost rows: $ids")
+  }
+
+  test("compaction and a restart do not seed the base corpus twice") {
+    import org.apache.spark.sql.functions.col
+    val base = Seq((1L, baseText1)).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("sdedup-seed")
+    def baseBandRows() = spark.read.parquet(dir.resolve("index/bands")
+      .toString).filter(col("doc_id") === 1L).count()
+    ingest(base, dir, "c1", Doc(103L, "gamma delta epsilon zeta eta theta"))
+    val seeded = baseBandRows()
+    StreamingDedup.compactIndex(spark, dir.resolve("index").toString)
+    ingest(base, dir, "c2", Doc(104L, "iota kappa lambda mu nu xi omicron"))
+    assert(baseBandRows() == seeded, "the base corpus was seeded again")
   }
 }

@@ -59,20 +59,59 @@ class TokenStatsStreamSpec extends AnyFunSuite with SparkTestSession {
       QDoc(2L, "beta gamma", "s"))
     val dir = java.nio.file.Files.createTempDirectory("token-replay")
     val indexDir = dir.resolve("index").toString
-    def run(ckpt: String): Unit = {
-      val stream = MemoryStream[QDoc](spark)
-      val q = TokenStatsStream.start(stream.toDF(), indexDir,
-        dir.resolve(ckpt).toString)
-      stream.addData(docs: _*)
-      try q.processAllAvailable() finally q.stop()
-    }
-    run("ckpt1")
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[QDoc](spark)
+    def start() = TokenStatsStream.start(stream.toDF(), indexDir, ckpt)
+    val q = start()
+    stream.addData(docs: _*)
+    try q.processAllAvailable() finally q.stop()
     val first = asMap(TokenStatsStream.totals(spark, indexDir).collect())
-    run("ckpt2") // fresh checkpoint replays the same data as epoch 0
+    ForcedReplay(q, ckpt)(start()) // epoch 0 runs again, same rows
     val second = asMap(TokenStatsStream.totals(spark, indexDir).collect())
     assert(first == second, "at-least-once replay must stay exactly-once")
     assert(first(("s", "alpha")) == ((2L, 1L)))
     assert(first(("s", "beta")) == ((2L, 2L)))
+  }
+
+  /** Runs each of `batches` as one epoch of a new query on `dir/ckpt`. */
+  private def ingest(dir: java.nio.file.Path, ckpt: String,
+      batches: Seq[QDoc]*): Unit = {
+    val stream = MemoryStream[QDoc](spark)
+    val q = TokenStatsStream.start(stream.toDF(),
+      dir.resolve("index").toString, dir.resolve(ckpt).toString)
+    try batches.foreach { b =>
+      stream.addData(b: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  test("a restart under a fresh checkpoint keeps the previous " +
+    "lineage's epochs") {
+    val a = Seq(QDoc(1L, "alpha beta alpha", "s"))
+    val b = Seq(QDoc(2L, "beta gamma", "s"))
+    val dir = java.nio.file.Files.createTempDirectory("token-lineage")
+    ingest(dir, "c1", a)
+    ingest(dir, "c2", b)
+    assert(asMap(TokenStatsStream.totals(spark, dir.resolve("index")
+      .toString).collect()) ==
+      asMap(TokenStatsStream.batchStats((a ++ b).toDF()).collect()),
+      "the second lineage overwrote the first one's epoch")
+  }
+
+  test("a lineage started after a compaction keeps its counts through " +
+    "the next compaction") {
+    val a0 = Seq(QDoc(1L, "alpha", "s"))
+    val a1 = Seq(QDoc(3L, "beta", "s"))
+    val b = Seq(QDoc(2L, "alpha", "s")) // same stats row as a0
+    val dir = java.nio.file.Files.createTempDirectory("token-refold")
+    val indexDir = dir.resolve("index").toString
+    ingest(dir, "c1", a0, a1)
+    TokenStatsStream.compact(spark, indexDir)
+    ingest(dir, "c2", b)
+    TokenStatsStream.compact(spark, indexDir)
+    assert(asMap(TokenStatsStream.totals(spark, indexDir).collect()) ==
+      asMap(TokenStatsStream.batchStats((a0 ++ a1 ++ b).toDF()).collect()),
+      "the fold merged rows of two lineages that share an origin epoch")
   }
 
   test("a compaction crashed after its fold committed does not " +

@@ -63,22 +63,22 @@ class VectorDedupStreamSpec extends AnyFunSuite with SparkTestSession {
     val dir = java.nio.file.Files.createTempDirectory("vec-replay")
     val indexDir = dir.resolve("index").toString
     val v = Vec(7L, Array.fill(64)(0.5f))
-    def run(ckpt: String): Seq[(Long, Long)] = {
-      val stream = MemoryStream[Vec](spark)
-      val got = ArrayBuffer.empty[(Long, Long)]
-      val q = VectorDedupStream.start(stream.toDF(), indexDir,
-        dir.resolve(ckpt).toString, tau) { (out, _) =>
-        got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-      stream.addData(v)
-      try q.processAllAvailable() finally q.stop()
-      got.toSeq
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[Vec](spark)
+    val got = ArrayBuffer.empty[(Long, Long)]
+    def start() = VectorDedupStream.start(stream.toDF(), indexDir, ckpt,
+      tau) { (out, _) =>
+      got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
     }
-    assert(run("ckpt1").isEmpty, "first sight: nothing to match")
-    // fresh checkpoint replays the SAME vector as epoch 0 against an index
-    // that already holds epoch 0 — the epoch filter must keep the replay
-    // from matching itself
-    assert(run("ckpt2").isEmpty, "replay must not self-match")
+    val q = start()
+    stream.addData(v)
+    try q.processAllAvailable() finally q.stop()
+    assert(got.isEmpty, "first sight: nothing to match")
+    // a forced replay runs epoch 0 again against an index that already
+    // holds epoch 0 — the epoch filter must keep the replay from
+    // matching itself
+    ForcedReplay(q, ckpt)(start())
+    assert(got.isEmpty, "replay must not self-match")
   }
 
   test("compaction folds epoch partitions without changing probe results") {

@@ -65,20 +65,22 @@ class WinnowStreamSpec extends AnyFunSuite with SparkTestSession {
     "identical matches") {
     val dir = java.nio.file.Files.createTempDirectory("winnow-replay")
     val indexDir = dir.resolve("index").toString
-    def run(ckpt: String): Set[(Long, Long, Long)] = {
-      val stream = MemoryStream[Doc](spark)
-      val published = scala.collection.mutable.ArrayBuffer[Row]()
-      val q = WinnowStream.start(stream.toDF(), indexDir,
-        dir.resolve(ckpt).toString) { (m, _) => published ++= m.collect() }
-      stream.addData(Doc(1L, s"aa bb $shared cc"), Doc(2L, "unrelated x y"))
-      try q.processAllAvailable() finally q.stop()
-      asSet(published.toSeq)
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[Doc](spark)
+    val published = scala.collection.mutable.ArrayBuffer[Row]()
+    def start() = WinnowStream.start(stream.toDF(), indexDir, ckpt) {
+      (m, _) => published ++= m.collect()
     }
-    val first = run("ckpt1")
+    val q = start()
+    stream.addData(Doc(1L, s"aa bb $shared cc"), Doc(2L, "unrelated x y"))
+    try q.processAllAvailable() finally q.stop()
+    val first = asSet(published.toSeq)
     assert(first.isEmpty, "first epoch has no earlier index to match")
-    // fresh checkpoint replays the same data as epoch 0: the epoch filter
-    // must keep it from matching its own replayed rows
-    val second = run("ckpt2")
+    // a forced replay runs epoch 0 again: the epoch filter must keep it
+    // from matching its own replayed rows
+    published.clear()
+    ForcedReplay(q, ckpt)(start())
+    val second = asSet(published.toSeq)
     assert(second.isEmpty, "replay matched its own epoch partition")
     val idx = spark.read.parquet(s"$indexDir/fps")
     assert(idx.select("epoch").distinct().count() == 1)
