@@ -6,9 +6,14 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only: time a comma-separated list of queries (args(0)) at a given
   * SF dir (args(1), default sf0.1), N iterations (args(2), default 3),
   * printing every iteration — for isolating regressions the min-of-3
-  * headline hides.
+  * headline hides. Each run is timed to the query's full result (a noop
+  * write): under `count()` the optimizer prunes every column the count
+  * does not need, and with them a query's costliest aggregates.
   */
 object QBench {
+  private def toFullResult(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
       System.err.println(
@@ -47,12 +52,12 @@ object QBench {
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       // warmup at smallest SF
-      try fn(spark, "/root/testdata/sf0.001").count()
+      try toFullResult(fn(spark, "/root/testdata/sf0.001"))
       catch { case t: Throwable => println(s"warmup $n: ${t.getMessage}") }
       val runs = (1 to iters).map { _ =>
         val j0 = jobs.get()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        toFullResult(fn(spark, sfDir))
         ((System.nanoTime() - t0) / 1e9, jobs.get() - j0)
       }
       val times = runs.map(_._1)

@@ -43,16 +43,50 @@ class ExtendedSpec extends AnyFunSuite with SparkTestSession {
         s"group ${r.getString(0)} exact_users")
       assert(r.getBoolean(3), s"group ${r.getString(0)} out of bound")
     }
-    // direct numeric assertion on the underlying sketch (the query hashes
+    // direct numeric assertion on the sketch q39 runs (the query hashes
     // only the boolean verdict; this pins the estimate itself)
     val approx = graft.Tables(spark, sfDir, "events")
       .groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), rsd = 0.01).as("a"))
+      .agg(Extended.userSketch(col("user_id")).as("a"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     exact.foreach { case (k, n) =>
       assert(math.abs(approx(k) - n) <= math.max(1L, (n * 0.05).toLong),
         s"group $k: approx ${approx(k)} vs exact $n")
     }
+  }
+
+  test("q39's sketch stays within 3% of exact at 100k distinct per group") {
+    import org.apache.spark.sql.functions._
+    // DataSketches hashes with a fixed seed: the estimate is deterministic
+    val est = spark.range(0, 300000)
+      .groupBy((col("id") % 3).as("g"))
+      .agg(Extended.userSketch(col("id")).as("a"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(est.keySet == Set(0L, 1L, 2L))
+    est.foreach { case (g, a) =>
+      assert(math.abs(a - 100000L) <= 3000L, s"group $g: approx $a vs 100000")
+    }
+  }
+
+  test("q39: no aggregate's buffer is wider than spark.sql.codegen.maxFields") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val df = Extended.q39ApproxDistinct.fn(spark, sfDir)
+    df.collect() // settles the adaptive plan on its final stages
+    val maxFields = spark.sessionState.conf.wholeStageMaxNumFields
+    // the helper walks into AdaptiveSparkPlanExec's final plan and its
+    // query stages, which a plain TreeNode walk stops at
+    val widths = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec => a.aggregateExpressions.map { e =>
+          e.aggregateFunction.prettyName ->
+            e.aggregateFunction.aggBufferAttributes.size
+        }
+      }.flatten
+    assert(widths.nonEmpty, "no aggregate found in q39's plan")
+    val wide = widths.filter(_._2 > maxFields)
+    assert(wide.isEmpty, s"aggregation buffers wider than $maxFields fields: " +
+      wide.distinct.map { case (f, n) => s"$f=$n" }.mkString(", "))
   }
 
   test("CSV source round-trips the events table with an explicit schema") {
