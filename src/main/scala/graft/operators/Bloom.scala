@@ -96,9 +96,13 @@ object Bloom {
     * shingle pass joined BROADCAST against those rows (no corpus-keyed
     * shuffle; the per-(doc, shingle) rollup of the 2 probe rows is
     * map-side); exact verification joins eval shingles against the
-    * candidates alone. The all-corpus exact join this replaces is the
-    * q62 shape — still linear, but it shuffles every corpus shingle;
-    * the cascade shuffles only candidates. */
+    * candidates alone. One probe feeds both counts: the candidates are
+    * left-joined once to the eval shingles, tagged, rolled up per
+    * (doc, source) with the tag's max, and counted (flagged_bloom) and
+    * summed (flagged_exact) per source — the candidate pipeline is
+    * planned once, not once per count. The all-corpus exact join this
+    * replaces is the q62 shape — still linear, but it shuffles every
+    * corpus shingle; the cascade shuffles only candidates. */
   val q142BloomContam = QueryDef(
     "q142_bloom_contam",
     s"""WITH ev AS (SELECT DISTINCT unnest(${Mirror.sqlShingle5Gen}) AS sh
@@ -153,15 +157,19 @@ object Bloom {
     val ev = docs.filter(isEval(col("doc_id")))
       .select(explode(shingle5Gen(col("text"))).as("sh")).distinct()
     val corpus = docs.filter(!isEval(col("doc_id")))
-    val cand = candidates(corpus, filterWords(ev))
-    val flagB = cand.select(col("doc_id"), col("source")).distinct()
-      .groupBy(col("source")).agg(count(lit(1)).as("flagged_bloom"))
-    val flagX = cand.join(ev, Seq("sh"), "left_semi")
-      .select(col("doc_id"), col("source")).distinct()
-      .groupBy(col("source")).agg(count(lit(1)).as("flagged_exact"))
+    // one candidate probe feeds both counts: a flagged doc counts for
+    // flagged_bloom, and for flagged_exact iff one of its candidate
+    // shingles really is an eval shingle (ev is distinct, so the tag
+    // join adds no rows)
+    val flags = candidates(corpus, filterWords(ev))
+      .join(ev.withColumn("x", lit(1L)), Seq("sh"), "left_outer")
+      .groupBy(col("doc_id"), col("source"))
+      .agg(max(coalesce(col("x"), lit(0L))).as("x"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("flagged_bloom"),
+        sum(col("x")).as("flagged_exact"))
     corpus.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      .join(flagB, Seq("source"), "left_outer")
-      .join(flagX, Seq("source"), "left_outer")
+      .join(flags, Seq("source"), "left_outer")
       .select(col("source"), col("n_docs"),
         coalesce(col("flagged_bloom"), lit(0L)).as("flagged_bloom"),
         coalesce(col("flagged_exact"), lit(0L)).as("flagged_exact"),

@@ -310,8 +310,8 @@ object CorpusBuild {
     val docs = Tables(spark, dir, "documents")
     // the narrow verdict trio (n_tokens, quality keep, blocklist clean)
     // plus the classifier score ride ONE text scan
-    // ([[Quality.narrowVerdicts]]); only the aggregation-shaped verdicts
-    // (gopher profile, perplexity bucket) remain joins
+    // ([[Quality.narrowVerdicts]]); the gopher profile (its own native
+    // per-row pass) and the perplexity bucket remain joins
     val kGopher = Quality.gopherProfile(docs)
       .select(col("doc_id"), col("gopher_keep").as("f2"))
     val (c2, c1, v) = LmCache.counts(spark, dir) // artifact, not retrain

@@ -48,7 +48,7 @@ object Graph {
   /** Mid-loop rank-table truncation cadence: checkpoint `ranks` every N
     * rounds; 0 (default) chains the whole propagation into ONE linear
     * plan materialized by a single truncation at loop exit. Measured on
-    * local[32] at sf0.1 (GraphProf): each eager localCheckpoint costs
+    * local[32] at sf0.1: each eager localCheckpoint costs
     * ~2 scheduled jobs (the materializing count plus the
     * missing-partition sweep), so per-round truncation pays ~10 job
     * round-trips for a 5-round loop while the fused plan pays ~2 — and
@@ -61,7 +61,7 @@ object Graph {
     * reads each round's scalar off the truncation job itself
     * (observe), keeping an iteration at exactly ONE action.
     *
-    * Per-query defaults (both measured, GraphProf): q132's linear chain
+    * Per-query defaults (both measured at sf0.1): q132's linear chain
     * fuses cleanly → 0; q134's share branch re-executes under fusion
     * (five broadcast sub-jobs, each re-reading a round's reduce side:
     * fused 2.3 s vs observe-cadence 1.3 s at sf0.1) → 1. */
@@ -91,8 +91,8 @@ object Graph {
 
   /** Runs the rank loop's eager jobs under a pinned execution profile:
     * shuffle width = the loop's own [[prParts]] sizing and AQE off, both
-    * restored on exit. Rationale, measured at sf0.1/local[32]
-    * (GraphProf): under AQE every exchange of every per-round
+    * restored on exit. Rationale, measured at sf0.1/local[32]: under
+    * AQE every exchange of every per-round
     * checkpoint job is its own stage-job — 31 jobs for the 5-round
     * loop — and their scheduling round-trips, not executor work,
     * dominate a small graph. With the width pinned the whole round is

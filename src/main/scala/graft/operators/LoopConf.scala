@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle width sized to the LOOP's table ([[parts]]), not the
   *    session default — spraying a megabyte-scale label table over the
   *    corpus-sized shuffle width costs a task storm per round (the
-  *    measured floor of the PageRank and CC loops at small SF, GraphProf);
+  *    measured floor of the PageRank and CC loops at small SF);
   *  - AQE off — under AQE every exchange of every round's truncation job
   *    is its own stage-job with a planning round-trip, and AQE's levers
   *    are dead weight inside these loops (keys are near-uniform ids, the

@@ -435,11 +435,11 @@ object Quality {
   /** Gopher repetition thresholds (Rae et al. 2021, table A1): keep a
     * document iff the most-frequent n-gram's character mass is ≤ pct% of
     * the document for n = 2,3,4 … */
-  private[operators] val TopNgramPct = Seq(2 -> 20, 3 -> 18, 4 -> 16)
+  private[graft] val TopNgramPct = Seq(2 -> 20, 3 -> 18, 4 -> 16)
 
   /** … and iff characters covered by WITHIN-DOC duplicated n-grams are
     * ≤ pct% for n = 5..10. */
-  private[operators] val DupNgramPct =
+  private[graft] val DupNgramPct =
     Seq(5 -> 15, 6 -> 14, 7 -> 13, 8 -> 12, 9 -> 11, 10 -> 10)
 
   private def sqlNList(ns: Seq[Int]): String = ns.mkString("[", ", ", "]")
@@ -465,11 +465,11 @@ object Quality {
     * integer cross-multiplication (num·100 ≤ pct·n_chars), never float
     * compare — the q112 rule discipline.
     *
-    * Shape at 100 TB: everything is keyed by doc_id (+ gram width) —
-    * grams hash to 60-bit longs before the per-doc count shuffles (q82's
-    * compact-key rule), every window partitions by document so per-task
-    * state is bounded by document length, and the final profile is one
-    * row per document. No cross-document anything: this is the per-doc
+    * Shape at 100 TB: one per-row pass with no shuffle — the native
+    * [[graft.functions.GopherRepetition]] computes all nine numerators
+    * from the document alone, so per-task state is bounded by one
+    * document, and the only exchange is the final ORDER BY's range
+    * partitioning. No cross-document anything: this is the per-doc
     * quality pass that runs BEFORE dedup in a real pipeline.
     * Reference scope: file:line n/a — no quality surface in the
     * reference; LLM-pipeline extension tier. */
@@ -557,110 +557,28 @@ object Quality {
   /** q151's per-document repetition profile (doc_id, n_chars, the
     * top/dup fracs, gopher_keep), unordered — shared with the q161
     * corpus-build manifest, whose gopher stage is exactly this keep
-    * column. */
+    * column. One projection over the native per-document numerators
+    * ([[graft.functions.GopherRepetition]], `TopNgramPct ++ DupNgramPct`
+    * order); its relational executable spec lives with the tests. */
   private[graft] def gopherProfile(docs: DataFrame): DataFrame = {
-    val base = docs
-      .select(col("doc_id"), length(col("text")).cast(LongType).as("n_chars"))
+    // (fraction column, keep threshold pct) in the numerators' order
+    val rules =
+      TopNgramPct.map { case (n, pct) => s"top${n}_frac" -> pct } ++
+        DupNgramPct.map { case (n, pct) => s"dup${n}_frac" -> pct }
+    val num = docs
+      .select(col("doc_id"), length(col("text")).cast(LongType).as("n_chars"),
+        graft.functions.GopherRepetition(col("text"),
+          TopNgramPct.map(_._1), DupNgramPct.map(_._1)).as("num"))
       .filter(col("n_chars") >= 1)
-
-    // top n-gram mass: per width, per doc, the most frequent gram's
-    // occurrence count x its char length (ties: smallest 60-bit hash,
-    // the deterministic stand-in for lexicographic order both engines
-    // replay on the same hashes)
-    val topNum = TopNgramPct.map { case (n, _) =>
-      docs.select(col("doc_id"),
-          explode(graft.functions.NGramGen(col("text"), n)).as("gram"))
-        .select(col("doc_id"), hash60(col("gram")).as("sh"),
-          length(col("gram")).cast(LongType).as("glen"))
-        .groupBy(col("doc_id"), col("sh"))
-        .agg(count(lit(1)).as("cnt"), max(col("glen")).as("glen"))
-        .withColumn("n", lit(n))
-    }.reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(Window
-        .partitionBy(col("doc_id"), col("n"))
-        .orderBy(col("cnt").desc, col("sh"))))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("n"), (col("cnt") * col("glen")).as("num"))
-
-    // duplicated n-gram coverage: positioned grams -> within-doc counts
-    // -> occurrences of duplicated grams as token intervals -> interval
-    // union (running-max islands) -> char length via token prefix sums
-    val posGrams = DupNgramPct.map { case (n, _) =>
-      docs.select(col("doc_id"),
-          posexplode(graft.functions.NGramGen(col("text"), n))
-            .as(Seq("p0", "gram")))
-        .select(col("doc_id"), lit(n).as("n"),
-          (col("p0") + 1).cast(LongType).as("pos"),
-          hash60(col("gram")).as("sh"))
-    }.reduce(_ unionByName _)
-    val dupPos = posGrams
-      .join(posGrams.groupBy(col("doc_id"), col("n"), col("sh"))
-          .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)
-          .drop("cnt"),
-        Seq("doc_id", "n", "sh"))
-      .select(col("doc_id"), col("n"), col("pos"),
-        (col("pos") + col("n") - 1).as("e"))
-    val wSeq = Window.partitionBy(col("doc_id"), col("n"))
-      .orderBy(col("pos"))
-    val ivs = dupPos
-      .withColumn("pmax",
-        max(col("e")).over(wSeq.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("grp",
-        sum(when(col("pmax").isNull || col("pos") > col("pmax"), 1L)
-          .otherwise(0L)).over(wSeq))
-      .groupBy(col("doc_id"), col("n"), col("grp"))
-      .agg(min(col("pos")).as("a"), max(col("e")).as("b"))
-    val cum = docs
-      .select(col("doc_id"), posexplode(words(col("text")))
-        .as(Seq("p0", "wd")))
-      .select(col("doc_id"), (col("p0") + 1).cast(LongType).as("p"),
-        length(col("wd")).cast(LongType).as("wl"))
-      .withColumn("cum", sum(col("wl")).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("p"))))
-      .select(col("doc_id"), col("p"), col("cum"))
-    val dupNum = ivs.as("iv")
-      .join(cum.as("cb"), col("iv.doc_id") === col("cb.doc_id") &&
-        col("iv.b") === col("cb.p"))
-      .join(cum.as("ca"), col("iv.doc_id") === col("ca.doc_id") &&
-        (col("iv.a") - 1) === col("ca.p"), "left")
-      .select(col("iv.doc_id").as("doc_id"), col("iv.n").as("n"),
-        (col("cb.cum") - coalesce(col("ca.cum"), lit(0L)) +
-          (col("iv.b") - col("iv.a"))).as("chars"))
-      .groupBy(col("doc_id"), col("n"))
-      .agg(sum(col("chars")).as("num"))
-
-    val tp = topNum.groupBy(col("doc_id")).agg(
-      max(when(col("n") === TopNgramPct.head._1, col("num")))
-        .as(s"t${TopNgramPct.head._1}"),
-      TopNgramPct.tail.map { case (n, _) =>
-        max(when(col("n") === n, col("num"))).as(s"t$n")
-      }: _*)
-    val dp = dupNum.groupBy(col("doc_id")).agg(
-      max(when(col("n") === DupNgramPct.head._1, col("num")))
-        .as(s"d${DupNgramPct.head._1}"),
-      DupNgramPct.tail.map { case (n, _) =>
-        max(when(col("n") === n, col("num"))).as(s"d$n")
-      }: _*)
-
-    val fracCols =
-      TopNgramPct.map { case (n, _) =>
-        (coalesce(col(s"t$n"), lit(0L)).cast(DoubleType) /
-          col("n_chars").cast(DoubleType)).as(s"top${n}_frac")
-      } ++ DupNgramPct.map { case (n, _) =>
-        (coalesce(col(s"d$n"), lit(0L)).cast(DoubleType) /
-          col("n_chars").cast(DoubleType)).as(s"dup${n}_frac")
-      }
-    val keep = (TopNgramPct.map { case (n, pct) =>
-      coalesce(col(s"t$n"), lit(0L)) * 100 <= lit(pct) * col("n_chars")
-    } ++ DupNgramPct.map { case (n, pct) =>
-      coalesce(col(s"d$n"), lit(0L)) * 100 <= lit(pct) * col("n_chars")
-    }).reduce(_ && _)
-
-    base
-      .join(tp, Seq("doc_id"), "left")
-      .join(dp, Seq("doc_id"), "left")
-      .select(col("doc_id") +: col("n_chars") +: fracCols :+
-        keep.as("gopher_keep"): _*)
+    val fracCols = rules.zipWithIndex.map { case ((name, _), i) =>
+      (col("num")(i).cast(DoubleType) / col("n_chars").cast(DoubleType))
+        .as(name)
+    }
+    val keep = rules.zipWithIndex.map { case ((_, pct), i) =>
+      col("num")(i) * 100 <= lit(pct) * col("n_chars")
+    }.reduce(_ && _)
+    num.select(col("doc_id") +: col("n_chars") +: fracCols :+
+      keep.as("gopher_keep"): _*)
   }
 
   /** Integer probability scale for the q153 LM scores: per-transition
@@ -1053,9 +971,9 @@ object Quality {
     * blocklist-clean flag via the native MultiMatch — so the three
     * verdicts that the corpus-build funnel previously attached with
     * three doc_id joins (each a corpus-scale shuffle of a thin table,
-    * plus its own text scan) ride a single scan instead. The
-    * aggregation-shaped verdicts (gopher's n-gram profile, the
-    * perplexity bucket) stay joins — they genuinely reduce. */
+    * plus its own text scan) ride a single scan instead. Gopher's
+    * n-gram profile ([[gopherProfile]], its own native per-row pass)
+    * and the perplexity bucket (it genuinely reduces) stay joins. */
   def narrowVerdicts(docs: DataFrame,
       carry: Seq[String] = Seq.empty): DataFrame =
     // ("text" +: carry).distinct: a caller already carrying "text" (the

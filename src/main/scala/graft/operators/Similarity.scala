@@ -1051,9 +1051,9 @@ object Similarity {
     pqAnn(spark, dir)
   }
 
-  /** q68's body — factored so the carried-vector form and its join-back
-    * spec ([[pqAnnJoinSpec]]) can be A/B'd in one JVM (Prof68) and
-    * equality-pinned (SimilaritySpec). */
+  /** q68's body — factored so the carried-vector form can be
+    * equality-pinned against its join-back spec ([[pqAnnJoinSpec]],
+    * SimilaritySpec). */
   private[graft] def pqAnn(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NearestCentroid
     import org.apache.spark.sql.types.IntegerType

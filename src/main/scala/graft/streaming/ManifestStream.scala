@@ -118,8 +118,8 @@ object ManifestStream {
       commit = markCommitted(fs, stateDir, _)) { fresh =>
       // per-doc pure verdicts + labels, frozen at ingest: the narrow
       // trio (n_tokens/f1/f3) in one scan — the batch docFlags
-      // discipline; only the aggregation-shaped gopher verdict and the
-      // label view remain joins
+      // discipline; only the gopher verdict (its own native per-row
+      // pass) and the label view remain joins
       val sig = Quality.narrowVerdicts(fresh)
         .join(Quality.gopherProfile(fresh)
           .select(col("doc_id"), col("gopher_keep").as("f2")),

@@ -4,11 +4,14 @@ import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only: time a comma-separated list of queries (args(0)) at a given
-  * SF dir (args(1), default sf0.1), N iterations (args(2), default 3),
-  * printing every iteration — for isolating regressions the min-of-3
-  * headline hides. Each run is timed to the query's full result (a noop
-  * write): under `count()` the optimizer prunes every column the count
-  * does not need, and with them a query's costliest aggregates.
+  * SF dir (args(1), default sf0.1), N iterations (args(2), default 3).
+  * Each iteration runs every listed query once, round-robin, so the
+  * queries of one call are A/B'd in one JVM under the same host drift
+  * (list a query and its variant side by side); every run is printed,
+  * then each query's min and median. Each run is timed to the query's
+  * full result (a noop write): under `count()` the optimizer prunes every
+  * column the count does not need, and with them a query's costliest
+  * aggregates.
   */
 object QBench {
   private def toFullResult(df: org.apache.spark.sql.DataFrame): Unit =
@@ -38,7 +41,7 @@ object QBench {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // per-iteration Spark JOB count — the trainer-loop budget diagnostic
+    // per-run Spark JOB count — the trainer-loop budget diagnostic
     // (a loop that schedules per-round actions shows up here long before
     // it shows up in wall-clock at test SFs)
     val jobs = new java.util.concurrent.atomic.AtomicLong
@@ -50,19 +53,29 @@ object QBench {
         }
       })
     names.foreach { n =>
-      val fn = SparkEntry.queries(n)
       // warmup at smallest SF
-      try toFullResult(fn(spark, "/root/testdata/sf0.001"))
+      try toFullResult(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
       catch { case t: Throwable => println(s"warmup $n: ${t.getMessage}") }
-      val runs = (1 to iters).map { _ =>
+    }
+    val times = names.map(_ -> Vector.newBuilder[Double]).toMap
+    (1 to iters).foreach { it =>
+      names.foreach { n =>
         val j0 = jobs.get()
         val t0 = System.nanoTime()
-        toFullResult(fn(spark, sfDir))
-        ((System.nanoTime() - t0) / 1e9, jobs.get() - j0)
+        toFullResult(SparkEntry.queries(n)(spark, sfDir))
+        val s = (System.nanoTime() - t0) / 1e9
+        times(n) += s
+        println(f"QBENCH $n: iter=$it time=$s%.3f jobs=${jobs.get() - j0}")
       }
-      val times = runs.map(_._1)
-      println(f"QBENCH $n: min=${times.min}%.3f jobs=${runs.last._2}" +
-        " all=" + times.map(t => f"$t%.3f").mkString(","))
+    }
+    names.foreach { n =>
+      val all = times(n).result()
+      val ts = all.sorted
+      val median =
+        if (ts.size % 2 == 1) ts(ts.size / 2)
+        else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2
+      println(f"QBENCH $n: min=${ts.head}%.3f median=$median%.3f" +
+        " all=" + all.map(t => f"$t%.3f").mkString(","))
     }
     spark.stop()
   }

@@ -83,15 +83,15 @@ class BuildManifestSpec extends AnyFunSuite with SparkTestSession {
     val df = CorpusBuild.docFlags(spark, sfDir)
     val paths = scanPaths(df)
     val docScans = paths.count(_.contains("documents.parquet"))
-    // the budget: 1 funnel + 11 gopher (3 top widths + 6 dup widths +
-    // prefix sums + base) + 1 blocklist + 1 LM scoring + 1 classifier
-    // scoring + 1 shared positioned-shingle pass (persisted: it serves
-    // the excision spans AND both decontamination sides — its repeated
-    // uses appear as in-memory scans, not file scans) + 1 token base
-    // ≈ 17; the bound pins that the funnel STAGES add zero scans —
-    // 9 stages over 8 signal families stays ~17 scans whether the
-    // funnel has 2 stages or 20
-    assert(docScans >= 1 && docScans <= 20,
+    // the budget, 4 measured: 1 narrow-verdict scan (quality rules,
+    // blocklist and classifier score ride one pass) + 1 gopher (the
+    // native per-document profile) + 1 LM scoring + 1 shared
+    // positioned-shingle pass (persisted: it serves the excision spans
+    // AND both decontamination sides — its repeated uses appear as
+    // in-memory scans, not file scans); the bound pins that the funnel
+    // STAGES add zero scans — 9 stages over 8 signal families stay 4
+    // scans whether the funnel has 2 stages or 20
+    assert(docScans >= 1 && docScans <= 4,
       s"documents scanned $docScans times — per-stage rescans crept in?")
     // artifact reuse: the executed plan READS the cc/lm artifact stores
     assert(paths.exists(_.contains("graft-cccache")),

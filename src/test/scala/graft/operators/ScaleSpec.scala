@@ -409,12 +409,30 @@ class ScaleSpec extends AnyFunSuite with SparkTestSession {
         s"${q.name} plans a single-partition exchange")
       assert(!plan.contains("CartesianProduct"), q.name)
     }
-    // q151's gram counts must partially aggregate map-side before the
-    // (doc, width, hash) exchange — the combine that absorbs repeated
-    // grams at the source
+    // q151 is one per-row pass over documents: its only exchange is the
+    // ORDER BY's range partitioning — no per-(doc, width) shuffle, no
+    // broadcast, one text scan
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     val q151 = Quality.q151GopherRepetition.fn(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(q151.contains("partial_count"), q151)
+    q151.collect() // settles the adaptive plan on its final stages
+    val plan = q151.queryExecution.executedPlan
+    val walk = new AdaptiveSparkPlanHelper {}
+    val shuffles = walk.collectWithSubqueries(plan) {
+      case e: ShuffleExchangeLike => e.outputPartitioning
+    }
+    assert(shuffles.size == 1 &&
+      shuffles.head.isInstanceOf[RangePartitioning], plan)
+    assert(walk.collectWithSubqueries(plan) {
+      case b: BroadcastExchangeLike => b
+    }.isEmpty, plan)
+    assert(walk.collectWithSubqueries(plan) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(
+            _.toString.contains("documents.parquet")) => f
+    }.size == 1, plan)
   }
 
   test("no registered query plans a CartesianProduct") {
