@@ -37,7 +37,7 @@ object Verify {
     // instead of a per-query analysis error.
     val fingerprints: Map[String, String] = Tables.names.flatMap { n =>
       try {
-        val sch = spark.read.parquet(s"$sfDir/$n.parquet").schema
+        val sch = Tables.parquet(spark, s"$sfDir/$n.parquet").schema
         Some(n -> sch.fields.map(f => s"${f.name}:${f.dataType.sql}")
           .mkString(","))
       } catch { case _: Throwable => None }

@@ -51,6 +51,11 @@ object Artifacts {
 
   private[operators] def parquet(att: Path, part: String): String =
     new Path(att, part).toString
+
+  /** Reads back the parquet table `part` of the artifact at `att`. */
+  private[operators] def load(spark: SparkSession, att: Path,
+      part: String): DataFrame =
+    Tables.parquet(spark, parquet(att, part))
 }
 
 /** A store whose artifact is one table computed from an SF dir. */
@@ -62,7 +67,7 @@ private[graft] abstract class FrameStore(name: String, input: String)
     Artifacts.overTable(spark, this, dir, input)(compute(spark, dir))(
       (df, att) => df.write.mode("overwrite")
         .parquet(Artifacts.parquet(att, "data")),
-      att => spark.read.parquet(Artifacts.parquet(att, "data")))
+      att => Artifacts.load(spark, att, "data"))
 
   def warm(spark: SparkSession, dir: String): Any = frame(spark, dir)
 }
@@ -144,8 +149,8 @@ private[graft] object BpeCache extends Store("bpecache") {
       },
       { att =>
         import spark.implicits._
-        (spark.read.parquet(Artifacts.parquet(att, "vocab")),
-          spark.read.parquet(Artifacts.parquet(att, "merges"))
+        (Artifacts.load(spark, att, "vocab"),
+          Artifacts.load(spark, att, "merges")
             .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq)
       })
 }
@@ -169,8 +174,8 @@ private[graft] object WpCache extends Store("wpcache") {
       },
       { att =>
         import spark.implicits._
-        (spark.read.parquet(Artifacts.parquet(att, "vocab")),
-          spark.read.parquet(Artifacts.parquet(att, "merges"))
+        (Artifacts.load(spark, att, "vocab"),
+          Artifacts.load(spark, att, "merges")
             .as[(Int, String, String, Long, Long, Long)].collect()
             .sortBy(_._1).toSeq)
       })
@@ -191,8 +196,8 @@ private[graft] object UnigramCache extends Store("unigramcache") {
         vocab.coalesce(1).write.mode("overwrite")
           .parquet(Artifacts.parquet(att, "vocab"))
       },
-      att => (spark.read.parquet(Artifacts.parquet(att, "pieces")),
-        spark.read.parquet(Artifacts.parquet(att, "vocab"))))
+      att => (Artifacts.load(spark, att, "pieces"),
+        Artifacts.load(spark, att, "vocab")))
 
   def pieces(spark: SparkSession, dir: String): DataFrame =
     trained(spark, dir)._1
@@ -217,9 +222,9 @@ private[graft] object LmCache extends Store("lmcache") {
         spark.range(1).select(lit(v).as("v")).coalesce(1).write
           .mode("overwrite").parquet(Artifacts.parquet(att, "meta"))
       },
-      att => (spark.read.parquet(Artifacts.parquet(att, "c2")),
-        spark.read.parquet(Artifacts.parquet(att, "c1")),
-        spark.read.parquet(Artifacts.parquet(att, "meta"))
+      att => (Artifacts.load(spark, att, "c2"),
+        Artifacts.load(spark, att, "c1"),
+        Artifacts.load(spark, att, "meta")
           .collect().head.getAs[Long]("v")))
 }
 

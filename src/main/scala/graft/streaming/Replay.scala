@@ -178,7 +178,7 @@ object Replay {
   def manifestFlags(spark: SparkSession, dir: String): DataFrame = {
     val att = artifact(spark, dir, ManifestStore)(
       buildManifest(spark, dir, _))
-    spark.read.parquet(new Path(att, "flags").toString)
+    graft.Tables.parquet(spark, new Path(att, "flags").toString)
   }
 
   /** The replayed SCD2 maintainer's resolved segment table — q169's
@@ -192,6 +192,6 @@ object Replay {
     * unioned — q170's input. */
   def dedupMatches(spark: SparkSession, dir: String): DataFrame = {
     val att = artifact(spark, dir, DedupStore)(buildDedup(spark, dir, _))
-    spark.read.parquet(new Path(att, "matches").toString).drop("epoch")
+    graft.Tables.parquet(spark, new Path(att, "matches").toString).drop("epoch")
   }
 }

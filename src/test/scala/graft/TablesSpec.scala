@@ -119,4 +119,112 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
     assert(df.schema("ts").dataType == TimestampType)
     assert(df.select(unix_micros(col("ts"))).head().getLong(0) == micros)
   }
+
+  /** The events fixtures above, by annotation: NTZ, LTZ and the
+    * epoch-nanos long of the nanosAsLong read shape. */
+  private def eventsFixtures(): Seq[String] = {
+    import spark.implicits._
+    val us = Seq(micros).toDF("us")
+    Seq(
+      timestamp_micros(col("us")).cast(TimestampNTZType),
+      timestamp_micros(col("us")),
+      col("us") * 1000L + 789L).map { ts =>
+      val dir = tmpDir()
+      us.select(ts.as("ts"), lit("d").as("device_id"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      s"$dir/events.parquet"
+    }
+  }
+
+  /** A Spark-written table of 3 part files over nested, decimal, both
+    * timestamp and char columns. Its schema comes from Spark's row
+    * metadata; the sf0.001 tables carry none, so they take the converter
+    * path. */
+  private def wideTable(): String = {
+    val dir = tmpDir() + "/wide"
+    spark.sql(s"""CREATE TABLE tables_spec_wide (id BIGINT, s STRING,
+      a ARRAY<INT>, m MAP<STRING, INT>, st STRUCT<x: INT, y: STRING>,
+      d DECIMAL(20, 3), ts TIMESTAMP, tn TIMESTAMP_NTZ, c CHAR(5))
+      USING parquet LOCATION '$dir'""")
+    try spark.sql("""INSERT INTO tables_spec_wide
+      SELECT /*+ REPARTITION(3) */ id, CAST(id AS STRING),
+        array(CAST(id AS INT)), map('k', CAST(id AS INT)),
+        named_struct('x', CAST(id AS INT), 'y', 'v'),
+        CAST(id / 7 AS DECIMAL(20, 3)), timestamp_micros(id),
+        CAST(timestamp_micros(id) AS TIMESTAMP_NTZ), 'ab'
+      FROM range(30)""")
+    finally spark.sql("DROP TABLE tables_spec_wide")
+    dir
+  }
+
+  test("Tables.parquet reads the schema spark.read.parquet infers") {
+    val wide = wideTable()
+    assert(new java.io.File(wide).listFiles()
+      .count(_.getName.startsWith("part-")) == 3)
+    val paths = Tables.names.map(n => s"/root/testdata/sf0.001/$n.parquet") ++
+      eventsFixtures() :+ wide
+    for (p <- paths) withClue(s"$p: ") {
+      val (df, jobs) = jobsOf(Tables.parquet(spark, p))
+      assert(jobs == 0, "read through the footer, not the fallback")
+      assert(df.schema == spark.read.parquet(p).schema)
+    }
+    // precondition: the footer carries Spark's row metadata
+    val part = new java.io.File(wide).listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toURI),
+        new org.apache.hadoop.conf.Configuration()))
+    try assert(r.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    finally r.close()
+  }
+
+  /** `body`'s value and the Spark jobs started while it ran, counted up
+    * to a fence job the listener bus delivers after every job `body`
+    * started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("tables.spec.fence") != null)
+          fenced.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setLocalProperty("tables.spec.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("tables.spec.fence", null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a table read and an artifact hit build their DataFrame without a job") {
+    val sf = "/root/testdata/sf0.001"
+    assert(jobsOf(Tables(spark, sf, "lineitem"))._2 == 0)
+    val store = tmpDir()
+    sys.props("graft.paircache.dir") = store
+    try {
+      graft.operators.PairCache.pairStats(spark, sf) // computes, publishes
+      assert(jobsOf(graft.operators.PairCache.pairStats(spark, sf))._2 == 0)
+    } finally sys.props.remove("graft.paircache.dir")
+  }
+
+  test("Tables.parquet raises spark.read.parquet's error on a missing path " +
+    "and an empty directory") {
+    import org.apache.spark.sql.AnalysisException
+    for (p <- Seq(tmpDir() + "/missing.parquet", tmpDir())) withClue(s"$p: ") {
+      val want = intercept[AnalysisException](spark.read.parquet(p))
+      val got = intercept[AnalysisException](Tables.parquet(spark, p))
+      assert(got.getCondition == want.getCondition)
+      assert(got.getMessage == want.getMessage)
+    }
+  }
 }
