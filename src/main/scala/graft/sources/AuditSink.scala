@@ -155,12 +155,8 @@ private[sources] class AuditWrite(table: String, schema: StructType,
         : StreamingDataWriterFactory = new AuditWriterFactory(schema)
     // idempotent by construction: a replayed epoch overwrites its slot
     override def commit(epochId: Long,
-        messages: Array[WriterCommitMessage]): Unit = {
-      if (sys.env.contains("GRAFT_DEBUG_STREAM"))
-        System.err.println(
-          s"[audit-sink] commit epoch=$epochId n=${gather(messages).size}")
+        messages: Array[WriterCommitMessage]): Unit =
       AuditSinkStore.publish(table, epochId, gather(messages))
-    }
     override def abort(epochId: Long,
         messages: Array[WriterCommitMessage]): Unit = ()
   }

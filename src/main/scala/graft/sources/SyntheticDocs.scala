@@ -237,8 +237,6 @@ private[sources] class DocsMicroBatchStream(ratePerBatch: Long,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[DocsOffset].next
     val e = end.asInstanceOf[DocsOffset].next
-    if (sys.env.contains("GRAFT_DEBUG_STREAM"))
-      System.err.println(s"[docs-stream] plan [$s,$e)")
     if (e <= s) Array.empty
     else {
       val per = math.max(1L, (e - s + partitions - 1) / partitions)

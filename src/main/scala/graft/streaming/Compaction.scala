@@ -4,20 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared crash-safe compaction protocol for epoch-partitioned streaming
+/** The one crash-safe compaction protocol for epoch-partitioned streaming
   * state tables, and the marker-aware reads that go with it. Every
-  * epoch-folded table folds and reads through here, each with its own
-  * fold: the streams on [[EpochState.start]] ([[WinnowStream]],
-  * [[BoilerplateStream]], [[RecrawlStream]], [[VectorDedupStream]],
-  * [[TokenStatsStream]], [[StreamingDedup]], [[BloomFilterStream]],
-  * [[PurgeStream]]), those on its gated case [[EpochState.startGated]]
-  * ([[BlocklistStream]], [[ClassifierStream]], [[WebCorpusStream]],
-  * [[SpanStream]], [[PerplexityStream]], [[SketchStream]],
-  * [[ManifestStream]]) and [[Scd2Stream]]. [[NoveltyStream]] only
-  * probes through [[priorEpochs]]; [[DsirStream]] and [[QualityStream]]
-  * keep every epoch's report. [[ManifestReconcileStream]]
-  * (snap-partitioned generations) and [[LayoutStream]] (pointer
-  * generations) keep their own compaction.
+  * epoch-folded table folds through [[compactTable]] with its own fold,
+  * and every stream on [[EpochState.start]] reads its folded tables
+  * through [[readTable]], [[readIfAny]] or [[priorEpochs]]; no stream
+  * keeps its own compaction. [[LayoutStream]]'s per-zp pointer
+  * generations are not epoch folds: they record their high-water epoch
+  * in the same `_folded_upto` file.
   *
   * MAX/distinct-merged tables are idempotent under a crashed compaction,
   * but SUM- and occurrence-counted tables are not: a crash between
@@ -66,7 +60,7 @@ private[streaming] object Compaction {
 
   /** The highest epoch a compaction of `root` has folded away, or -1: a
     * control file that outlives the folded directories, so a new lineage
-    * still numbers after them ([[EpochState.lineageBase]]). */
+    * ([[EpochState.start]]) still numbers after them. */
   def foldedUpTo(fs: FileSystem, root: String): Long =
     EpochState.readSmall(fs, new Path(root, "_folded_upto"))
       .map(_.toLong).getOrElse(-1L)
@@ -125,20 +119,18 @@ private[streaming] object Compaction {
   }
 
   /** Fold all of `root`'s epoch partitions into one generation numbered
-    * below every existing epoch, committing through the marker protocol
-    * above. `fold` must be the table's own merge operation, so
-    * resolve-after ≡ resolve-before at every crash point. */
+    * below every existing epoch (partitioned by `partitionBy`, like the
+    * epochs it folds), committing through the marker protocol above.
+    * `fold` must be the table's own merge operation, so resolve-after ≡
+    * resolve-before at every crash point. */
   def compactTable(spark: SparkSession, root: String,
-      fold: DataFrame => DataFrame): Unit = {
+      fold: DataFrame => DataFrame, partitionBy: Seq[String] = Nil): Unit = {
     val fs = EpochState.fs(spark, root)
     val rootPath = new Path(root)
     if (fs.exists(rootPath)) {
       completePending(spark, root) // repair any interrupted compaction
-      val epochs = fs.listStatus(rootPath).toSeq
-        .filter(_.getPath.getName.startsWith("epoch="))
-      if (epochs.length > 1) {
-        val nums = epochs
-          .map(_.getPath.getName.stripPrefix("epoch=").toLong)
+      val nums = EpochState.epochs(fs, root)
+      if (nums.length > 1) {
         val next = nums.min - 1
         EpochState.writeSmall(fs, new Path(root, "_folded_upto"),
           (nums :+ foldedUpTo(fs, root)).max.toString)
@@ -151,9 +143,9 @@ private[streaming] object Compaction {
         finally out.close()
         val folded = fold(spark.read.parquet(root)
           .filter(col("epoch") =!= lit(next)).drop("epoch"))
-        folded.write.mode("overwrite").parquet(s"$root/epoch=$next")
+        EpochState.writeEpoch(root, next, folded, partitionBy)
         // _SUCCESS is on disk → folded gen authoritative from here on
-        epochs.foreach(e => fs.delete(e.getPath, true))
+        nums.foreach(e => fs.delete(new Path(s"$root/epoch=$e"), true))
         fs.delete(marker(root), false)
       }
     }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
@@ -32,13 +32,20 @@ import org.apache.spark.sql.types.LongType
   * maintenance sweep can delete at leisure; correctness never depends on
   * the deletes.
   *
-  * Exactly-once rows under at-least-once delivery: a same-lineage replay
-  * overwrites its own `epoch=E` directory (deterministic rewrite); a
-  * fresh-lineage redelivery is emptied by the id gate — arrivals
-  * anti-join the table's OWN doc_id set (self-masking the current epoch,
-  * so an interrupted epoch's partial delta never suppresses its own
-  * rewrite). Epoch numbers are collision-free across lineages
-  * ([[EpochState.lineageBase]]).
+  * Exactly-once rows under at-least-once delivery: the epoch loop and
+  * lineage base are [[EpochState.start]]'s, so a same-lineage replay
+  * overwrites its own `epoch=E` directory; a fresh-lineage redelivery is
+  * emptied by the id gate — arrivals anti-join the table's OWN doc_id set
+  * (self-masking the current epoch, so an interrupted epoch's partial
+  * delta never suppresses its own rewrite).
+  *
+  * Epoch high-water mark: every compaction writes
+  * `<table>/delta/_folded_upto` (≥ every epoch it covers and its
+  * generation) BEFORE it flips a pointer, and a new lineage numbers above
+  * it. The on-disk epoch directories are no such mark — [[vacuum]]
+  * deletes covered slices — and [[read]]'s `epoch <= max(covered)`
+  * exclusion would otherwise silently drop a fresh lineage's rows in
+  * every compacted zp until its counter passed the covered epochs.
   *
   * Scale shape: routing is a narrow projection (hash + integer math, the
   * q141 key); the append shuffles nothing; the compaction decision reads
@@ -91,10 +98,10 @@ object LayoutStream {
     * (LayoutStreamSpec asserts this in scanned-file counts). The delta
     * exclusion leans on epoch monotonicity: a compaction folds every
     * on-disk slice of its zp, and epoch numbers never decrease (same
-    * lineage: Structured Streaming; across lineages:
-    * [[EpochState.lineageBase]]), so "covered" is exactly
-    * `epoch <= max(covered)` — one bounded term per compacted zp (≤ 256),
-    * regardless of stream lifetime. */
+    * lineage: Structured Streaming; across lineages: the `_folded_upto`
+    * mark above), so "covered" is exactly `epoch <= max(covered)` — one
+    * bounded term per compacted zp (≤ 256), regardless of stream
+    * lifetime. */
   def read(spark: SparkSession, tableDir: String,
       maskEpoch: Option[Long] = None): DataFrame = {
     val fs = EpochState.fs(spark, tableDir)
@@ -150,48 +157,23 @@ object LayoutStream {
   def start(docs: DataFrame, tableDir: String, checkpoint: String)(
       publish: (Long, Long, Long) => Unit = (_, _, _) => ()): StreamingQuery = {
     val spark = docs.sparkSession
-    val deltaRoot = s"$tableDir/delta"
-    val fs0 = EpochState.fs(spark, tableDir)
-    // Pointer files are the DURABLE epoch high-water mark: vacuum() may
-    // delete every covered delta epoch dir, so a fresh lineage seeded from
-    // directories alone could restart at epoch 0 while pointers still
-    // record covered epochs up to N — and read()'s `epoch <= max(covered)`
-    // exclusion would silently drop all new rows in compacted zps until
-    // the counter passed N. Floor the base above every covered epoch and
-    // committed generation instead (round-13 advice).
-    val ptrFloor = pointers(fs0, s"$tableDir/base").values
-      .foldLeft(-1L) { case (m, (g, es)) =>
-        math.max(m, math.max(g, es.foldLeft(-1L)(math.max)))
-      }
-    val base = EpochState.lineageBase(
-      fs0, tableDir, deltaRoot, checkpoint, floor = ptrFloor)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val epoch = base + epochId
-        val fs = EpochState.fs(spark, tableDir)
-        // id gate against the table itself (self-masking this epoch)
-        val seen = read(spark, tableDir, maskEpoch = Some(epoch))
-          .select(col("doc_id"))
-        val (da, db) = Layout.docDims
-        val fresh = batch.toDF()
-          .dropDuplicates("doc_id")
-          .join(seen, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("source"), col("n_chars"),
-            da.as("da"), db.as("db"))
-          .withColumn("zkey", Layout.zKey2(col("da"), col("db")))
-          .withColumn("zp", expr("zkey div 256"))
-        fresh.persist()
-        try {
-          val n = fresh.count()
-          // route into Z-order partitions; replay rewrites the same dir
-          fresh.write.mode("overwrite").partitionBy("zp")
-            .parquet(s"$deltaRoot/epoch=$epoch")
-          val compacted = compactSkewed(spark, tableDir, fs, gen = epoch)
-          publish(epoch, n, compacted)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    val (da, db) = Layout.docDims
+    EpochState.start(docs, tableDir, s"$tableDir/delta", checkpoint,
+      partitionBy = Seq("zp")) { (batch, e) =>
+      // id gate against the table itself (self-masking this epoch)
+      val seen = read(spark, tableDir, maskEpoch = Some(e.id))
+        .select(col("doc_id"))
+      val fresh = e.pin(batch.dropDuplicates("doc_id")
+        .join(seen, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          da.as("da"), db.as("db"))
+        .withColumn("zkey", Layout.zKey2(col("da"), col("db")))
+        .withColumn("zp", expr("zkey div 256")))
+      val n = fresh.count()
+      e.afterWrite(publish(e.id, n, compactSkewed(spark, tableDir, e.id)))
+      // routed into Z-order partitions; a replay rewrites the same dir
+      Seq(s"$tableDir/delta" -> fresh)
+    }
   }
 
   /** Offline garbage sweep — deletes what compaction left unreferenced:
@@ -219,31 +201,27 @@ object LayoutStream {
         }
       } catch { case _: Throwable => () }
     }
-    val deltaRoot = new Path(s"$tableDir/delta")
-    if (try fs.exists(deltaRoot) catch { case _: Throwable => false })
-      fs.listStatus(deltaRoot).foreach { e =>
-        if (e.isDirectory && e.getPath.getName.startsWith("epoch=")) {
-          val epoch = e.getPath.getName.stripPrefix("epoch=").toLong
-          try {
-            fs.listStatus(e.getPath).foreach { z =>
-              if (z.isDirectory && z.getPath.getName.startsWith("zp=") &&
-                z.getModificationTime < cutoff) {
-                val zp = z.getPath.getName.stripPrefix("zp=").toLong
-                if (ptr.get(zp).exists(_._2.contains(epoch)) &&
-                  (try fs.delete(z.getPath, true)
-                  catch { case _: Throwable => false })) slices += 1
-              }
-            }
-            // an epoch dir emptied by the sweep would poison schema
-            // inference on the delta read — remove it too
-            if (fs.listStatus(e.getPath)
-              .forall(s => s.getPath.getName.startsWith("_")) &&
-              e.getModificationTime < cutoff) {
-              fs.delete(e.getPath, true); ()
-            }
-          } catch { case _: Throwable => () }
+    EpochState.epochs(fs, s"$tableDir/delta").foreach { epoch =>
+      val dir = new Path(s"$tableDir/delta/epoch=$epoch")
+      try {
+        val mtime = fs.getFileStatus(dir).getModificationTime
+        fs.listStatus(dir).foreach { z =>
+          if (z.isDirectory && z.getPath.getName.startsWith("zp=") &&
+            z.getModificationTime < cutoff) {
+            val zp = z.getPath.getName.stripPrefix("zp=").toLong
+            if (ptr.get(zp).exists(_._2.contains(epoch)) &&
+              (try fs.delete(z.getPath, true)
+              catch { case _: Throwable => false })) slices += 1
+          }
         }
-      }
+        // an epoch dir emptied by the sweep would poison schema
+        // inference on the delta read — remove it too
+        if (fs.listStatus(dir).forall(_.getPath.getName.startsWith("_")) &&
+          mtime < cutoff) {
+          fs.delete(dir, true); ()
+        }
+      } catch { case _: Throwable => () }
+    }
     (gens, slices)
   }
 
@@ -251,13 +229,9 @@ object LayoutStream {
     * not folded into any base generation. */
   private def uncoveredSlices(fs: FileSystem, tableDir: String,
       ptr: Map[Long, (Long, Set[Long])]): Map[Long, Seq[Long]] = {
-    val deltaRoot = new Path(s"$tableDir/delta")
-    if (!fs.exists(deltaRoot)) return Map.empty
     val pairs = for {
-      e <- fs.listStatus(deltaRoot).toSeq
-        if e.isDirectory && e.getPath.getName.startsWith("epoch=")
-      epoch = e.getPath.getName.stripPrefix("epoch=").toLong
-      z <- fs.listStatus(e.getPath).toSeq
+      epoch <- EpochState.epochs(fs, s"$tableDir/delta")
+      z <- fs.listStatus(new Path(s"$tableDir/delta/epoch=$epoch")).toSeq
         if z.isDirectory && z.getPath.getName.startsWith("zp=")
       zp = z.getPath.getName.stripPrefix("zp=").toLong
       if !ptr.get(zp).exists(_._2.contains(epoch))
@@ -269,8 +243,8 @@ object LayoutStream {
     * uncovered delta slices into a fresh base generation, committing each
     * via its pointer flip. Returns the number of zps compacted. */
   private def compactSkewed(spark: SparkSession, tableDir: String,
-      fs: FileSystem, gen: Long): Long = {
-    import spark.implicits._
+      gen: Long): Long = {
+    val fs = EpochState.fs(spark, tableDir)
     val ptr = pointers(fs, s"$tableDir/base")
     val skewed = uncoveredSlices(fs, tableDir, ptr)
       .filter(_._2.size > MaxDeltaSlices)
@@ -290,6 +264,10 @@ object LayoutStream {
         .write.mode("overwrite")
         .parquet(s"$tableDir/base/zp=$zp/gen=$gen")
       val covered = ptr.get(zp).map(_._2).getOrElse(Set.empty) ++ epochs
+      // the epoch high-water mark lands BEFORE the flip (Scaladoc above):
+      // a pointer never covers an epoch a new lineage could reuse
+      EpochState.writeSmall(fs, new Path(s"$tableDir/delta/_folded_upto"),
+        (covered + gen).max.toString)
       // commit point: one atomic pointer PUT flips the zp to the new
       // generation AND marks its inputs covered, in the same object
       EpochState.writeSmall(fs, new Path(s"$tableDir/base/zp=$zp/_gen"),

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -19,33 +19,29 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Input: a stream of manifest rows (doc_id, source) — one row per doc
   * per crawl snapshot; with `snapCol`, rows carry their snapshot number
   * (empty batches harmless, split/merged deliveries fold in ascending
-  * order — the [[Scd2Stream]] clock discipline), else the foreachBatch
-  * epoch id is the snapshot clock (one lineage = one clock).
+  * order — the [[Scd2Stream]] clock discipline), else the raw
+  * micro-batch id is the snapshot clock (one lineage = one clock).
   *
   * State layout at scale (the [[StreamingDedup]] discipline): NO streaming
   * state store — two append-shaped epoch-partitioned parquet tables under
-  * `stateDir`, each `epoch=E/snap=S/` (snap is a PARTITION column):
-  * `presence/` (each manifest as delivered) and `tombstones/` (docs
-  * removed AT snap). Per-batch cost is O(batch + previous manifest),
-  * never O(history): the previous manifest is read with a `snap = prev`
-  * PARTITION filter (directory-pruned), and the reconcile is one
-  * left-anti join each way keyed on doc_id (primary key — even
-  * distribution, no skew); rows carry ids + source only, never text.
-  * The snapshot clock — (batch min, batch max, prev-of-min) — lives in a
-  * `_manifest_clock` control file, so no scan ever derives it; an
-  * at-least-once redelivery of the LAST batch (its exact snap range)
-  * re-reads the SAME stored prev and overwrites its own epoch partitions
-  * — exactly-once state under at-least-once foreachBatch. Any other
-  * snapshot at or below the stored clock fails fast (regression guard).
-  * Epoch partition names are collision-free across checkpoint lineages
-  * ([[EpochState.lineageBase]]).
+  * `stateDir`, each `epoch=E/snap=S/` (snap is a PARTITION column at every
+  * generation, the compacted one included): `presence/` (each manifest as
+  * delivered) and `tombstones/` (docs removed AT snap). Per-batch cost is
+  * O(batch + previous manifest), never O(history): the previous manifest
+  * is read with a `snap = prev` PARTITION filter (directory-pruned), and
+  * the reconcile is one left-anti join each way keyed on doc_id (primary
+  * key — even distribution, no skew); rows carry ids + source only, never
+  * text. The epoch loop, lineage base and snapshot clock
+  * (`_manifest_clock`) are [[EpochState.start]]'s and
+  * [[EpochState.snapshotClock]]'s: a replay of the LAST batch re-reads the
+  * SAME prev manifest the clock recorded and overwrites its own epoch
+  * partitions; any other snapshot at or below the clock fails fast.
   *
   * Reappearance: a doc tombstoned at s and present again in manifest s'
   * simply re-enters presence at s' — downstream consumers (e.g. the SCD2
   * close branch) see close-then-reopen with an explicit hole.
   */
 object ManifestReconcileStream {
-  import EpochState.{readSmall, writeSmall}
 
   /** Starts reconciliation over a stream of manifest rows (doc_id,
     * source [, snapCol]). `publish` receives per processed snapshot
@@ -57,91 +53,46 @@ object ManifestReconcileStream {
       : StreamingQuery = {
     val spark = manifests.sparkSession
     val presenceRoot = s"$stateDir/presence"
-    val tombRoot = s"$stateDir/tombstones"
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, presenceRoot, checkpoint)
-    val clockPath = new Path(stateDir, "_manifest_clock")
-    manifests.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val entries = batch.select(col("doc_id"), col("source"),
-          snapCol.map(c => col(c).cast("long")).getOrElse(lit(epochId))
-            .as("snap"))
-        entries.persist()
-        val pinned = scala.collection.mutable.ArrayBuffer[DataFrame](entries)
-        try {
-          val snaps = entries.select(col("snap")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          if (snaps.nonEmpty) { // empty batch: don't consume the clock
-            val fs = EpochState.fs(spark, stateDir)
-            // Clock = (min, max, prevOfMin) of the last processed batch.
-            // Allowed: strictly newer snapshots, or the EXACT redelivery
-            // of the last batch (at-least-once replay — reuses the same
-            // stored prev, so the replay reconciles against the identical
-            // previous manifest). Anything else is a regression: fail
-            // fast before writing.
-            val stored = readSmall(fs, clockPath).map(_.split(","))
-              .map(a => (a(0).toLong, a(1).toLong, a(2).toLong))
-            val isReplay = stored.exists { case (mn, mx, _) =>
-              snaps.head == mn && snaps.last == mx }
-            stored.foreach { case (_, mx, _) =>
-              require(isReplay || snaps.head > mx,
-                s"manifest clock regression: batch carries snapshot " +
-                  s"${snaps.head} but $clockPath already records $mx — " +
-                  "only the last processed batch may be redelivered")
-            }
-            val hasPresence = fs.exists(new Path(presenceRoot)) &&
-              fs.listStatus(new Path(presenceRoot)).nonEmpty
-            def storedPresence(snap: Long): DataFrame =
-              if (snap < 0 || !hasPresence)
-                entries.limit(0).select(col("doc_id"), col("source"))
-              else spark.read.parquet(presenceRoot)
-                .filter(col("snap") === lit(snap)) // partition-pruned
-                .select(col("doc_id"), col("source")).distinct()
-            val firstPrev = stored match {
-              case Some((_, mx, _)) if !isReplay => mx
-              case Some((_, _, pv)) => pv // replay: the ORIGINAL prev
-              case None => -1L
-            }
-            // Fold snapshots ascending with intra-batch visibility; write
-            // once per table at the end (one epoch partition per batch).
-            var prevManifest = storedPresence(firstPrev)
-            var presAcc = entries.limit(0)
-            var tombAcc = entries.limit(0)
-            val reports =
-              scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-            snaps.foreach { snap =>
-              val manifest = entries.filter(col("snap") === lit(snap))
-                .select(col("doc_id"), col("source")).distinct()
-              manifest.persist()
-              pinned += manifest
-              val tombs = prevManifest
-                .join(manifest.select(col("doc_id")), Seq("doc_id"),
-                  "left_anti")
-                .select(col("doc_id"), col("source"), lit(snap).as("snap"))
-              val nAdded = manifest
-                .join(prevManifest.select(col("doc_id")), Seq("doc_id"),
-                  "left_anti").count()
-              val nRemoved = tombs.count()
-              reports += ((snap, nAdded, nRemoved, manifest.count() - nAdded))
-              presAcc = presAcc.unionByName(
-                manifest.select(col("doc_id"), col("source"),
-                  lit(snap).as("snap")))
-              tombAcc = tombAcc.unionByName(tombs)
-              prevManifest = manifest
-            }
-            val epoch = base + epochId
-            presAcc.write.mode("overwrite").partitionBy("snap")
-              .parquet(s"$presenceRoot/epoch=$epoch")
-            tombAcc.write.mode("overwrite").partitionBy("snap")
-              .parquet(s"$tombRoot/epoch=$epoch")
-            writeSmall(fs, clockPath,
-              s"${snaps.head},${snaps.last},$firstPrev")
-            reports.foreach { case (s, a, r, c) => publish(s, a, r, c) }
+    val clock = new Path(stateDir, "_manifest_clock")
+    // presence is written last, so it carries the lineage base
+    EpochState.start(manifests, stateDir, presenceRoot, checkpoint,
+      partitionBy = Seq("snap")) { (batch, e) =>
+      val entries = e.pin(batch.select(col("doc_id"), col("source"),
+        snapCol.map(c => col(c).cast("long")).getOrElse(lit(e.batchId))
+          .as("snap")))
+      EpochState.snapshotClock(entries, e, clock, "manifest") {
+        (snaps, firstPrev) =>
+          // Fold snapshots ascending with intra-batch visibility; write
+          // once per table at the end (one epoch partition per batch).
+          var prevManifest = Compaction.readIfAny(spark, presenceRoot)
+            .map(_.filter(col("snap") === lit(firstPrev)) // partition-pruned
+              .select(col("doc_id"), col("source")).distinct())
+            .getOrElse(entries.limit(0).select(col("doc_id"), col("source")))
+          var presAcc = entries.limit(0)
+          var tombAcc = entries.limit(0)
+          val reports = snaps.map { snap =>
+            val manifest = e.pin(entries.filter(col("snap") === lit(snap))
+              .select(col("doc_id"), col("source")).distinct())
+            val tombs = prevManifest
+              .join(manifest.select(col("doc_id")), Seq("doc_id"),
+                "left_anti")
+              .select(col("doc_id"), col("source"), lit(snap).as("snap"))
+            val nAdded = manifest
+              .join(prevManifest.select(col("doc_id")), Seq("doc_id"),
+                "left_anti").count()
+            val nRemoved = tombs.count()
+            presAcc = presAcc.unionByName(
+              manifest.select(col("doc_id"), col("source"),
+                lit(snap).as("snap")))
+            tombAcc = tombAcc.unionByName(tombs)
+            prevManifest = manifest
+            (snap, nAdded, nRemoved, manifest.count() - nAdded)
           }
-        } finally { pinned.foreach(_.unpersist()); () }
+          e.afterWrite(reports.foreach { case (s, a, r, c) =>
+            publish(s, a, r, c) })
+          Seq(s"$stateDir/tombstones" -> tombAcc, presenceRoot -> presAcc)
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    }
   }
 
   /** All tombstones reconciled so far: (doc_id, source, snap) — the doc
@@ -149,7 +100,7 @@ object ManifestReconcileStream {
     * manifest. Duplicate rows from a fresh-lineage redelivery are folded
     * by distinct (byte-identical under the redelivery contract). */
   def tombstones(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/tombstones")
+    Compaction.readTable(spark, s"$stateDir/tombstones")
       .select(col("doc_id"), col("source"),
         col("snap").cast("long").as("snap"))
       .distinct()
@@ -157,7 +108,7 @@ object ManifestReconcileStream {
   /** The live doc set as of the LAST reconciled manifest. */
   def live(spark: SparkSession, stateDir: String): DataFrame = {
     val fs = EpochState.fs(spark, stateDir)
-    val cur = readSmall(fs, new Path(stateDir, "_manifest_clock"))
+    val cur = EpochState.readSmall(fs, new Path(stateDir, "_manifest_clock"))
       .map(_.split(",")(1).toLong)
     cur match {
       case None => // typed empty (like closures()/PurgeStream.read): callers
@@ -165,35 +116,21 @@ object ManifestReconcileStream {
         spark.range(0).select(col("id").as("doc_id"),
           lit("").as("source")).limit(0)
       case Some(mx) =>
-        spark.read.parquet(s"$stateDir/presence")
+        Compaction.readTable(spark, s"$stateDir/presence")
           .filter(col("snap") === lit(mx))
           .select(col("doc_id"), col("source")).distinct()
     }
   }
 
-  /** Offline small-files maintenance. `snap` is a partition column at
-    * every generation (the compacted one included), so the snap-keyed
-    * partition pruning is identical across a compaction boundary. Run
-    * while the stream is stopped. */
+  /** Offline small-files maintenance ([[Compaction]], distinct fold).
+    * `snap` stays a partition column of the folded generation, so the
+    * snap-keyed partition pruning is identical across a compaction
+    * boundary. Run while the stream is stopped. */
   def compactState(spark: SparkSession, stateDir: String): Unit =
     Seq("presence", "tombstones").foreach { t =>
-      val root = s"$stateDir/$t"
-      val fs = EpochState.fs(spark, root)
-      val rootPath = new Path(root)
-      if (fs.exists(rootPath)) {
-        val epochs = fs.listStatus(rootPath).toSeq
-          .filter(_.getPath.getName.startsWith("epoch="))
-        if (epochs.length > 1) {
-          val next = epochs
-            .map(_.getPath.getName.stripPrefix("epoch=").toLong).min - 1
-          val folded = spark.read.parquet(root)
-            .select(col("doc_id"), col("source"),
-              col("snap").cast("long").as("snap"))
-            .distinct()
-          folded.write.mode("overwrite").partitionBy("snap")
-            .parquet(s"$root/epoch=$next")
-          epochs.foreach(e => fs.delete(e.getPath, true))
-        }
-      }
+      Compaction.compactTable(spark, s"$stateDir/$t",
+        _.select(col("doc_id"), col("source"),
+          col("snap").cast("long").as("snap")).distinct(),
+        partitionBy = Seq("snap"))
     }
 }

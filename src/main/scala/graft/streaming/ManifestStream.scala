@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.StringType
   * batch writes only its genuinely-new docs' state, same-lineage replay
   * overwrites its own epoch partitions, fresh-lineage redelivery is
   * emptied by the gate, and epoch numbers are collision-free across
-  * checkpoint lineages ([[EpochState.lineageBase]]). On top of that, an
+  * checkpoint lineages ([[EpochState.start]]). On top of that, an
   * epoch only becomes VISIBLE through a commit marker written after its
   * last state file (`commits/epoch=N`, one atomic PUT): the seen gate
   * and every read-time table scan filter to marked epochs, so a crash
@@ -87,13 +87,8 @@ object ManifestStream {
 
   private[streaming] def committedEpochs(
       fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Set[Long] = {
-    val p = new Path(commitsRoot(stateDir))
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("epoch="))
-      .map(_.stripPrefix("epoch=").toLong).toSet
-  }
+      stateDir: String): Set[Long] =
+    EpochState.epochs(fs, commitsRoot(stateDir)).toSet
 
   /** Marker-filtered read of one state table: only committed epochs are
     * visible (the caller supplies one snapshot of the marker set so a
@@ -210,16 +205,10 @@ object ManifestStream {
     // marker are invisible garbage from a mid-epoch crash — delete them
     // BEFORE folding, so an identity fold can never bake orphan
     // multiplicities into the compacted generation
-    Tables.foreach { name =>
-      val root = new Path(s"$stateDir/$name")
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("epoch="))
-          .filterNot(p =>
-            keep(p.getName.stripPrefix("epoch=").toLong))
-          .foreach { p => try { fs.delete(p, true); () }
-            catch { case _: Throwable => () } }
-    }
+    for (name <- Tables; e <- EpochState.epochs(fs, s"$stateDir/$name")
+        if !keep(e))
+      try { fs.delete(new Path(s"$stateDir/$name/epoch=$e"), true); () }
+      catch { case _: Throwable => () }
     // PRE-mark each root's would-be folded generation (min epoch - 1,
     // [[Compaction.compactTable]]'s numbering) as committed BEFORE the
     // fold can delete the covered originals — a crash after the fold but
@@ -228,13 +217,8 @@ object ManifestStream {
     // for a fold that never happens is pruned below; readers require
     // marker AND partition, so a dangling marker is inert.
     def compactMarked(name: String)(fold: DataFrame => DataFrame): Unit = {
-      val root = new Path(s"$stateDir/$name")
-      if (fs.exists(root)) {
-        val nums = fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("epoch="))
-          .map(_.stripPrefix("epoch=").toLong)
-        if (nums.length > 1) markCommitted(fs, stateDir, nums.min - 1)
-      }
+      val nums = EpochState.epochs(fs, s"$stateDir/$name")
+      if (nums.length > 1) markCommitted(fs, stateDir, nums.min - 1)
       Compaction.compactTable(spark, s"$stateDir/$name", fold)
     }
     compactMarked("docsig")(df => df.dropDuplicates("doc_id"))
@@ -248,13 +232,8 @@ object ManifestStream {
     compactMarked("seen")(df => df.select(col("doc_id")).distinct())
     // prune markers no live partition carries anymore, so the marker set
     // stays one entry per live generation
-    val live = Tables.flatMap { name =>
-      val root = new Path(s"$stateDir/$name")
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong)
-    }.toSet
+    val live = Tables.flatMap(name =>
+      EpochState.epochs(fs, s"$stateDir/$name")).toSet
     (committedEpochs(fs, stateDir) -- live).foreach { e =>
       try { fs.delete(new Path(commitsRoot(stateDir), s"epoch=$e"), false)
         () } catch { case _: Throwable => () }

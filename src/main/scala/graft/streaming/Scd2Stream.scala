@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -42,50 +42,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * into the compacted generation — so the epoch's overwrite stays
   * exactly-once under at-least-once foreachBatch.
   *
-  * Snapshot clock: by default the foreachBatch epoch id IS the crawl-
+  * Snapshot clock: by default the raw micro-batch id IS the crawl-
   * snapshot number (one checkpoint lineage = one snapshot clock, exactly
   * like the batch build's `s` column). That default is only sound when the
   * trigger delivers exactly one snapshot per micro-batch: a spurious EMPTY
-  * batch still advances the epoch clock and gap-breaks every open segment
+  * batch still advances the batch id and gap-breaks every open segment
   * at the next delivery (a conservative split, never a wrong fuse — and the
   * empty batch itself is skipped without writing a partition). When the
   * observations carry their own snapshot number, pass it as `snapCol` and
   * the clock fragility disappears: contiguity is judged on the data itself
-  * (epochId becomes only part of the idempotent partition name), empty
-  * batches are harmless, a snapshot split across micro-batches keeps its
-  * number, and a batch spanning several snapshots is processed in ascending
-  * snapshot order with intra-batch visibility.
+  * (the batch id becomes only part of the idempotent partition name),
+  * empty batches are harmless, a snapshot split across micro-batches keeps
+  * its number, and a batch spanning several snapshots is processed in
+  * ascending snapshot order with intra-batch visibility.
   *
-  * Checkpoint lineages: epochId restarts at 0 under a fresh checkpoint, so
-  * partition names derived from it alone collide across lineages — the
-  * exact recovery pattern "restart with a new checkpoint" would clobber an
-  * existing `epoch=0` partition and silently lose segments. Each lineage
-  * therefore writes at `epoch = base + epochId`, where `base` is assigned
-  * ONCE per lineage (max existing epoch + 1, persisted in a
-  * `_lineage_<md5(checkpoint)>` marker so same-lineage restarts reuse it
-  * and replayed epochs still overwrite their own partition). A redelivery
-  * under a fresh lineage then lands in a FRESH partition as duplicate
-  * rows — which the row-level `valid_to` probe guard hides from the merge
-  * and [[resolve]]'s supersession fold collapses, and which the next
-  * [[compactState]]'s `.distinct()` physically removes.
-  *
-  * Clock regression guard: a batch carrying a snapshot number at or below
-  * the max `valid_to` already stored would be processed as if new and
-  * could assert overlapping segments for the same doc. The clock — the
-  * last batch's (min, max) snapshot range — lives in a one-line
-  * `_snap_clock` file alongside the state (O(1) to check: the per-batch
-  * probe stays O(batch + open set), never a history scan). A batch passes
-  * iff it is strictly newer (`min(snap) > stored max`) or it is the EXACT
-  * redelivery of the last batch's range — the at-least-once replay case,
-  * whose offsets were fixed at checkpoint time and whose content must be
-  * byte-identical (the standard replay contract); it is idempotent via
-  * the probe guard. The clock is written AFTER the epoch commits, so a
-  * crash between the two leaves it one epoch stale — the guard is
-  * fail-fast protection against mis-wired pipelines, not a substitute
-  * for the replay contract.
+  * The epoch loop, lineage base and clock regression guard (`_snap_clock`)
+  * are [[EpochState.start]]'s and [[EpochState.snapshotClock]]'s; a
+  * fresh-lineage redelivery lands as duplicate rows, which the `valid_to`
+  * probe guard hides from the merge, [[resolve]]'s supersession fold
+  * collapses and the next [[compactState]]'s `.distinct()` removes.
   */
 object Scd2Stream {
-  import EpochState.{readSmall, writeSmall}
 
   /** Starts maintenance over a stream with columns (doc_id, source, fp)
     * plus, when `snapCol` is set, the snapshot-number column it names, and,
@@ -104,129 +81,85 @@ object Scd2Stream {
       publish: (Long, Long, Long) => Unit = (_, _, _) => ()): StreamingQuery = {
     val spark = observations.sparkSession
     val root = s"$stateDir/segments"
-    val closuresRoot = s"$stateDir/closures"
-    // Assigned once per lineage, BEFORE the first batch: collision-free
-    // epoch partition names across checkpoint lineages (Scaladoc above).
-    val base = EpochState.lineageBase(
-      EpochState.fs(spark, stateDir), stateDir, root, checkpoint)
-    val clockPath = new Path(stateDir, "_snap_clock")
-    observations.writeStream
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val raw = batch.select(col("doc_id"), col("source"), col("fp"),
-          snapCol.map(c => col(c).cast("long")).getOrElse(lit(epochId))
-            .as("snap"),
-          deleteCol.map(c => coalesce(col(c), lit(false)))
-            .getOrElse(lit(false)).as("del"))
-        raw.persist()
-        // End-of-life close branch (round-11 verdict item 5): rows marked
-        // by `deleteCol` are TOMBSTONES — the doc was absent from this
-        // snapshot's crawl (e.g. [[ManifestReconcileStream.tombstones]]).
-        // A tombstoned doc's open segment is already maximal at snap-1
-        // (absence never extended it), so closing is purely a RECORD: the
-        // (doc_id, source, snap) row lands in `closures/`, letting
-        // [[resolveLive]] distinguish a terminally-closed doc from one
-        // that merely hasn't been re-crawled yet. The merge below never
-        // sees tombstone rows, so [[resolve]]'s equality with the batch
-        // build on the observed rows is untouched; a reappearance after a
-        // closure opens a new segment through the ordinary gap rule —
-        // with the hole now explicit in `closures`.
-        val entries = raw.filter(!col("del")).drop("del")
-        val deletes = raw.filter(col("del"))
-          .select(col("doc_id"), col("source"), col("snap"))
-        entries.persist()
-        val pinned = scala.collection.mutable.ArrayBuffer[DataFrame](
-          raw, entries)
-        try {
-          // One bounded pull: the batch's distinct snapshot numbers
-          // (scalar under the one-snapshot-per-batch contract; a short
-          // ascending list when a backlog merges snapshots into one
-          // batch). Tombstones participate in the clock — a snapshot
-          // whose delivery is ALL tombstones still advances it.
-          val snaps = raw.select(col("snap")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          if (snaps.nonEmpty) { // empty batch: don't consume the clock
-            val fs = EpochState.fs(spark, stateDir)
-            // Fail fast on a snapshot-clock regression (Scaladoc above):
-            // a snap at or below the stored clock would assert overlapping
-            // segments. The clock records the last batch's (min, max) snap
-            // range, so an at-least-once redelivery — which re-carries
-            // EXACTLY that range (offsets are fixed at checkpoint time) —
-            // is recognized and allowed even when the batch merged several
-            // snapshots; anything else must be strictly newer.
-            readSmall(fs, clockPath).map(_.split(",")).foreach { a =>
-              val (mn, mx) = (a(0).toLong, a(1).toLong)
-              val isReplay = snaps.head == mn && snaps.last == mx
-              require(isReplay || snaps.head > mx,
-                s"snapshot clock regression: batch carries snapshot " +
-                  s"${snaps.head} but $clockPath already records $mx — " +
-                  "only the last processed batch may be redelivered")
-            }
-            val stored = Compaction.readIfAny(spark, root)
-              .getOrElse(entries.limit(0).select(col("doc_id"), col("fp"),
-                lit(0L).as("valid_from"), lit(0L).as("valid_to")))
-              .select(col("doc_id"), col("fp"), col("valid_from"),
-                col("valid_to"))
-            // Fold snapshots in order; earlier snapshots' output rows are
-            // visible to later ones (acc), so a split/merged delivery
-            // derives the same segments as one-batch-per-snapshot.
-            var acc = entries.limit(0).select(col("doc_id"), col("source"),
-              col("fp"), lit(0L).as("valid_from"), lit(0L).as("valid_to"))
-            var (ext, opened) = (0L, 0L)
-            snaps.foreach { snap =>
-              // Latest open segment per doc: ONLY rows asserted at snap-1
-              // matter (closed/gapped segments merge identically to absent
-              // ones), which both bounds the scan to the open set and
-              // hides a replayed epoch's own rows (valid_to = snap). The
-              // supersession fold is kept for defense; post-filter it sees
-              // at most one row per doc.
-              val open = stored.unionByName(
-                  acc.select(col("doc_id"), col("fp"),
-                    col("valid_from"), col("valid_to")))
-                .filter(col("valid_to") === lit(snap - 1))
-                .groupBy(col("doc_id"))
-                .agg(max(struct(col("valid_from"), col("valid_to"),
-                  col("fp"))).as("t"))
-                .select(col("doc_id"), col("t.valid_from").as("o_vf"),
-                  col("t.valid_to").as("o_vt"), col("t.fp").as("o_fp"))
-              val merged = entries.filter(col("snap") === lit(snap))
-                .join(open, Seq("doc_id"), "left_outer")
-                .withColumn("extends",
-                  col("o_fp").isNotNull && col("o_fp") === col("fp"))
-                .select(col("doc_id"), col("source"), col("fp"),
-                  when(col("extends"), col("o_vf")).otherwise(lit(snap))
-                    .as("valid_from"),
-                  lit(snap).as("valid_to"),
-                  col("extends"))
-              merged.persist() // report + union + state write all scan it
-              pinned += merged
-              val counts = merged.groupBy()
-                .agg(sum(when(col("extends"), 1L).otherwise(0L)),
-                  sum(when(col("extends"), 0L).otherwise(1L)))
-                .collect()
-              if (counts.nonEmpty && !counts.head.isNullAt(0)) {
-                ext += counts.head.getLong(0)
-                opened += counts.head.getLong(1)
-              }
-              acc = acc.unionByName(merged.drop("extends"))
-            }
-            acc.write.mode("overwrite")
-              .parquet(s"$root/epoch=${base + epochId}")
-            if (!deletes.isEmpty) // deterministic: replay rewrites equal rows
-              deletes.write.mode("overwrite")
-                .parquet(s"$closuresRoot/epoch=${base + epochId}")
-            // Clock advances only after the epoch commits: a crash in
-            // between leaves it stale by one epoch (guard is fail-fast,
-            // not the replay contract). Replay rewrites the same value.
-            writeSmall(fs, clockPath, s"${snaps.head},${snaps.last}")
-            // base-adjusted epoch, like the other streams: after a
-            // fresh-lineage restart the raw epochId restarts at 0 and
-            // would collide for consumers keying reports by epoch
-            publish(base + epochId, ext, opened) // after commit: at-least-once
+    val clock = new Path(stateDir, "_snap_clock")
+    // segments is written last, so it carries the lineage base
+    EpochState.start(observations, stateDir, root, checkpoint) { (batch, e) =>
+      val raw = e.pin(batch.select(col("doc_id"), col("source"), col("fp"),
+        snapCol.map(c => col(c).cast("long")).getOrElse(lit(e.batchId))
+          .as("snap"),
+        deleteCol.map(c => coalesce(col(c), lit(false)))
+          .getOrElse(lit(false)).as("del")))
+      // End-of-life close branch (round-11 verdict item 5): rows marked
+      // by `deleteCol` are TOMBSTONES — the doc was absent from this
+      // snapshot's crawl (e.g. [[ManifestReconcileStream.tombstones]]).
+      // A tombstoned doc's open segment is already maximal at snap-1
+      // (absence never extended it), so closing is purely a RECORD: the
+      // (doc_id, source, snap) row lands in `closures/`, letting
+      // [[resolveLive]] distinguish a terminally-closed doc from one
+      // that merely hasn't been re-crawled yet. The merge below never
+      // sees tombstone rows, so [[resolve]]'s equality with the batch
+      // build on the observed rows is untouched; a reappearance after a
+      // closure opens a new segment through the ordinary gap rule —
+      // with the hole now explicit in `closures`.
+      val entries = e.pin(raw.filter(!col("del")).drop("del"))
+      val deletes = raw.filter(col("del"))
+        .select(col("doc_id"), col("source"), col("snap"))
+      // Tombstones participate in the clock — a snapshot whose delivery
+      // is ALL tombstones still advances it.
+      EpochState.snapshotClock(raw, e, clock, "snapshot") { (snaps, _) =>
+        val stored = Compaction.readIfAny(spark, root)
+          .getOrElse(entries.limit(0).select(col("doc_id"), col("fp"),
+            lit(0L).as("valid_from"), lit(0L).as("valid_to")))
+          .select(col("doc_id"), col("fp"), col("valid_from"),
+            col("valid_to"))
+        // Fold snapshots in order; earlier snapshots' output rows are
+        // visible to later ones (acc), so a split/merged delivery
+        // derives the same segments as one-batch-per-snapshot.
+        var acc = entries.limit(0).select(col("doc_id"), col("source"),
+          col("fp"), lit(0L).as("valid_from"), lit(0L).as("valid_to"))
+        var (ext, opened) = (0L, 0L)
+        snaps.foreach { snap =>
+          // Latest open segment per doc: ONLY rows asserted at snap-1
+          // matter (closed/gapped segments merge identically to absent
+          // ones), which both bounds the scan to the open set and
+          // hides a replayed epoch's own rows (valid_to = snap). The
+          // supersession fold is kept for defense; post-filter it sees
+          // at most one row per doc.
+          val open = stored.unionByName(
+              acc.select(col("doc_id"), col("fp"),
+                col("valid_from"), col("valid_to")))
+            .filter(col("valid_to") === lit(snap - 1))
+            .groupBy(col("doc_id"))
+            .agg(max(struct(col("valid_from"), col("valid_to"),
+              col("fp"))).as("t"))
+            .select(col("doc_id"), col("t.valid_from").as("o_vf"),
+              col("t.valid_to").as("o_vt"), col("t.fp").as("o_fp"))
+          // report + union + state write all scan it
+          val merged = e.pin(entries.filter(col("snap") === lit(snap))
+            .join(open, Seq("doc_id"), "left_outer")
+            .withColumn("extends",
+              col("o_fp").isNotNull && col("o_fp") === col("fp"))
+            .select(col("doc_id"), col("source"), col("fp"),
+              when(col("extends"), col("o_vf")).otherwise(lit(snap))
+                .as("valid_from"),
+              lit(snap).as("valid_to"),
+              col("extends")))
+          val counts = merged.groupBy()
+            .agg(sum(when(col("extends"), 1L).otherwise(0L)),
+              sum(when(col("extends"), 0L).otherwise(1L)))
+            .collect()
+          if (counts.nonEmpty && !counts.head.isNullAt(0)) {
+            ext += counts.head.getLong(0)
+            opened += counts.head.getLong(1)
           }
-        } finally { pinned.foreach(_.unpersist()); () }
+          acc = acc.unionByName(merged.drop("extends"))
+        }
+        e.afterWrite(publish(e.id, ext, opened)) // at-least-once
+        // deterministic: a replay rewrites equal closure rows
+        (if (deletes.isEmpty) Nil
+        else Seq(s"$stateDir/closures" -> deletes)) :+ (root -> acc)
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    }
   }
 
   /** The maintained SCD2 table: one row per (doc_id, valid_from) segment

@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * own partitions (state reads self-mask the current epoch); a
   * fresh-lineage redelivery lands in a fresh partition but its delta is
   * empty by the gate. Epoch numbers are collision-free across lineages
-  * ([[EpochState.lineageBase]]).
+  * ([[EpochState.start]]).
   *
   * Shape at scale: the per-batch delta is one shingle pass over the
   * batch (partial-aggregated to ≤ m rows/source + d·w cells before

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * index delta covers genuinely-new documents alone. Same-lineage replay
   * overwrites its own epoch partitions; fresh-lineage redelivery is
   * emptied by the gate; epoch numbers are collision-free across lineages
-  * ([[EpochState.lineageBase]]). Compaction and its crash safety are the
+  * ([[EpochState.start]]). Compaction and its crash safety are the
   * shared [[Compaction]] marker protocol — occurrence counts are
   * SUM-shaped, so the both-generations-on-disk crash would double-count
   * without it.

@@ -154,9 +154,11 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
   private def gopherBrute(text: String)
       : (Long, Map[Int, Long], Map[Int, Long], Boolean) = {
     import org.apache.spark.unsafe.types.UTF8String
+    // characters are code points, as in q151 (a non-BMP character is
+    // one character, not two UTF-16 units)
+    def chars(s: String): Long = s.codePointCount(0, s.length).toLong
     val w = text.split(" ", -1)
-    val nChars = text.length.toLong
-    val pre = w.scanLeft(0L)(_ + _.length) // pre(i) = chars of words 1..i
+    val nChars = chars(text)
     val top = Quality.TopNgramPct.map { case (n, _) =>
       val gs =
         if (w.length >= n) w.sliding(n).map(_.mkString(" ")).toVector
@@ -169,7 +171,7 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
         val (g, c) = counts.minBy { case (g, c) =>
           (-c, graft.functions.HashUtil.md5Hash60(UTF8String.fromString(g)))
         }
-        n -> c * g.length
+        n -> c * chars(g)
       }
     }.toMap
     val dup = Quality.DupNgramPct.map { case (n, _) =>
@@ -177,15 +179,19 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
         if (w.length >= n) w.sliding(n).map(_.mkString(" ")).toVector
         else Vector.empty[String]
       val counts = gs.groupBy(identity).map { case (g, o) => g -> o.size }
-      val covered = scala.collection.mutable.Set.empty[Int] // token idx, 1-based
+      // token p (1-based) is covered when a duplicated occurrence holds
+      // it; the separator after token p only when ONE duplicated
+      // occurrence holds both p and p + 1, so two abutting occurrences
+      // stay two islands and the space between them is uncovered
+      val covered = scala.collection.mutable.Set.empty[Int]
+      val seps = scala.collection.mutable.Set.empty[Int]
       gs.zipWithIndex.foreach { case (g, i0) =>
-        if (counts(g) >= 2) (i0 + 1 to i0 + n).foreach(covered += _)
+        if (counts(g) >= 2) {
+          (i0 + 1 to i0 + n).foreach(covered += _)
+          (i0 + 1 until i0 + n).foreach(seps += _)
+        }
       }
-      // covered chars = word lengths + the separators BETWEEN covered
-      // consecutive tokens (a gap in coverage means the space is uncovered)
-      val chars = covered.toSeq.map(p => pre(p) - pre(p - 1)).sum +
-        covered.count(p => covered.contains(p + 1))
-      n -> chars.toLong
+      n -> (covered.toSeq.map(p => chars(w(p - 1))).sum + seps.size)
     }.toMap
     val keep = Quality.TopNgramPct.forall { case (n, pct) =>
       top(n) * 100 <= pct * nChars
@@ -214,14 +220,20 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
       // that one top-4-gram occurrence sits under the 16% char bar)
       (3L, (1 to 100).map(i => s"u$i").mkString(" ")),
       // too short for any gram width
-      (4L, "q")
+      (4L, "q"),
+      // abutting duplicated 5-grams: two islands of 9 chars, the space
+      // between them uncovered -> 18, not 19
+      (5L, "p q r s t p q r s t"),
+      // a non-BMP character is one character: n_chars 7, top2 mass
+      // 2 x len("𝔸 b") = 6
+      (6L, "𝔸 b 𝔸 b")
     ).toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("gopher").toFile
     tmp.deleteOnExit()
     docs.write.mode("overwrite")
       .parquet(new java.io.File(tmp, "documents.parquet").getPath)
     val rows = q151Rows(tmp.getPath)
-    assert(rows.keySet == Set(1L, 2L, 3L, 4L))
+    assert(rows.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
 
     val d1 = rows(1L)
     val n1 = d1.getAs[Long]("n_chars").toDouble
@@ -241,6 +253,14 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
       assert(d4.getAs[Double](s"top${n}_frac") == 0.0, s"short top$n")
     }
     assert(d4.getAs[Boolean]("gopher_keep"))
+    // the driver-side recount reads the same as q151 on both edge cases
+    val (n5, _, dup5, _) = gopherBrute("p q r s t p q r s t")
+    assert(dup5(5) == 18L && n5 == 19L, s"recount dup5 ${dup5(5)}")
+    assert(rows(5L).getAs[Double]("dup5_frac") == 18.0 / 19.0)
+    val (n6, top6, _, _) = gopherBrute("𝔸 b 𝔸 b")
+    assert(n6 == 7L && top6(2) == 6L, s"recount n_chars $n6 top2 ${top6(2)}")
+    assert(rows(6L).getAs[Long]("n_chars") == 7L)
+    assert(rows(6L).getAs[Double]("top2_frac") == 6.0 / 7.0)
   }
 
   test("q151: every profile column equals an independent driver-side " +

@@ -191,4 +191,40 @@ class LayoutStreamSpec extends AnyFunSuite with SparkTestSession {
     assert(LayoutStream.read(spark, table).count() == 70L,
       "rows ingested after the vacuum+restart must be readable")
   }
+
+  test("a forced same-checkpoint replay of a compacting batch leaves the " +
+    "audit and the row count equal to a clean run") {
+    // two sources, three batches: every zp's third slice trips the
+    // OPTIMIZE trigger in the last batch, whose replay then meets its
+    // own rows in the compacted generation
+    def mk(ids: Range) = ids.map(i =>
+      LayoutDoc(i.toLong, if (i % 2 == 0) "websrc" else "news", 1000L))
+    def runForced(replay: Boolean) = {
+      val dir = java.nio.file.Files.createTempDirectory("zforced")
+      val table = dir.resolve("table").toString
+      val ckpt = dir.resolve("ckpt").toString
+      val stream = MemoryStream[LayoutDoc](spark)
+      val reports =
+        scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      def start() = LayoutStream.start(stream.toDF(), table, ckpt) {
+        (e, n, c) => reports += ((e, n, c))
+      }
+      val q = start()
+      try (0 until 3).foreach { k =>
+        stream.addData(mk(k * 10 until k * 10 + 10): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      if (replay) ForcedReplay(q, ckpt)(start())
+      (auditRows(LayoutStream.audit(spark, table)),
+        LayoutStream.read(spark, table).count(), reports.toSeq)
+    }
+    val (audit, n, reports) = runForced(replay = false)
+    assert(n == 30L)
+    assert(reports.last._3 >= 1, s"the last batch must compact: $reports")
+    val (audit2, n2, reports2) = runForced(replay = true)
+    assert(reports2.map(_._1) == reports.map(_._1) :+ reports.last._1,
+      s"the last batch must run again: $reports2")
+    assert(n2 == n, "replay changed the row count")
+    assert(audit2 == audit, "replay changed the audit")
+  }
 }

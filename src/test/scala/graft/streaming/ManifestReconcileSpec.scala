@@ -153,4 +153,43 @@ class ManifestReconcileSpec extends AnyFunSuite with SparkTestSession {
     run(dir, "ckpt2", Seq(manifest(3)))
     assert(tombSet(dir) == expectedTombs)
   }
+
+  /** Runs the four manifests one per batch, on the `snap` column's clock
+    * or (without `snapCol`) on the raw batch id, which equals it here;
+    * with `replay`, the last batch then runs again under the same
+    * checkpoint. Returns the tombstones, the live set and the published
+    * snapshots. */
+  private def runForced(snapCol: Boolean, replay: Boolean)
+      : (Set[(Long, Long)], Set[Long], Seq[Long]) = {
+    val dir = java.nio.file.Files.createTempDirectory("manrec-forced")
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[ManifestRow](spark)
+    val snaps = ArrayBuffer.empty[Long]
+    def start() = ManifestReconcileStream.start(stream.toDF(),
+      dir.resolve("state").toString, ckpt,
+      snapCol = Some("snap").filter(_ => snapCol)) {
+      (snap, _, _, _) => snaps += snap
+    }
+    val q = start()
+    try (0 until Snaps).foreach { s =>
+      stream.addData(manifest(s).toIndexedSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    if (replay) ForcedReplay(q, ckpt)(start())
+    (tombSet(dir), liveSet(dir), snaps.toSeq)
+  }
+
+  Seq(false -> "the raw batch-id clock", true -> "snapCol").foreach {
+    case (snapCol, clock) =>
+      test(s"a forced same-checkpoint replay of the last manifest ($clock) " +
+        "leaves tombstones and the live set equal to a clean run") {
+        val (tombs, live, snaps) = runForced(snapCol, replay = false)
+        assert(tombs == expectedTombs)
+        val (tombs2, live2, snaps2) = runForced(snapCol, replay = true)
+        assert(snaps2 == snaps :+ snaps.last,
+          s"the last batch must run again: $snaps2")
+        assert(tombs2 == tombs, "replay changed tombstones")
+        assert(live2 == live, "replay changed the live set")
+      }
+  }
 }

@@ -350,4 +350,56 @@ class Scd2StreamSpec extends AnyFunSuite with SparkTestSession {
     runSnap(dir, "ckpt3", Seq(bs(3)))
     assert(resolved(dir) == expectedSegs)
   }
+
+  // ---- same-checkpoint replay (ForcedReplay) ----
+
+  /** Four snapshots with tombstones; the last carries an edit AND a
+    * closure, so its replay rewrites both `segments` and `closures`. */
+  private val closeFeed = Seq(
+    Seq((1L, "a", 0L, false), (2L, "b", 0L, false), (3L, "c", 0L, false)),
+    Seq((1L, "a", 1L, false), (2L, "b", 1L, false), (3L, "c", 1L, true)),
+    Seq((1L, "a", 2L, true), (2L, "b", 2L, false)),
+    Seq((1L, "a2", 3L, false), (2L, "b", 3L, true)))
+
+  /** Runs `closeFeed` one snapshot per batch, on the `snap` column's clock
+    * or (without `snapCol`) on the raw batch id, which equals it here;
+    * with `replay`, the last batch then runs again under the same
+    * checkpoint. Returns the resolved segments, the closures and the
+    * published epochs. */
+  private def runCloseFeed(snapCol: Boolean, replay: Boolean)
+      : (Set[Seg], Set[(Long, Long)], Seq[Long]) = {
+    val dir = java.nio.file.Files.createTempDirectory("scd2s-forced")
+    val state = dir.resolve("state").toString
+    val ckpt = dir.resolve("ckpt").toString
+    val stream = MemoryStream[(Long, String, Long, Boolean)](spark)
+    val epochs = ArrayBuffer.empty[Long]
+    def start() = Scd2Stream.start(
+      stream.toDF().toDF("doc_id", "fp", "snap", "del")
+        .withColumn("source", lit("s")),
+      state, ckpt, snapCol = Some("snap").filter(_ => snapCol),
+      deleteCol = Some("del")) { (e, _, _) => epochs += e }
+    val q = start()
+    try closeFeed.foreach { b =>
+      stream.addData(b.toIndexedSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    if (replay) ForcedReplay(q, ckpt)(start())
+    (resolved(dir), Scd2Stream.closures(spark, state).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("snap"))).toSet,
+      epochs.toSeq)
+  }
+
+  Seq(false -> "the raw batch-id clock", true -> "snapCol").foreach {
+    case (snapCol, clock) =>
+      test(s"a forced same-checkpoint replay of the last batch ($clock) " +
+        "leaves resolve and closures equal to a clean run") {
+        val (segs, cls, epochs) = runCloseFeed(snapCol, replay = false)
+        assert(cls == Set((3L, 1L), (1L, 2L), (2L, 3L)))
+        val (segs2, cls2, epochs2) = runCloseFeed(snapCol, replay = true)
+        assert(epochs2 == epochs :+ epochs.last,
+          s"the last batch must run again: $epochs2")
+        assert(segs2 == segs, "replay changed the resolved segments")
+        assert(cls2 == cls, "replay changed the closures")
+      }
+  }
 }
