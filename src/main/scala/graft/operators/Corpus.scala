@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** Corpus-management operators for a training-data pipeline: duplicate
   * clustering (connected components over the near-dup pair graph),
@@ -14,12 +15,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * Scale design:
   *  - Connected components: pair detection (q19) yields EDGES, but dedup
-  *    needs one survivor per duplicate CLUSTER — transitive closure. The
-  *    implementation is iterative min-label propagation (the distributed
-  *    algorithm GraphX-style engines run): per iteration one equi-join of
-  *    the label table against the symmetrized edge list plus a min-agg,
-  *    both shuffled on the vertex key. Iteration count = cluster diameter
-  *    (near-dup clusters are shallow: a handful). Labels converge to the
+  *    needs one survivor per duplicate CLUSTER — transitive closure.
+  *    [[connectedComponents]] is one path with three tiers picked by
+  *    observed size: a bounded pair list finishes in a driver union-find;
+  *    a larger one runs a few rounds of min-label propagation (one
+  *    equi-join of the label table against the symmetrized edge list plus
+  *    a min-agg per round, both shuffled on the vertex key); a graph too
+  *    deep for that budget finishes its label-contracted quotient on the
+  *    driver or with alternating star contraction. Every tier reaches the
   *    unique fixpoint (component = min doc_id reachable), so the result is
   *    deterministic regardless of execution order and the DuckDB oracle
   *    reproduces it with a recursive CTE.
@@ -32,20 +35,64 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 object Corpus {
   import Mirror._
 
-  /** Minimum-label propagation to the fixpoint. `edges` is an undirected
-    * pair list (src < dst, one row per edge); returns (v, component) for
-    * every vertex that appears in an edge, where component = min vertex id
-    * reachable.
+  /** Label-round budget before [[connectedComponents]] hands the
+    * label-contracted quotient on: one past q59's 3-round convergence,
+    * so every shallow near-dup graph (the common case) finishes in the
+    * cheap loop and only genuinely deep graphs pay the contraction
+    * machinery. */
+  private val AutoLabelBudget = 4
+
+  /** Driver-finish bound: an edge list (the input pairs, or the
+    * label-contracted quotient) of at most this many edges is solved
+    * with an exact union-find ON THE DRIVER instead of distributed
+    * rounds. This is the standard last step of multi-level contraction
+    * (shrink distributedly until the remainder is bounded, then finish
+    * locally — the same bounded-driver-state posture as the Lloyd and
+    * dangling-mass scalars): each distributed round costs a fixed
+    * planning/scheduling round-trip regardless of data size, so once the
+    * remainder is megabyte-scale the driver solve is strictly faster —
+    * measured at sf0.1, the q166 semantic quotient (hundreds of edges)
+    * paid ~2.2 s for four star cycles a union-find does in microseconds.
+    * 1M edges ≈ tens of MB of driver heap, far under any sane driver
+    * budget. Specs reach the distributed tiers through
+    * [[connectedComponents]]' package-private bound parameter. */
+  private val DriverFinishMaxEdges = 1000000L
+
+  /** `spark.graft.cc.maxRounds` caps the label budget and the star
+    * cycles: near-dup graphs are shallow, so a cycle count past it means
+    * a pathological input (or a bug) — fail loudly, don't loop for hours. */
+  private def maxRounds(spark: SparkSession): Int =
+    spark.conf.get("spark.graft.cc.maxRounds", "100").toInt
+
+  /** The CC front door's one CORPUS-scale action: checkpoint the DIRECTED
+    * pairs (the symmetrizing union below reads the edge pipeline —
+    * LSH + verify — twice, so materializing first halves its executions)
+    * with the pair count observed ON the truncation job. It runs at full
+    * session width/adaptivity; the count then sizes the loop's pinned
+    * profile ([[LoopConf]]) — or, when bounded, routes to the driver
+    * finish without any distributed round. */
+  private def truncatedPairs(edges: DataFrame, src: String,
+      dst: String): (DataFrame, Long) = {
+    val pObs = Obs("cc_pairs")
+    val p = truncated(
+      edges.select(col(src).as("a"), col(dst).as("b"))
+        .observe(pObs, count(lit(1)).as("n")))
+    (p, Obs.long(pObs, "n"))
+  }
+
+  /** Min-label propagation over the truncated pair table `p` for at most
+    * `budget` rounds. Returns the label table (v, label) and whether it
+    * reached the fixpoint (label = min vertex id reachable).
     *
-    * Each iteration is two shuffles (join + min-agg) over the label table —
-    * the data volume is O(vertices-in-edges), tiny relative to the corpus
-    * (only near-dup members appear). Iteration count = propagation depth
-    * (near-dup clusters are shallow: q59 converges in 3). `localCheckpoint`
-    * truncates the growing loop lineage (on a cluster, prefer `checkpoint`
-    * to a reliable store for fault tolerance); each round is ONE action —
-    * the truncation job, whose observed metric is the convergence signal
-    * — and the rounds run under the pinned loop profile ([[LoopConf]]:
-    * width from the materialized pair count, AQE off inside the loop).
+    * Each round is two shuffles (join + min-agg) over the label table —
+    * O(vertices-in-edges), tiny relative to the corpus (only near-dup
+    * members appear) — and ONE action: the truncation job
+    * ([[Mirror.truncated]]), whose observed change count is the
+    * convergence signal (the driver-side control scalar, as in MLlib's
+    * iterative jobs). The rounds run under the pinned loop profile
+    * ([[LoopConf]]: width from the materialized pair count, AQE off
+    * inside the loop). Rounds to converge = propagation depth (near-dup
+    * clusters are shallow: q59 converges in 3).
     *
     * Alternatives MEASURED on the q73 semantic graph (depth 22 at sf0.1,
     * a long cosine-threshold chain — the stress case) and rejected:
@@ -58,92 +105,16 @@ object Corpus {
     * removes that per-step fixed cost for the MATERIALIZED rounds, but
     * un-truncated fused label steps still re-execute reduce sides and
     * stayed slower). The published fix for deep graphs is neighborhood
-    * CONTRACTION, not label chasing — implemented as the alternating
-    * star algorithm ([[starComponents]]); the default `auto` mode runs
-    * THIS loop first (shallow graphs — the common case — finish in 2-4
-    * cheap rounds), hands the label-contracted quotient to a
-    * driver-local union-find when it is bounded
-    * ([[quotientComponents]]) and to star contraction otherwise
-    * (see [[connectedComponents]]). */
-  private[operators] def labelPropComponents(edges: DataFrame, src: String,
-      dst: String): DataFrame = {
-    // Propagation depth = longest label chain; near-dup graphs are shallow
-    // (q59: 3 rounds; q73's sf0.1 stress chain: 22), so a round count past
-    // the bound means a pathological input (or a bug), not slow
-    // convergence — fail loudly instead of looping silently for hours.
-    val maxRounds =
-      edges.sparkSession.conf.get("spark.graft.cc.maxRounds", "100").toInt
-    val (labels, converged, _, _) = labelLoop(edges, src, dst, maxRounds)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          "(spark.graft.cc.maxRounds); the component graph is deeper " +
-          "than any expected near-dup cluster — aborting instead of " +
-          "looping unbounded")
-    labels.select(col("v"), col("label").as("component"))
-  }
-
-  /** `spark.graft.cc.checkpointDir=<path>` switches loop lineage
-    * truncation from localCheckpoint (executor-block storage — fast, but
-    * an executor loss makes the truncated lineage UNRECOVERABLE and fails
-    * the job) to reliable checkpoint() into that directory (HDFS/object
-    * store on a cluster) — the fault-tolerance posture a 1000-executor,
-    * hours-long run needs, where the probability of losing at least one
-    * executor mid-loop approaches 1. Local single-JVM runs (tests, the
-    * oracle gate) keep the default: no executor can be lost, and skipping
-    * the filesystem round-trip is strictly faster. */
-  private def ccTruncate(spark: SparkSession): DataFrame => DataFrame = {
-    val ckDir = spark.conf.get("spark.graft.cc.checkpointDir", "")
-    if (ckDir.nonEmpty) {
-      spark.sparkContext.setCheckpointDir(ckDir)
-      df => df.checkpoint()
-    } else df => df.localCheckpoint()
-  }
-
-  /** Min-label propagation for at most `budget` rounds. Returns the label
-    * table (v, label), whether it reached the fixpoint, and the rounds
-    * spent. Each round is two shuffles (join + min-agg) over the label
-    * table; the convergence `count` is the driver-side control signal,
-    * same as MLlib's iterative jobs. */
-  private def labelLoop(edges: DataFrame, src: String, dst: String,
-      budget: Int): (DataFrame, Boolean, Int, DataFrame) = {
-    val (p, nPairs) = truncatedPairs(edges, src, dst)
-    labelLoopPre(p, nPairs, budget)
-  }
-
-  /** The CC front door's one CORPUS-scale action: checkpoint the DIRECTED
-    * pairs (the symmetrizing union below reads the edge pipeline —
-    * LSH + verify — twice, so materializing first halves its executions)
-    * with the pair count observed ON the truncation job. It runs at full
-    * session width/adaptivity; the count then sizes the loop's pinned
-    * profile ([[LoopConf]]) — or, when bounded, routes to the driver
-    * finish without any distributed round. */
-  private def truncatedPairs(edges: DataFrame, src: String,
-      dst: String): (DataFrame, Long) = {
-    val pObs = Obs("cc_pairs")
-    val p = ccTruncate(edges.sparkSession)(
-      edges.select(col(src).as("a"), col(dst).as("b"))
-        .observe(pObs, count(lit(1)).as("n")))
-    (p, Obs.long(pObs, "n"))
-  }
-
-  /** [[labelLoop]] over a pre-truncated pair table. */
-  private def labelLoopPre(p: DataFrame, nPairs: Long,
-      budget: Int): (DataFrame, Boolean, Int, DataFrame) = {
+    * CONTRACTION, not label chasing — [[starComponents]], which
+    * [[connectedComponents]] runs on this loop's label-contracted
+    * quotient when the budget does not converge. */
+  private def labelRounds(p: DataFrame, nPairs: Long,
+      budget: Int): (DataFrame, Boolean) = {
     val spark = p.sparkSession
-    val truncate = ccTruncate(spark)
     val sym = p.union(p.select(col("b").as("a"), col("a").as("b")))
     LoopConf.pinned(spark, LoopConf.parts(spark, 2L * nPairs)) {
-      val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-      var t0 = System.nanoTime()
-      def lap(tag: String): Unit = if (dbg) {
-        val t1 = System.nanoTime()
-        System.err.println(f"[cc]   $tag: ${(t1 - t0) / 1e9}%.3f s")
-        t0 = t1
-      }
-      var labels = truncate(sym.select(col("a").as("v")).distinct()
+      var labels = truncated(sym.select(col("a").as("v")).distinct()
         .select(col("v"), col("v").as("label")))
-      lap("labels0")
       var changed = 1L
       var rounds = 0
       while (changed > 0 && rounds < budget) {
@@ -156,7 +127,7 @@ object Corpus {
         // and its observed metric is the convergence signal — no second
         // count action per round
         val obs = Obs("cc_chg")
-        val next = truncate(labels
+        val next = truncated(labels
           .join(nbrMin, Seq("v"), "left")
           .select(col("v"),
             least(col("label"), coalesce(col("nbr_min"), col("label")))
@@ -167,13 +138,9 @@ object Corpus {
             coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))
               .as("n_chg")))
         changed = Obs.long(obs, "n_chg")
-        lap(s"round $rounds (changed=$changed)")
         labels = next.select(col("v"), col("label"))
       }
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(
-          s"[cc] label loop: $rounds rounds, converged=${changed == 0}")
-      (labels, changed == 0, rounds, p)
+      (labels, changed == 0)
     }
   }
 
@@ -202,14 +169,12 @@ object Corpus {
     * (the paper's Theorem 1-2), so labels read off the final edges:
     * component(v) = min(v, its star center). Deterministic — every
     * operation is a min or a distinct over a deterministic set — hence the
-    * same oracle fixpoint as [[labelPropComponents]] (CorpusSpec asserts
-    * equality on chain/star/random graphs). */
+    * same oracle fixpoint as the label loop and the driver union-find
+    * (CorpusSpec asserts equality on chain/star/random graphs). */
   private[operators] def starComponents(edges: DataFrame, src: String,
       dst: String): DataFrame = {
     val spark = edges.sparkSession
-    val truncate = ccTruncate(spark)
-    val maxRounds =
-      spark.conf.get("spark.graft.cc.maxRounds", "100").toInt
+    val cycleBound = maxRounds(spark)
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("b").as("a"), col("a").as("b")))
     // one star step: group each node's neighborhood, attach to the local
@@ -237,7 +202,7 @@ object Corpus {
     // is ONE action (materialize + count), not two
     def truncCounted(df: DataFrame): (DataFrame, Long) = {
       val obs = Obs("star_n")
-      val t = truncate(df.observe(obs, count(lit(1)).as("n")))
+      val t = truncated(df.observe(obs, count(lit(1)).as("n")))
       (t, Obs.long(obs, "n"))
     }
     // canonical (hi=a, lo=b) distinct edge set; checkpoint cuts the
@@ -254,26 +219,17 @@ object Corpus {
         prevCount: Long): Boolean =
       nextCount == prevCount && next.except(prev).isEmpty
     LoopConf.pinned(spark, LoopConf.parts(spark, 2L * eCount)) {
-      val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-      var t0 = System.nanoTime()
-      def lap(tag: String): Unit = if (dbg) {
-        val t1 = System.nanoTime()
-        System.err.println(f"[cc]   star $tag: ${(t1 - t0) / 1e9}%.3f s")
-        t0 = t1
-      }
       var cycles = 0
       var converged = eCount == 0L
       while (!converged) {
         cycles += 1
-        if (cycles > maxRounds)
+        if (cycles > cycleBound)
           throw new IllegalStateException(
-            s"starComponents did not converge in $maxRounds cycles " +
+            s"starComponents did not converge in $cycleBound cycles " +
               "(spark.graft.cc.maxRounds) — aborting instead of looping " +
               "unbounded")
         val (l, lCount) = truncCounted(step(e, large = true))
-        lap(s"cycle $cycles large")
         val (n, nCount) = truncCounted(step(l, large = false))
-        lap(s"cycle $cycles small")
         // converged ⇔ BOTH steps were identities: the joint fixpoints of
         // large- and small-star are exactly the min-centered star
         // partitions (a cycle-level no-op is NOT enough — small-star
@@ -281,12 +237,9 @@ object Corpus {
         // half-contracted chain)
         converged = unchanged(l, lCount, e, eCount) &&
           unchanged(n, nCount, l, lCount)
-        lap(s"cycle $cycles conv-check")
         e = n
         eCount = nCount
       }
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[cc] star converged in $cycles cycles")
       // fixpoint is disjoint min-centered stars: component = min(v,
       // center)
       sym(e).groupBy(col("a").as("v"))
@@ -294,27 +247,6 @@ object Corpus {
         .select(col("v"), least(col("v"), col("mn")).as("component"))
     }
   }
-
-  /** Label-propagation budget of the `auto` mode before it escalates to
-    * star contraction: one past q59's 3-round convergence, so every
-    * shallow near-dup graph (the common case) finishes in the cheap loop
-    * and only genuinely deep graphs pay the contraction machinery. */
-  private val AutoLabelBudget = 4
-
-  /** Driver-finish bound for the label-contracted quotient graph: when
-    * the quotient has at most this many edges it is solved with an exact
-    * union-find ON THE DRIVER instead of O(log d) more distributed star
-    * cycles. This is the standard last step of multi-level contraction
-    * (shrink distributedly until the remainder is bounded, then finish
-    * locally — the same bounded-driver-state posture as the Lloyd and
-    * dangling-mass scalars): each distributed round costs a fixed
-    * planning/scheduling round-trip regardless of data size, so once the
-    * remainder is megabyte-scale the driver solve is strictly faster —
-    * measured at sf0.1, the q166 semantic quotient (hundreds of edges)
-    * paid ~2.2 s for four star cycles a union-find does in microseconds.
-    * 1M edges ≈ tens of MB of driver heap, far under any sane driver
-    * budget; set 0 to force the distributed path. */
-  private val DriverFinishMaxEdges = 1000000L
 
   /** Exact min-representative union-find over a bounded edge list —
     * component = min reachable vertex under the column type's ordering
@@ -351,127 +283,110 @@ object Corpus {
     verts.iterator.map(v => v -> find(v)).toMap
   }
 
-  /** Component labels for the quotient graph: driver union-find when the
-    * edge list is bounded ([[DriverFinishMaxEdges]], probed with a
-    * limit-collect so an oversized quotient never lands on the driver),
-    * distributed star contraction otherwise. Returns (label, component)
-    * for every quotient vertex. */
-  private def quotientComponents(quotient: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val spark = quotient.sparkSession
-    val maxEdges = spark.conf
-      .get("spark.graft.cc.driverFinishMaxEdges",
-        DriverFinishMaxEdges.toString).toLong
-    val probe = if (maxEdges > 0 && maxEdges < Int.MaxValue - 1)
-      quotient.limit(maxEdges.toInt + 1).collect() else Array.empty[Row]
-    if (maxEdges > 0 && probe.length <= maxEdges) {
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(
-          s"[cc] quotient driver-finish: ${probe.length} edges")
-      val comp = unionFind(probe.map(r => (r.get(0), r.get(1))))
-      val idType = quotient.schema.fields(0).dataType
-      val schema = StructType(Seq(StructField("label", idType),
-        StructField("component", idType)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          comp.toSeq.map { case (v, c) => Row(v, c) }, 1), schema)
-    } else
-      starComponents(quotient, "a", "b")
-        .select(col("v").as("label"), col("component"))
+  /** The driver finish: [[unionFind]] over the collected `(a, b)` rows of
+    * `edges`, as a one-partition `(key, component)` table typed like the
+    * edge ids. */
+  private def driverComponents(edges: DataFrame, rows: Array[Row],
+      key: String): DataFrame = {
+    val spark = edges.sparkSession
+    val idType = edges.schema.fields(0).dataType
+    val comp = unionFind(rows.map(r => (r.get(0), r.get(1))))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        comp.toSeq.map { case (v, c) => Row(v, c) }, 1),
+      StructType(Seq(StructField(key, idType),
+        StructField("component", idType))))
+  }
+
+  /** Component labels for the quotient graph: the driver union-find when
+    * it has at most `maxEdges` edges (probed with a limit-collect so an
+    * oversized quotient never lands on the driver), distributed star
+    * contraction otherwise. Returns (label, component) for every
+    * quotient vertex. */
+  private def quotientComponents(quotient: DataFrame,
+      maxEdges: Long): DataFrame = {
+    val bounded =
+      if (maxEdges > 0 && maxEdges < Int.MaxValue - 1)
+        Some(quotient.limit(maxEdges.toInt + 1).collect())
+          .filter(_.length <= maxEdges)
+      else None
+    bounded.fold(starComponents(quotient, "a", "b")
+      .select(col("v").as("label"), col("component")))(
+      driverComponents(quotient, _, "label"))
   }
 
   /** Transitive closure of an undirected pair list → (v, component) with
     * component = min reachable vertex id, for every vertex appearing in an
-    * edge. Dispatches on `spark.graft.cc.algo`:
+    * edge. One path, three tiers, each taken on an observed size:
     *
-    *  - `auto` (default): min-label propagation for up to
-    *    [[AutoLabelBudget]] rounds — near-dup graphs are almost always
-    *    shallow, and a label round (2 small shuffles) is ~half the cost of
-    *    a star cycle (measured at sf0.1: q59 converges in 3 label rounds
-    *    at 1.2 s where star-only takes 2.2 s). If the budget doesn't
-    *    converge, the LABEL-CONTRACTED quotient graph (each edge mapped
-    *    through its endpoints' current labels, self-loops dropped — ≥4
-    *    hops collapsed per quotient vertex) hands off to
-    *    [[starComponents]], so total rounds are bounded by
-    *    budget + O(log remaining-diameter), never the raw diameter.
-    *  - `star`: pure alternating star contraction.
-    *  - `label`: pure min-label propagation (rounds = graph diameter,
-    *    bounded by `spark.graft.cc.maxRounds`).
+    *  1. Truncate the pairs, counting them on the truncation job. At most
+    *     [[DriverFinishMaxEdges]] pairs finish in the driver union-find
+    *     with no distributed round.
+    *  2. Otherwise run at most [[AutoLabelBudget]] min-label rounds
+    *     (bounded by `spark.graft.cc.maxRounds`). Near-dup graphs are
+    *     almost always shallow, and a label round (2 small shuffles) is
+    *     ~half the cost of a star cycle (measured at sf0.1: q59 converges
+    *     in 3 label rounds at 1.2 s where star-only takes 2.2 s); a
+    *     converged loop returns its labels.
+    *  3. A loop that does not converge builds the LABEL-CONTRACTED
+    *     quotient graph (each edge mapped through its endpoints' current
+    *     labels, self-loops dropped — ≥4 hops collapsed per quotient
+    *     vertex) and finishes it through [[quotientComponents]]: the
+    *     driver union-find under the same bound, else [[starComponents]],
+    *     so total rounds are bounded by budget + O(log remaining
+    *     diameter), never the raw diameter.
     *
-    * All three converge to the identical fixpoint — the quotient handoff
-    * is sound because every vertex's running label is a member of its own
+    * Every tier reaches the identical fixpoint — the quotient handoff is
+    * sound because every vertex's running label is a member of its own
     * component (labels only ever move along edges), so contracting by
     * label preserves components and the component min survives as a
     * quotient vertex (the min's label is itself, fixed from round one).
-    * The choice never affects results, only the round count. */
+    * The tier never affects results, only the round count. */
   private[graft] def connectedComponents(edges: DataFrame, src: String,
       dst: String): DataFrame =
-    edges.sparkSession.conf.get("spark.graft.cc.algo", "auto") match {
-      case "label" => labelPropComponents(edges, src, dst)
-      case "star" => starComponents(edges, src, dst)
-      case "auto" =>
-        val spark = edges.sparkSession
-        val budget = math.min(AutoLabelBudget,
-          spark.conf.get("spark.graft.cc.maxRounds", "100").toInt)
-        val (p, nPairs) = truncatedPairs(edges, src, dst)
-        val maxEdges = spark.conf
-          .get("spark.graft.cc.driverFinishMaxEdges",
-            DriverFinishMaxEdges.toString).toLong
-        // Level-0 driver finish (round 19): the multi-level-contraction
-        // endgame ("shrink distributedly until the remainder is bounded,
-        // then finish locally") applied BEFORE the first distributed
-        // round. Every CC consumer in this engine feeds a bucket-capped
-        // candidate pipeline, so the edge list is O(near-dup pairs) —
-        // when the OBSERVED count (already measured on the pair
-        // checkpoint job, no extra action) is within the same bound the
-        // quotient finish uses, label rounds are pure scheduling
-        // overhead: the union-find computes the identical min-reachable
-        // fixpoint in microseconds (measured at sf0.1: the q166 semantic
-        // graph ran 4 label rounds ≈ 0.8 s + a quotient probe only to
-        // hand 304 edges to the driver). At scale nPairs exceeds the
-        // bound and the loop runs exactly as before — the gate is the
-        // observed input size, not a local tuning.
-        if (maxEdges > 0 && nPairs <= maxEdges) {
-          import org.apache.spark.sql.Row
-          import org.apache.spark.sql.types.{StructField, StructType}
-          if (sys.env.contains("GRAFT_DEBUG_CC"))
-            System.err.println(s"[cc] level-0 driver-finish: $nPairs edges")
-          val comp = unionFind(
-            p.collect().map(r => (r.get(0), r.get(1))))
-          val idType = p.schema.fields(0).dataType
-          val schema = StructType(Seq(StructField("v", idType),
-            StructField("component", idType)))
-          return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              comp.toSeq.map { case (v, c) => Row(v, c) }, 1), schema)
-        }
-        val (labels, converged, _, pairs) = labelLoopPre(p, nPairs, budget)
-        if (converged) labels.select(col("v"), col("label").as("component"))
-        else {
-          // quotient graph: one row per surviving inter-label edge; the
-          // star phase then runs on a graph whose vertex count is the
-          // number of DISTINCT labels, not original vertices. Built from
-          // the label loop's TRUNCATED pair table — rebuilding from
-          // `edges` here would re-execute the whole upstream pair
-          // pipeline (LSH banding + verification) a second time
-          val la = labels.select(col("v").as("qa"), col("label").as("a"))
-          val lb = labels.select(col("v").as("qb"), col("label").as("b"))
-          val quotient = pairs
-            .select(col("a").as("qa"), col("b").as("qb"))
-            .join(la, "qa").join(lb, "qb")
-            .filter(col("a") =!= col("b"))
-            .select(col("a"), col("b"))
-          val starLabels = quotientComponents(quotient)
-          // vertices whose label has no surviving quotient edge converged
-          // inside the budget — their label IS the component min
-          labels.join(starLabels, Seq("label"), "left")
-            .select(col("v"),
-              coalesce(col("component"), col("label")).as("component"))
-        }
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.cc.algo=$other (expected auto, star, or label)")
+    connectedComponents(edges, src, dst, DriverFinishMaxEdges)
+
+  /** [[connectedComponents]] with the driver-finish bound as a parameter:
+    * specs pass a small bound (0 = never on the driver) to reach the
+    * label, quotient and star tiers on small graphs. */
+  private[operators] def connectedComponents(edges: DataFrame, src: String,
+      dst: String, driverMaxEdges: Long): DataFrame = {
+    val (p, nPairs) = truncatedPairs(edges, src, dst)
+    // Level-0 driver finish (round 19): every CC consumer feeds a
+    // bucket-capped candidate pipeline, so the edge list is O(near-dup
+    // pairs); within the bound, label rounds are pure scheduling overhead
+    // (measured at sf0.1: the q166 semantic graph ran 4 label rounds
+    // ≈ 0.8 s + a quotient probe only to hand 304 edges to the driver).
+    // The gate is the count observed on the pair job, not a local tuning.
+    if (driverMaxEdges > 0 && nPairs <= driverMaxEdges)
+      driverComponents(p, p.collect(), "v")
+    else {
+      val budget = math.min(AutoLabelBudget, maxRounds(p.sparkSession))
+      val (labels, converged) = labelRounds(p, nPairs, budget)
+      if (converged) labels.select(col("v"), col("label").as("component"))
+      else {
+        // quotient graph: one row per surviving inter-label edge; the
+        // finish then runs on a graph whose vertex count is the number of
+        // DISTINCT labels, not original vertices. Built from the
+        // TRUNCATED pair table — rebuilding from `edges` here would
+        // re-execute the whole upstream pair pipeline (LSH banding +
+        // verification) a second time
+        val la = labels.select(col("v").as("qa"), col("label").as("a"))
+        val lb = labels.select(col("v").as("qb"), col("label").as("b"))
+        val quotient = p
+          .select(col("a").as("qa"), col("b").as("qb"))
+          .join(la, "qa").join(lb, "qb")
+          .filter(col("a") =!= col("b"))
+          .select(col("a"), col("b"))
+        val finished = quotientComponents(quotient, driverMaxEdges)
+        // vertices whose label has no surviving quotient edge converged
+        // inside the budget — their label IS the component min
+        labels.join(finished, Seq("label"), "left")
+          .select(col("v"),
+            coalesce(col("component"), col("label")).as("component"))
+      }
     }
+  }
 
   /** Duplicate-cluster assignment: connected components over the verified
     * MinHash near-dup pairs (q19), extended to every document (non-members

@@ -34,26 +34,16 @@ object Graph {
   /** Out-degree of the synthetic link graph before self-link removal. */
   private val OutLinks = 3
 
-  /** Lineage truncation for the rank loop — same posture as the
-    * connected-components loop (`spark.graft.cc.checkpointDir` switches
-    * executor-local truncation to a reliable store for cluster runs). */
-  private def truncate(spark: SparkSession): DataFrame => DataFrame = {
-    val ckDir = spark.conf.get("spark.graft.cc.checkpointDir", "")
-    if (ckDir.nonEmpty) {
-      spark.sparkContext.setCheckpointDir(ckDir)
-      df => df.checkpoint()
-    } else df => df.localCheckpoint()
-  }
-
   /** Mid-loop rank-table truncation cadence: checkpoint `ranks` every N
     * rounds; 0 (default) chains the whole propagation into ONE linear
     * plan materialized by a single truncation at loop exit. Measured on
-    * local[32] at sf0.1: each eager localCheckpoint costs
-    * ~2 scheduled jobs (the materializing count plus the
-    * missing-partition sweep), so per-round truncation pays ~10 job
-    * round-trips for a 5-round loop while the fused plan pays ~2 — and
-    * inside [[withLoopConf]]'s non-adaptive pinned window the fused
-    * chain runs its dozen stages in one job with no per-stage re-plan.
+    * local[32] at sf0.1: each eager local truncation
+    * ([[Mirror.truncated]]) costs ~2 scheduled jobs (the materializing
+    * count plus the missing-partition sweep), so per-round truncation
+    * pays ~10 job round-trips for a 5-round loop while the fused plan
+    * pays ~2 — and inside [[withLoopConf]]'s non-adaptive pinned window
+    * the fused chain runs its dozen stages in one job with no per-stage
+    * re-plan.
     * The fused chain is LINEAR for q132 (each round's subtree feeds
     * only the next round — no re-execution); q134's dangling-share
     * branch adds one reduce-side re-read per round, which is why a
@@ -87,7 +77,7 @@ object Graph {
     * source parquet is scanned exactly once per query. */
   private def prankNodes(spark: SparkSession, parts: Int,
       proj: DataFrame): DataFrame =
-    truncate(spark)(proj.repartition(parts, col("doc_id")))
+    truncated(proj.repartition(parts, col("doc_id")))
 
   /** Runs the rank loop's eager jobs under a pinned execution profile:
     * shuffle width = the loop's own [[prParts]] sizing and AQE off, both
@@ -124,8 +114,8 @@ object Graph {
     * from the previous round's aggregations), per-edge integer
     * contribution, sum by dst — two shuffles of id+long rows per round,
     * never text. Edges are materialized once before the loop
-    * (localCheckpoint; reliable checkpoint under the cluster conf) so the
-    * 5 rounds don't re-derive them, and so is the node table —
+    * ([[Mirror.truncated]]: local, or reliable under the cluster conf)
+    * so the 5 rounds don't re-derive them, and so is the node table —
     * pre-hash-partitioned on doc_id ([[prankNodes]]) so every round's
     * rank update joins against it with NO exchange (checkpointed
     * LogicalRDDs retain their output partitioning; the contribs side
@@ -173,7 +163,6 @@ object Graph {
     withLoopConf(spark, parts) {
       val nodes = prankNodes(spark, parts,
         Tables(spark, dir, "documents").select(col("doc_id")))
-      val trunc = truncate(spark)
       val links = nodes
         .select(col("doc_id").as("src"),
           explode(sequence(lit(1), lit(OutLinks))).as("k"))
@@ -183,7 +172,7 @@ object Graph {
         .filter(col("src") =!= col("dst"))
       val deg = links.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       // materialize once — five rounds reuse the edge table
-      val edges = trunc(links.join(deg, Seq("src")))
+      val edges = truncated(links.join(deg, Seq("src")))
       val every = ckptEvery(spark, 0)
       var ranks = nodes.select(col("doc_id"), lit(1000000L).as("r"))
       for (i <- 1 to Iters) {
@@ -197,13 +186,13 @@ object Graph {
             Seq("doc_id"), "left")
           .select(col("doc_id"),
             (lit(150000L) + coalesce(col("c"), lit(0L))).as("r"))
-        ranks = if (every > 0 && i % every == 0 && i < Iters) trunc(next)
+        ranks = if (every > 0 && i % every == 0 && i < Iters) truncated(next)
           else next
       }
       // materialize the converged table INSIDE the pinned window, so the
       // chained loop stages execute as one non-adaptive job; the returned
       // plan is then a single narrow read + TakeOrdered
-      trunc(ranks)
+      truncated(ranks)
         .select(col("doc_id"), col("r").as("rank_micro"))
         .orderBy(col("rank_micro").desc, col("doc_id")).limit(100)
     }
@@ -291,7 +280,6 @@ object Graph {
     withLoopConf(spark, parts) {
     val base = prankNodes(spark, parts,
       Tables(spark, dir, "documents").select(col("doc_id")))
-    val trunc = truncate(spark)
     val links = base
       .filter(hash60b(concat(col("doc_id").cast(StringType), lit(":sink")))
         % 5 =!= 0)
@@ -302,11 +290,11 @@ object Graph {
           col("k").cast(StringType))) % n).as("dst"))
       .filter(col("src") =!= col("dst"))
     val deg = links.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edges = trunc(links.join(deg, Seq("src")))
+    val edges = truncated(links.join(deg, Seq("src")))
     // flagged node table: ho = has at least one outlink; materialized
     // hash(doc_id) once, its observation seeds the round-0 dangling sum
     val obs0 = newObs()
-    val nodes = trunc(base
+    val nodes = truncated(base
       .join(deg.select(col("src").as("doc_id"), lit(true).as("ho")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("ho"), lit(false)).as("ho"))
@@ -331,7 +319,7 @@ object Graph {
         // i's scalar off the same action
         val share = dangSum * 17L / (20L * n)
         val obs = newObs()
-        ranks = trunc(joined
+        ranks = truncated(joined
           .select(col("doc_id"), col("ho"),
             (lit(150000L + share) + coalesce(col("c"), lit(0L))).as("r"))
           .observe(obs, coalesce(sum(when(!col("ho"), col("r"))),
@@ -351,7 +339,7 @@ object Graph {
       }
     }
     val fin = if (every > 0) ranks.select(col("doc_id"), col("r"))
-      else trunc(ranks.select(col("doc_id"), col("r")))
+      else truncated(ranks.select(col("doc_id"), col("r")))
     fin.select(col("doc_id"), col("r").as("rank_micro"))
       .orderBy(col("rank_micro").desc, col("doc_id")).limit(100)
     }

@@ -22,14 +22,17 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object Mirror {
 
-  /** Lineage-truncate a SMALL (model- or report-sized) relation so plans
-    * with several consumers of the same expensive subtree materialize it
-    * exactly once — AQE plans sibling subtrees independently and reuses
-    * no exchange across them, so without a barrier each consumer re-runs
-    * the full upstream (scans included). Executor-local by default;
-    * `spark.graft.cc.checkpointDir` switches to a reliable store (the
-    * shared cluster posture: an executor loss makes a local checkpoint
-    * unrecoverable, so non-local deployments set it).
+  /** Lineage-truncate a relation — the engine's one local-or-reliable
+    * checkpoint decision. Loops (CC, PageRank) truncate each round
+    * through it, and plans with several consumers of one expensive
+    * subtree materialize it once (AQE reuses no exchange across sibling
+    * subtrees, so each consumer would re-run the upstream, scans
+    * included). Executor-local by default; `spark.graft.cc.checkpointDir`
+    * switches to a reliable store (on a cluster an executor loss makes a
+    * local checkpoint unrecoverable). The context's checkpoint directory
+    * is set only when not already under that path — each
+    * `setCheckpointDir` mints a fresh `<path>/<uuid>`, and a run keeps
+    * all its truncations in one.
     *
     * Size contract (amended r19, VERDICT r18 item 4): call this only on
     * relations that are either (a) BOUNDED by a model/query/histogram
@@ -40,21 +43,30 @@ object Mirror {
     * checkpoint trades a fixed small multiple of the doc COUNT against
     * re-running a full corpus TEXT scan. Never on relations carrying
     * per-document payloads (text, shingle/hash sets, embeddings) — the
-    * reasoning that rejected truncating q102's shingle relation. */
+    * reasoning that rejected truncating q102's shingle relation. The CC
+    * and PageRank loop tables (id pairs, (id, label) and (id, rank) rows)
+    * are case (b). */
   def truncated(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     val ckDir = spark.conf.get("spark.graft.cc.checkpointDir", "")
-    if (ckDir.nonEmpty) {
-      spark.sparkContext.setCheckpointDir(ckDir)
+    if (ckDir.isEmpty) df.localCheckpoint()
+    else {
+      val sc = spark.sparkContext
+      val root = new org.apache.hadoop.fs.Path(ckDir)
+      val qualified =
+        root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+      if (!sc.getCheckpointDir.exists(cur =>
+          new org.apache.hadoop.fs.Path(cur).getParent == qualified))
+        sc.setCheckpointDir(ckDir)
       df.checkpoint()
-    } else df.localCheckpoint()
+    }
   }
 
   /** Materialize a BOUNDED (model/report-sized) relation as a driver-
     * local table so every downstream consumer — including broadcast
     * builds — reads it without scheduling a job: a LocalTableScan's
-    * executeCollect returns rows in-process, where a localCheckpoint
+    * executeCollect returns rows in-process, where a [[truncated]] copy
     * costs ~2 scheduled jobs to write and one more per re-read.
     * `maxRows` is the caller's PROOF OBLIGATION (the construction bound:
     * a top-k table, a source-pair matrix); if the relation unexpectedly

@@ -692,7 +692,7 @@ object Quality {
     // them), so without a barrier the corpus text scan + model joins
     // execute twice in the final action (measured: q153 12 jobs). sp is
     // ONE narrow row per document — truncate it once and the join-back
-    // is a doc-count-sized hash join (same cluster-aware posture as
+    // is a doc-count-sized hash join ([[Mirror.truncated]], as
     // [[lmCounts]]' model truncation).
     //
     // The checkpoint action runs under the [[LoopConf]] pin (round 19):
@@ -722,14 +722,6 @@ object Quality {
       .select(col("doc_id"), col("source"), col("n_bigrams"),
         col("score_ppm"), col("bucket"))
       .orderBy(col("doc_id"))
-
-  /** Lineage-truncate a SMALL (model- or doc-count-sized) relation so
-    * multi-consumer plans materialize it once. Executor-local by
-    * default; `spark.graft.cc.checkpointDir` switches to a reliable
-    * store (on a cluster an executor loss makes a local checkpoint
-    * unrecoverable — non-local deployments set it). */
-  private def truncated(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = Mirror.truncated(df)
 
   /** q154: the q153 pipeline with the artifact tier bypassed BY
     * CONSTRUCTION — reference training runs fresh inside the query, so
@@ -831,11 +823,8 @@ object Quality {
     // lineage-truncated; the occurrence rows are consumed by exactly one
     // aggregation, so they need no persist and nothing reference-sized
     // outlives this call (the round-16 ADVICE lifecycle concern shrinks
-    // to a model-sized checkpoint). Truncation follows the shared
-    // cluster-aware posture: `spark.graft.cc.checkpointDir` switches
-    // executor-local truncation to a reliable store — without it an
-    // executor loss on a cluster makes the truncated model
-    // unrecoverable, which is why non-local deployments set it.
+    // to a model-sized checkpoint). [[Mirror.truncated]] picks local or
+    // reliable truncation (`spark.graft.cc.checkpointDir`).
     val g = truncated(bigramHashes(ref, Seq.empty)
       .groupBy(col("h2"), col("h1")).agg(count(lit(1)).as("n")))
     val c2 = g.groupBy(col("h2")).agg(sum(col("n")).as("n2"))

@@ -721,8 +721,8 @@ object TextAnalysis {
 
   /** As [[uniSegmentUsage]]; with `withVocab` additionally returns the
     * segmented vocabulary (w, n_pieces) — a word's piece count is the
-    * size of its emitted piece array, localCheckpoint-banked (the
-    * connectedComponents discipline) so the returned table never
+    * size of its emitted piece array, truncated ([[Mirror.truncated]],
+    * as every loop table is) so the returned table never
     * re-derives the word-frequency shuffle after the trainer releases
     * its cache. The application table the tokenizer family serializes
     * (BPE's `syms` analog), consumed by q146. */
@@ -737,10 +737,9 @@ object TextAnalysis {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val vocab =
       if (!withVocab) None
-      else Some(seged
+      else Some(truncated(seged
         .filter(size(col("pieces")) > 0)
-        .select(col("w"), size(col("pieces")).cast("long").as("n_pieces"))
-        .localCheckpoint(true))
+        .select(col("w"), size(col("pieces")).cast("long").as("n_pieces"))))
     (usage, vocab)
   }
 
@@ -834,7 +833,7 @@ object TextAnalysis {
 
   /** [[unigramTrainFull]]'s piece table alone (q145's output shape) —
     * trained with `withVocab = false`, so the final segmentation skips
-    * the per-step `localCheckpoint` banking of surviving word sets (one
+    * the per-step truncation banking of surviving word sets (one
     * eager job per step that only the q146 fertility consumer needs). */
   private[operators] def unigramTrain(docs: DataFrame): DataFrame =
     unigramTrainImpl(docs, withVocab = false)._1

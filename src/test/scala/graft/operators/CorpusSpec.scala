@@ -29,104 +29,147 @@ class CorpusSpec extends AnyFunSuite with SparkTestSession {
     assert(comp.size == 11)
   }
 
+  /** Every `rdd-*` checkpoint directory under `dir`. */
+  private def rddDirs(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles).toSeq.flatten.filter(_.isDirectory).flatMap(c =>
+      if (c.getName.startsWith("rdd-")) Seq(c) else rddDirs(c))
+
   test("connectedComponents: reliable-checkpoint mode matches local mode") {
     import spark.implicits._
     val edges = Seq(
       (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (40L, 41L)).toDF("a", "b")
-    val base = Corpus.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-    spark.conf.set("spark.graft.cc.checkpointDir", dir)
+    val base = CcModel.collect(Corpus.connectedComponents(edges, "a", "b"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toFile
+    spark.conf.set("spark.graft.cc.checkpointDir", dir.toString)
     try {
-      val rel = Corpus.connectedComponents(edges, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rel = CcModel.collect(Corpus.connectedComponents(edges, "a", "b"))
       assert(rel == base)
-      // the loop actually wrote reliable checkpoints into the directory
+      // the pair truncation wrote a reliable checkpoint into the directory
       // (cluster fault tolerance: lineage recoverable from storage, not
       // from lost executor blocks)
-      def files(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles).toSeq.flatten.flatMap(c =>
-          if (c.isDirectory) files(c) else Seq(c))
-      assert(files(new java.io.File(dir)).nonEmpty, s"no checkpoints in $dir")
+      assert(rddDirs(dir).nonEmpty, s"no checkpoints in $dir")
+      // at bound 0 the label rounds (and the quotient's star finish)
+      // truncate through the same store: one checkpoint per truncation —
+      // the pairs, the initial labels, each round and each star step
+      val before = rddDirs(dir).size
+      val run = CcModel.run(Corpus.connectedComponents(edges, "a", "b", 0L))
+      assert(run.comp == base)
+      assert(run.labelRounds > 0, run)
+      assert(rddDirs(dir).size - before ==
+        2 + run.labelRounds + run.starTruncations, run)
+    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
+  }
+
+  test("one checkpoint subdirectory for a CC run and a rank query") {
+    import spark.implicits._
+    val edges = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ck-once").toFile
+    spark.conf.set("spark.graft.cc.checkpointDir", dir.toString)
+    try {
+      val run = CcModel.run(Corpus.connectedComponents(edges, "a", "b", 0L))
+      assert(run.comp.values.forall(_ == 1L), run)
+      Graph.q132Pagerank.fn(spark, sfDir).collect()
+      val subdirs = Option(dir.listFiles).toSeq.flatten.filter(_.isDirectory)
+      assert(subdirs.size == 1, subdirs.map(_.getName))
+      assert(rddDirs(dir).size > 2, "the truncations wrote elsewhere")
     } finally spark.conf.unset("spark.graft.cc.checkpointDir")
   }
 
   test("connectedComponents: max-rounds guard fails loudly, not silently") {
     import spark.implicits._
     // diameter-5 chain needs ~4 propagation rounds. With a 1-round budget
-    // the label loop hands off a still-deep quotient; the DEFAULT path
+    // the label loop hands off a still-deep quotient; the DEFAULT bound
     // solves it exactly with the bounded driver union-find (no unbounded
-    // looping possible), while the forced-distributed path
-    // (driverFinishMaxEdges=0) must abort with a diagnosable error
-    // instead of looping or truncating.
+    // looping possible), while the forced-distributed path (bound 0)
+    // must abort with a diagnosable error instead of looping or
+    // truncating.
     val chain = Seq((2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
       .toDF("a", "b")
     spark.conf.set("spark.graft.cc.maxRounds", "1")
     try {
-      val comp = Corpus.connectedComponents(chain, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val comp = CcModel.collect(Corpus.connectedComponents(chain, "a", "b"))
       assert((2L to 7L).forall(comp(_) == 2L), comp.toSeq.sorted)
-      spark.conf.set("spark.graft.cc.driverFinishMaxEdges", "0")
       val e = intercept[IllegalStateException] {
-        Corpus.connectedComponents(chain, "a", "b").count()
+        Corpus.connectedComponents(chain, "a", "b", 0L).count()
       }
       assert(e.getMessage.contains("maxRounds"), e.getMessage)
-    } finally {
-      spark.conf.unset("spark.graft.cc.maxRounds")
-      spark.conf.unset("spark.graft.cc.driverFinishMaxEdges")
-    }
+    } finally spark.conf.unset("spark.graft.cc.maxRounds")
   }
 
-  test("cc: auto (default), star, and label reach the same fixpoint") {
+  test("cc: driver finish, quotient star finish and star contraction agree") {
     import spark.implicits._
-    // chain deeper than AutoLabelBudget (forces the auto handoff), a
-    // triangle with a bridge, a disjoint pair, and a hub star — the
-    // shapes where a contraction bug would diverge from plain propagation
-    val edges = Seq(
+    // chain deeper than AutoLabelBudget, a triangle with a bridge, a
+    // disjoint pair, and a hub star — the shapes where a contraction bug
+    // would diverge from plain propagation
+    val list = Seq(
       (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (7L, 8L),
       (8L, 9L), (9L, 10L),
       (20L, 21L), (21L, 22L), (20L, 22L), (22L, 30L),
       (40L, 41L),
-      (50L, 51L), (50L, 52L), (50L, 53L), (50L, 54L)).toDF("a", "b")
-    def run(): Map[Long, Long] = Corpus.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val auto = run()
-    assert(Seq(2L, 5L, 8L, 10L).forall(auto(_) == 2L))
-    try {
-      spark.conf.set("spark.graft.cc.algo", "star")
-      assert(run() == auto)
-      spark.conf.set("spark.graft.cc.algo", "label")
-      assert(run() == auto)
-    } finally spark.conf.unset("spark.graft.cc.algo")
+      (50L, 51L), (50L, 52L), (50L, 53L), (50L, 54L))
+    val edges = list.toDF("a", "b")
+    val want = CcModel.components(list)
+    assert(Seq(2L, 5L, 8L, 10L).forall(want(_) == 2L))
+    val level0 = CcModel.run(Corpus.connectedComponents(edges, "a", "b"))
+    assert(level0.tier == CcModel.Level0Driver && level0.comp == want)
+    val deep = CcModel.run(Corpus.connectedComponents(edges, "a", "b", 0L))
+    assert(deep.tier == CcModel.QuotientStar && deep.comp == want, deep)
+    assert(CcModel.collect(Corpus.starComponents(edges, "a", "b")) == want)
   }
 
-  test("cc: auto/star close a deep chain label-prop cannot afford") {
+  test("cc: at bound 0 a shallow graph converges inside the label budget") {
+    import spark.implicits._
+    // every vertex within two hops of its component min: two label rounds
+    // settle it and the third sees no change
+    val list = Seq(
+      (2L, 3L), (3L, 4L),
+      (20L, 21L), (21L, 22L), (20L, 22L), (22L, 30L),
+      (40L, 41L),
+      (50L, 51L), (50L, 52L), (50L, 53L), (50L, 54L))
+    val edges = list.toDF("a", "b")
+    val want = CcModel.components(list)
+    val run = CcModel.run(Corpus.connectedComponents(edges, "a", "b", 0L))
+    assert(run.tier == CcModel.LabelConverged && run.comp == want, run)
+    assert(CcModel.collect(Corpus.starComponents(edges, "a", "b")) == want)
+  }
+
+  test("cc: a deep chain's quotient under the bound finishes on the driver") {
+    import spark.implicits._
+    // 80 pairs: a 31-vertex chain and ten 5-leaf stars. Four label rounds
+    // collapse every star and shorten the chain to a 26-edge quotient, so
+    // a bound of 40 skips the level-0 finish (80 > 40) and takes the
+    // quotient's (26 <= 40)
+    val chain = (100L until 130L).map(i => (i, i + 1))
+    val stars = for (h <- 0 until 10; l <- 1 to 5)
+      yield (1000L + 10L * h, 1000L + 10L * h + l)
+    val list = chain ++ stars
+    val edges = list.toDF("a", "b")
+    val want = CcModel.components(list)
+    val run = CcModel.run(Corpus.connectedComponents(edges, "a", "b", 40L))
+    assert(run.tier == CcModel.QuotientDriver && run.comp == want, run)
+    assert(run.labelRounds == 4, run)
+    assert(CcModel.collect(Corpus.starComponents(edges, "a", "b")) == want)
+  }
+
+  test("cc: a quotient star finish closes a chain the label budget cannot") {
     import spark.implicits._
     // depth-120 chain: label propagation needs 119 rounds (one per hop);
     // star contraction roughly halves chain length per cycle, so a
-    // 12-cycle budget is ample for auto (4 label rounds + star on the
-    // quotient) and star, and impossible for label — the round-count
-    // asymmetry that matters on a 1000-executor cluster where every
-    // round is a scheduled stage
-    val chain = (1L until 120L).map(i => (i, i + 1)).toDF("a", "b")
+    // 12-cycle budget is ample for 4 label rounds + star on the quotient
+    // — the round-count asymmetry that matters on a 1000-executor
+    // cluster where every round is a scheduled stage
+    val list = (1L until 120L).map(i => (i, i + 1))
+    val chain = list.toDF("a", "b")
+    val want = CcModel.components(list)
+    assert(want.size == 120 && want.values.forall(_ == 1L))
     spark.conf.set("spark.graft.cc.maxRounds", "12")
     try {
-      val comp = Corpus.connectedComponents(chain, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(comp.length == 120 && comp.forall(_._2 == 1L))
-      spark.conf.set("spark.graft.cc.algo", "star")
-      val star = Corpus.connectedComponents(chain, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(star.length == 120 && star.forall(_._2 == 1L))
-      spark.conf.set("spark.graft.cc.algo", "label")
-      val e = intercept[IllegalStateException] {
-        Corpus.connectedComponents(chain, "a", "b").count()
-      }
-      assert(e.getMessage.contains("maxRounds"))
-    } finally {
-      spark.conf.unset("spark.graft.cc.maxRounds")
-      spark.conf.unset("spark.graft.cc.algo")
-    }
+      assert(CcModel.collect(Corpus.connectedComponents(chain, "a", "b")) ==
+        want)
+      val run = CcModel.run(Corpus.connectedComponents(chain, "a", "b", 0L))
+      assert(run.tier == CcModel.QuotientStar && run.comp == want, run)
+      assert(CcModel.collect(Corpus.starComponents(chain, "a", "b")) == want)
+    } finally spark.conf.unset("spark.graft.cc.maxRounds")
   }
 
   test("q59: partitions the corpus; survivors are component minima") {

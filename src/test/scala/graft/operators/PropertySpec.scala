@@ -71,21 +71,16 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
         case (a, b) if a != b => (math.min(a, b), math.max(a, b))
       }.distinct
       if (raw.nonEmpty) {
-        val got = CorpusTestAccess
-          .components(raw.toDF("a", "b"), "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // driver-side model: union-find, component = min member id
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        raw.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val want = parent.keys.map(v => v -> find(v)).toMap
-        assert(got == want, s"case $i")
+        val want = CcModel.components(raw)
+        val edges = raw.toDF("a", "b")
+        // the default bound finishes these graphs on the driver; bound 0
+        // sends them through the label rounds and the quotient finish
+        assert(CcModel.collect(Corpus.connectedComponents(edges, "a", "b"))
+          == want, s"case $i")
+        assert(CcModel.collect(
+          Corpus.connectedComponents(edges, "a", "b", 0L)) == want,
+          s"case $i, bound 0")
       }
     }
   }
@@ -142,11 +137,4 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       }
     }
   }
-}
-
-/** Test bridge into the package-private components loop. */
-private[operators] object CorpusTestAccess {
-  def components(edges: org.apache.spark.sql.DataFrame, a: String,
-      b: String): org.apache.spark.sql.DataFrame =
-    Corpus.connectedComponents(edges, a, b)
 }
